@@ -3,7 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** A16: graph materialization into an Iceberg-style (subj, pred, obj)
   * triple table, with SNAPSHOTS, time travel, schema evolution, keyed
@@ -58,14 +60,25 @@ object TripleSink {
     * column is added and break incremental-vs-audit equality). */
   private val CoreCols = Seq("subj", "pred", "obj")
 
+  private val SafeName = "[A-Za-z0-9._-]+"
+
   /** Run ids become directory names (`run=<id>`) and raw JSON values
     * in manifests and refs, so the charset is a table-format contract
     * — validated at every commit entry point rather than escaped
     * downstream. */
   private def validateRunId(runId: String): Unit =
-    require(runId.matches("[A-Za-z0-9._-]+"),
+    require(runId.matches(SafeName),
       s"invalid run_id '$runId': run ids name directories and appear in " +
         "manifest JSON - use [A-Za-z0-9._-] only")
+
+  /** Branch and tag names become path components (`_branches/<name>`,
+    * `_refs/tag-<name>.json`), so every entry point that takes one —
+    * the DSv2 `branch`/`tag` options included — checks it here before
+    * any `Path.resolve`: the run-id charset, and never only dots (`..`
+    * would resolve to the table root, `.` to the branch directory). */
+  private[sources] def validateRefName(kind: String, name: String): Unit =
+    require(name != null && name.matches(SafeName) && name.exists(_ != '.'),
+      s"invalid $kind name '$name': use [A-Za-z0-9._-] and not only dots")
 
   /** Visibility of one run in a snapshot: `parts = None` means every
     * partition the run wrote; `Some(ps)` restricts to those part_ids
@@ -614,7 +627,7 @@ object TripleSink {
     * Tag names are immutable while held: re-tagging an existing name
     * to a different snapshot is rejected ([[dropTag]] first). */
   def tag(path: String, name: String, runId: String): Unit = {
-    require(name.matches("[A-Za-z0-9._-]+"), s"invalid tag name '$name'")
+    validateRefName("tag", name)
     val m = manifests(path).filter(_.runId == runId).lastOption.getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot for run_id=$runId under $path"))
@@ -631,9 +644,11 @@ object TripleSink {
   }
 
   /** Snapshot refs 2 of 4 — read the table as of a tag. */
-  def readTag(spark: SparkSession, path: String, name: String): DataFrame =
+  def readTag(spark: SparkSession, path: String, name: String): DataFrame = {
+    validateRefName("tag", name)
     readAsOf(spark, path, resolveTag(path, name).getOrElse(
       throw new IllegalArgumentException(s"no tag '$name' under $path")))
+  }
 
   /** Snapshot refs 3 of 4 — the tag list: (name, run_id), name-sorted. */
   def tags(path: String): Seq[(String, String)] = {
@@ -655,8 +670,10 @@ object TripleSink {
 
   /** Snapshot refs 4 of 4 — drop a tag, releasing its snapshot to the
     * next [[expireSnapshots]]. Returns whether the tag existed. */
-  def dropTag(path: String, name: String): Boolean =
+  def dropTag(path: String, name: String): Boolean = {
+    validateRefName("tag", name)
     Files.deleteIfExists(root(path).resolve("_refs").resolve(s"tag-$name.json"))
+  }
 
   private def resolveTag(path: String, name: String): Option[String] =
     tags(path).collectFirst { case (n, r) if n == name => r }
@@ -677,7 +694,7 @@ object TripleSink {
     * [[expireSnapshots]] can never GC staged data out from under an
     * open branch. */
   def createBranch(path: String, name: String, fromRunId: String): Unit = {
-    require(name.matches("[A-Za-z0-9._-]+"), s"invalid branch name '$name'")
+    validateRefName("branch", name)
     val m = manifests(path).filter(_.runId == fromRunId).lastOption.getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot for run_id=$fromRunId under $path"))
@@ -702,6 +719,7 @@ object TripleSink {
   def writeToBranch(triples: DataFrame, path: String, name: String,
                     runId: String, nParts: Int = 32,
                     append: Boolean = false): Unit = {
+    validateRefName("branch", name)
     require(manifests(path, Some(name)).nonEmpty,
       s"no branch '$name' under $path (createBranch first)")
     doWrite(triples, path, runId, nParts, append, opLabel = None,
@@ -709,12 +727,14 @@ object TripleSink {
   }
 
   /** Branches 3 of 6 — the table as of a branch's head snapshot. */
-  def readBranch(spark: SparkSession, path: String, name: String): DataFrame =
+  def readBranch(spark: SparkSession, path: String, name: String): DataFrame = {
+    validateRefName("branch", name)
     manifests(path, Some(name)).lastOption match {
       case Some(m) => readVisible(spark, path, m)
       case None => throw new IllegalArgumentException(
         s"no branch '$name' under $path")
     }
+  }
 
   /** Branches 4 of 6 — the branch list: (name, head run_id), sorted. */
   def branches(path: String): Seq[(String, String)] =
@@ -732,6 +752,7 @@ object TripleSink {
     * no-op. The branch stays open (drop it separately); its runs stay
     * live until then. */
   def fastForward(path: String, name: String): Unit = {
+    validateRefName("branch", name)
     val bAll = manifests(path, Some(name))
     require(bAll.nonEmpty, s"no branch '$name' under $path")
     val base = bAll.head
@@ -757,6 +778,7 @@ object TripleSink {
     * nothing main references is affected. Returns whether the branch
     * existed. */
   def dropBranch(path: String, name: String): Boolean = {
+    validateRefName("branch", name)
     val dir = root(path).resolve("_branches").resolve(name)
     if (!Files.isDirectory(dir)) false
     else { deleteRecursively(dir); true }
@@ -1030,10 +1052,7 @@ object TripleSink {
     * outgoing edges reads at most |subjects| part directories per
     * visible run instead of the table (at the 10^12-row design point,
     * 1/nParts of the data per subject). Pruning happens at MANIFEST
-    * level: the lookup part_ids come from the same
-    * pmod(xxhash64(subj), nParts) the writers stamp — evaluated
-    * through Spark's own expression on a |subjects|-row local frame,
-    * so writer and reader can never disagree on the hash — and only
+    * level: the lookup part_ids come from [[subjectParts]] — and only
     * the surviving (run, part) directories are listed and scanned
     * (spec-asserted via inputFiles). MOR delete files still anti-join
     * (they are scoped by run, not partition); the residual subj
@@ -1048,11 +1067,7 @@ object TripleSink {
     // guess a spec and silently miss the subject's real partition
     if (m.nParts <= 0)
       return readVisible(spark, path, m).filter(col("subj").isin(subjects: _*))
-    import spark.implicits._
-    val parts = subjects.toDF("subj")
-      .select(pmod(xxhash64(col("subj")), lit(m.nParts)).cast("int"))
-      .collect().map(_.getInt(0)).toSet // bounded by |subjects|
-    readVisible(spark, path, m, Some(parts))
+    readVisible(spark, path, m, Some(subjectParts(subjects, m.nParts)))
       .filter(col("subj").isin(subjects: _*))
   }
 
@@ -1090,6 +1105,8 @@ object TripleSink {
                                        branchName: Option[String] = None): Manifest = {
     require(Seq(asOf, tagName, branchName).count(_.isDefined) <= 1,
       "asOf, tag and branch are mutually exclusive")
+    branchName.foreach(validateRefName("branch", _))
+    tagName.foreach(validateRefName("tag", _))
     branchName.foreach { b =>
       return manifests(path, Some(b)).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no branch '$b' under $path"))
@@ -1106,6 +1123,19 @@ object TripleSink {
         throw new IllegalArgumentException(s"no committed snapshot under $path"))
     }
   }
+
+  /** The hash partitions `subjects` live in under an `nParts` spec:
+    * the writers' pmod(xxhash64(subj), nParts), evaluated on the driver
+    * through Spark's own expression (the `xxhash64` function's seed),
+    * so writer and readers can never disagree on the hash. The one
+    * read-side partition hash: [[lookupSubjects]] and the DSv2
+    * planner's `subj` pruning both call it. */
+  private[sources] def subjectParts(subjects: Iterable[String],
+                                    nParts: Int): Set[Int] =
+    subjects.iterator.map { s =>
+      val h = new XxHash64(Seq(Literal.create(s, StringType))).eval().asInstanceOf[Long]
+      Math.floorMod(h, nParts.toLong).toInt
+    }.toSet
 
   /** Concrete (run, part_id) directories a snapshot's visibility covers
     * — the scan-planning unit for external planners. */
@@ -1150,7 +1180,8 @@ object TripleSink {
   /** The equality-delete match: every schema column null-safe-equal to
     * its `del_`-prefixed counterpart, scoped to the runs visible when
     * the delete committed — shared by the snapshot read and the
-    * changelog's delete-term fold. */
+    * changelog's delete-term fold; the DSv2 reader
+    * ([[graft.sources.v2.TriplesSource]]) matches the same rows. */
   private def deleteMatchCond(schema: Seq[(String, String)]): Column =
     schema.map { case (n, _) => col(n) <=> col(s"del_$n") }
       .reduce(_ && _) && array_contains(col("del_scope"), col("run_id"))
@@ -1462,9 +1493,11 @@ object TripleSink {
   }
 
   /** Rows of a snapshot's delete files under `del_`-prefixed names,
-    * conformed to the snapshot's schema, each carrying its scope. */
-  private def deleteRows(spark: SparkSession, path: String,
-                         m: Manifest): Option[DataFrame] =
+    * conformed to the snapshot's schema, each carrying its scope — the
+    * one place delete rows are null-filled and cast, for the library
+    * reads and the DSv2 reader alike. */
+  private[sources] def deleteRows(spark: SparkSession, path: String,
+                                  m: Manifest): Option[DataFrame] =
     if (m.deletes.isEmpty) None
     else Some(m.deletes.map { d =>
       nullFill(spark.read.parquet(s"$path/_deletes/run=${d.run}"), m.schema)

@@ -1,19 +1,17 @@
 package graft.sources.v2
 
-import java.util.{Collections, Set => JSet}
+import java.util.{Collections, OptionalLong, Set => JSet}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, XxHash64}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Row, SparkSession, graftbridge => bridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -32,34 +30,33 @@ import graft.sources.TripleSink
   *   CREATE TEMPORARY VIEW kg USING graft.sources.v2.TriplesSource
   *     OPTIONS (path '...', asOf 'r1')        -- plain SQL from here on
   *
-  * Semantics match [[TripleSink.read]]/readAsOf/readTag exactly
-  * (TriplesV2Spec asserts value equality on evolved, merged, and
-  * MOR-deleted tables); what the seam adds, spec-asserted:
+  * Semantics match [[TripleSink.read]]/readAsOf/readTag/readBranch
+  * exactly (TriplesV2Spec asserts value equality on evolved, merged and
+  * MOR-deleted tables). This file only PLANS; decoding is Spark's own
+  * parquet reader, the one the library reads use:
   *
   *  - SNAPSHOT-PINNED PLANNING: the manifest resolves once at table
-  *    load; commits racing the query do not shift what it reads —
-  *    the isolation a catalog gives Iceberg reads.
+  *    load; commits racing the query do not shift what it reads.
   *  - PARTITION PRUNING from pushed `subj` predicates: EqualTo/In
-  *    prune to the subjects' hash partitions at PLAN time (the same
-  *    pmod(xxhash64) the writers stamp, evaluated through Spark's own
-  *    expression), so `WHERE subj = X` on a 10^12-row table plans
-  *    1/nParts of the files. Conservatively reported as residual —
-  *    Spark re-applies every predicate post-scan, so correctness
-  *    never depends on the pruning math.
-  *  - COLUMN PRUNING to the parquet reader: the requested projection
-  *    becomes the parquet read schema (real I/O reduction, same as
-  *    the file source's ReadSchema) — except when MOR deletes are
-  *    outstanding, where the full data schema is read because the
-  *    equality-delete match needs every column (Iceberg pays the
-  *    same read-time tax until compaction).
-  *  - SCHEMA EVOLUTION: files predating an added column null-fill it,
-  *    per the snapshot's recorded schema.
-  *  - MOR equality deletes: the (small, compaction-bounded) delete
-  *    set loads once at planning and broadcasts inside the reader
-  *    factory; readers drop matching rows run-scope-aware.
-  *
-  * One split per visible data FILE (parallelism == file count, the
-  * same granularity as Spark's file source at these file sizes).
+  *    prune to the subjects' hash partitions at PLAN time
+  *    ([[TripleSink.subjectParts]], the writers' own hash). Reported as
+  *    residual — Spark re-applies every predicate post-scan, so
+  *    correctness never depends on the pruning math.
+  *  - STATISTICS from the manifest: rows are the pruned partitions'
+  *    recorded counts (already net of MOR deletes), size the planned
+  *    files' bytes — so a small view broadcasts in a join.
+  *  - ONE SPLIT PER VISIBLE DATA FILE: each file becomes a
+  *    `FilePartition` whose `PartitionedFile` carries (run_id, part_id)
+  *    as partition values, read by Spark's `ParquetPartitionReaderFactory`
+  *    (vectorized, footer read once, files predating an evolved column
+  *    null-filled; columnar batches when nothing needs row-level work).
+  *  - COLUMN PRUNING to the parquet read schema — except while MOR
+  *    deletes are outstanding: then every data column is read, rows a
+  *    delete matches are dropped, and the projection follows. Delete
+  *    rows come from [[TripleSink.deleteRows]] (collected once on the
+  *    driver) and match as its `deleteMatchCond` does: null-safe
+  *    equality on every schema column, scoped by the file's run, with
+  *    doubles normalized (NaN, -0.0) as `<=>` compares them.
   */
 final class TriplesSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -78,16 +75,19 @@ object TriplesTable {
       Option(options.get("branch"))))
   }
 
-  private[v2] def toDataType(ddl: String): DataType = DataType.fromDDL(ddl)
+  /** Per-file constants, read from the split rather than the file. */
+  private[v2] val PartCols = StructType(Seq(
+    StructField("run_id", StringType), StructField("part_id", IntegerType)))
+
+  private[v2] def dataSchema(m: TripleSink.Manifest): StructType = StructType(
+    m.schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
 }
 
 final class TriplesTable(path: String, m: TripleSink.Manifest)
     extends Table with SupportsRead {
   override def name(): String = s"graft_triples($path)@${m.runId}"
-  override def schema(): StructType = StructType(
-    m.schema.map { case (n, t) =>
-      StructField(n, TriplesTable.toDataType(t)) } ++ Seq(
-      StructField("run_id", StringType), StructField("part_id", IntegerType)))
+  override def schema(): StructType =
+    StructType(TriplesTable.dataSchema(m) ++ TriplesTable.PartCols)
   override def capabilities(): JSet[TableCapability] =
     Collections.singleton(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -121,192 +121,149 @@ final class TriplesScanBuilder(path: String, m: TripleSink.Manifest,
   override def pushedFilters(): Array[Filter] = Array.empty
 
   override def build(): Scan = {
-    // the writers' partition spec, evaluated through Spark's own
-    // expression so planner and writer cannot disagree on the hash
-    val partFilter = subjSet.map(_.map { s =>
-      val h = XxHash64(Seq(Literal.create(UTF8String.fromString(s), StringType)),
-        42L).eval(null).asInstanceOf[Long]
-      (((h % m.nParts) + m.nParts) % m.nParts).toInt
-    })
+    // a pre-v3 manifest records no partition spec: no pruning
+    val partFilter = subjSet.filter(_ => m.nParts > 0)
+      .map(TripleSink.subjectParts(_, m.nParts))
     new TriplesScan(path, m, required, partFilter)
   }
 }
 
-final case class TripleFileSplit(file: String, run: String, partId: Int)
-    extends InputPartition
-
-/** One delete row: values in data-schema order (plain JVM values,
-  * null-safe List equality) + the runs it applies to. */
-final case class DeleteEntry(values: List[Any], scope: Set[String])
-
 final class TriplesScan(path: String, m: TripleSink.Manifest,
                         required: StructType, partFilter: Option[Set[Int]])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
+    extends Scan with Batch with SupportsReportStatistics {
+  private val dataSchema = TriplesTable.dataSchema(m)
+  private val readData =
+    StructType(required.filter(f => dataSchema.fieldNames.contains(f.name)))
+  private val readParts =
+    StructType(TriplesTable.PartCols.filter(f => required.fieldNames.contains(f.name)))
+
+  override def readSchema(): StructType = StructType(readData ++ readParts)
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-triples $path snapshot=${m.runId} " +
       s"parts=${partFilter.map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("all")} " +
-      s"ReadSchema: ${required.simpleString}"
+      s"ReadSchema: ${readSchema().simpleString}"
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** The visible data files after partition pruning, listed once and
+    * shared by statistics and split planning. */
+  private lazy val files: Array[PartitionedFile] = {
     import scala.jdk.CollectionConverters._
-    val dirs = TripleSink.visiblePartDirs(path, m)
+    TripleSink.visiblePartDirs(path, m)
       .filter { case (_, p) => partFilter.forall(_.contains(p)) }
-    dirs.flatMap { case (run, pid) =>
-      val dir = java.nio.file.Paths.get(
-        path.stripPrefix("file:"), "data", s"run=$run", s"part_id=$pid")
-      if (!java.nio.file.Files.isDirectory(dir)) Nil
-      else scala.util.Using.resource(java.nio.file.Files.list(dir)) { s =>
-        s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(f => TripleFileSplit(f.toString, run, pid): InputPartition)
-          .toList.sortBy(_.asInstanceOf[TripleFileSplit].file)
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val dataCols = m.schema.map { case (n, t) =>
-      (n, TriplesTable.toDataType(t)) }.toArray
-    new TriplesReaderFactory(dataCols, required.fieldNames,
-      TriplesScan.loadDeletes(path, m, dataCols))
-  }
-}
-
-object TriplesScan {
-  /** Driver-side load of a snapshot's equality-delete rows — small by
-    * the MOR contract (bounded by outstanding deletes, reclaimed at
-    * each compact), shipped to readers inside the factory. */
-  private[v2] def loadDeletes(path: String, m: TripleSink.Manifest,
-                              dataCols: Array[(String, DataType)]): Array[DeleteEntry] =
-    m.deletes.flatMap { d =>
-      import scala.jdk.CollectionConverters._
-      val dir = java.nio.file.Paths.get(
-        path.stripPrefix("file:"), "_deletes", s"run=${d.run}")
-      if (!java.nio.file.Files.isDirectory(dir)) Nil
-      else {
-        val files = scala.util.Using.resource(java.nio.file.Files.list(dir)) {
-          s => s.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(_.toString).toList.sorted
-        }
-        files.flatMap { f =>
-          val rdr = new ParquetGroups(f, dataCols, dataCols.map(_._1).toSet)
-          try Iterator.continually(rdr.next()).takeWhile(_ != null)
-            .map(vals => DeleteEntry(vals.toList, d.scope.toSet)).toList
-          finally rdr.close()
-        }
-      }
-    }.toArray
-}
-
-final class TriplesReaderFactory(dataCols: Array[(String, DataType)],
-                                 outFields: Array[String],
-                                 deletes: Array[DeleteEntry])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val TripleFileSplit(file, run, partId) = partition.asInstanceOf[TripleFileSplit]
-    val requestedData = outFields.filter(f => dataCols.exists(_._1 == f)).toSet
-    // equality-delete matching needs EVERY data column — read them all
-    // while deletes are outstanding, project afterwards
-    val needed = if (deletes.nonEmpty) dataCols.map(_._1).toSet else requestedData
-    val groups = new ParquetGroups(file, dataCols, needed)
-    // index output fields once: Left(data col idx) | Right(constant)
-    val plan: Array[Either[Int, Any]] = outFields.map {
-      case "run_id" => Right(UTF8String.fromString(run))
-      case "part_id" => Right(Int.box(partId))
-      case f => Left(dataCols.indexWhere(_._1 == f))
-    }
-    val delIndex: Map[List[Any], Set[String]] =
-      deletes.groupBy(_.values).map { case (k, es) =>
-        k -> es.flatMap(_.scope).toSet }
-    new PartitionReader[InternalRow] {
-      private var cur: Array[Any] = _
-      override def next(): Boolean = {
-        cur = groups.next()
-        while (cur != null && deletes.nonEmpty &&
-               delIndex.get(cur.toList).exists(_.contains(run))) {
-          cur = groups.next()
-        }
-        cur != null
-      }
-      override def get(): InternalRow = {
-        val vals = new Array[Any](plan.length)
-        var i = 0
-        while (i < plan.length) {
-          vals(i) = plan(i) match {
-            case Right(c) => c
-            case Left(j) => cur(j) match {
-              case s: String => UTF8String.fromString(s)
-              case v => v
+      .flatMap { case (run, pid) =>
+        val dir = java.nio.file.Paths.get(
+          path.stripPrefix("file:"), "data", s"run=$run", s"part_id=$pid")
+        if (!java.nio.file.Files.isDirectory(dir)) Nil
+        else scala.util.Using.resource(java.nio.file.Files.list(dir)) {
+          _.iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet")).toList.sorted
+            .map { f =>
+              val len = java.nio.file.Files.size(f)
+              PartitionedFile(InternalRow(UTF8String.fromString(run), pid),
+                SparkPath.fromPath(new HPath(f.toUri)), 0L, len, Array.empty[String],
+                java.nio.file.Files.getLastModifiedTime(f).toMillis, len)
             }
-          }
-          i += 1
         }
-        new GenericInternalRow(vals)
-      }
-      override def close(): Unit = groups.close()
+      }.toArray
+  }
+
+  /** Spark's reader fills partition columns by position from the
+    * schema its factory is given: `readParts` on the plain path, all of
+    * `PartCols` under MOR (which reads run_id at ordinal 0). */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val parts = if (deletes.isEmpty) readParts else TriplesTable.PartCols
+    val idx = parts.fieldNames.map(TriplesTable.PartCols.fieldIndex)
+    files.zipWithIndex.map { case (f, i) =>
+      val values = InternalRow.fromSeq(idx.toSeq.map(j =>
+        f.partitionValues.get(j, TriplesTable.PartCols(j).dataType)))
+      FilePartition(i, Array(f.copy(partitionValues = values))): InputPartition
+    }
+  }
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(files.map(_.length).sum)
+    override def numRows(): OptionalLong = OptionalLong.of(m.partitions
+      .filter(p => partFilter.forall(_.contains(p.partId))).map(_.rows).sum)
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  /** Outstanding delete rows, collected once per scan; None when there
+    * are none. */
+  private lazy val deletes: Option[(StructType, Array[Row])] =
+    TripleSink.deleteRows(SparkSession.active, path, m)
+      .map(d => (d.schema, d.collect())).filter(_._2.nonEmpty)
+
+  /** Built once per scan: planning asks more than one `BatchScanExec`
+    * over this scan for its factory, and each would otherwise broadcast
+    * the Hadoop conf again. */
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val spark = SparkSession.active
+    deletes match {
+      case None =>
+        bridge.parquetReaderFactory(spark, dataSchema, readData, readParts)
+      case Some((delSchema, rows)) =>
+        val key = MorReaderFactory.keyProjection(dataSchema)
+        val toInternal = CatalystTypeConverters.createToCatalystConverter(delSchema)
+        val n = dataSchema.length
+        val byRun: Map[String, Set[UnsafeRow]] = rows.toSeq.flatMap { r =>
+          val k = key(toInternal(r).asInstanceOf[InternalRow]).copy()
+          r.getSeq[String](n).map(_ -> k)
+        }.groupMap(_._1)(_._2).map { case (run, ks) => run -> ks.toSet }
+        new MorReaderFactory(
+          bridge.parquetReaderFactory(spark, dataSchema, dataSchema,
+            TriplesTable.PartCols),
+          dataSchema, byRun, readSchema().fieldNames)
     }
   }
 }
 
-/** Thin parquet-example reader: yields one Array[Any] per row in
-  * data-schema order — plain JVM values (String/Long/Int/Double/
-  * Boolean/null), with columns outside `needed` or missing from the
-  * file (schema evolution) left null. The parquet read schema is the
-  * intersection of `needed` with the file's own schema, so projection
-  * reaches the column reader (I/O pruning, not post-hoc dropping). */
-private[v2] final class ParquetGroups(file: String,
-                                      dataCols: Array[(String, DataType)],
-                                      needed: Set[String]) {
-  private val conf = new Configuration()
-  private val hPath = new HPath(file)
-  private val fileSchema: MessageType =
-    scala.util.Using.resource(
-      ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf)))(
-      _.getFooter.getFileMetaData.getSchema)
-  private val present: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    fileSchema.getFields.asScala.map(_.getName).toSet
-  }
-  private val readCols: Array[(String, DataType)] =
-    dataCols.filter { case (n, _) => needed(n) && present(n) }
-  private val reader: ParquetReader[Group] = {
-    val fields: Array[org.apache.parquet.schema.Type] =
-      readCols.map { case (n, _) => fileSchema.getType(Seq(n): _*) }
-    val requested = new MessageType("spark_schema", fields: _*)
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      requested.toString)
-    ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf).build()
-  }
+/** Merge-on-read: rows of every data column plus (run_id, part_id)
+  * from `files`, minus those a delete scoped to the split's run
+  * matches, projected to the columns `out`. */
+final class MorReaderFactory(files: PartitionReaderFactory, dataSchema: StructType,
+                             deletes: Map[String, Set[UnsafeRow]],
+                             out: Array[String])
+    extends PartitionReaderFactory {
+  private val all = StructType(dataSchema ++ TriplesTable.PartCols)
 
-  /** Next row in data-schema order, or null at end. */
-  def next(): Array[Any] = {
-    val g = reader.read()
-    if (g == null) return null
-    val out = new Array[Any](dataCols.length)
-    var j = 0
-    dataCols.indices.foreach { i =>
-      val (n, t) = dataCols(i)
-      if (j < readCols.length && readCols(j)._1 == n) {
-        out(i) =
-          if (g.getFieldRepetitionCount(n) == 0) null
-          else t match {
-            case StringType => g.getString(n, 0)
-            case LongType => Long.box(g.getLong(n, 0))
-            case IntegerType => Int.box(g.getInteger(n, 0))
-            case DoubleType => Double.box(g.getDouble(n, 0))
-            case BooleanType => Boolean.box(g.getBoolean(n, 0))
-            case other => throw new IllegalArgumentException(
-              s"column $n: unsupported type $other (the triple table " +
-                "writes string/bigint/int/double/boolean)")
-          }
-        j += 1
-      } // else: pruned or evolved-in later than this file -> null
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    // one file per split (TriplesScan.planInputPartitions)
+    val run = partition.asInstanceOf[FilePartition].files.head
+      .partitionValues.getUTF8String(0).toString
+    val dels = deletes.getOrElse(run, Set.empty[UnsafeRow])
+    val key = MorReaderFactory.keyProjection(dataSchema)
+    val project = UnsafeProjection.create(out.toSeq.map { c =>
+      val i = all.fieldIndex(c)
+      BoundReference(i, all(i).dataType, nullable = true)
+    })
+    val rows = files.createReader(partition)
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.next()) {
+          cur = rows.get()
+          if (dels.isEmpty || !dels.contains(key(cur))) return true
+        }
+        false
+      }
+      override def get(): InternalRow = project(cur)
+      override def close(): Unit = rows.close()
     }
-    out
   }
+}
 
-  def close(): Unit = reader.close()
+object MorReaderFactory {
+  /** The data columns of a row as an `UnsafeRow` whose bytes are equal
+    * when `<=>` holds on every column (for the atomic types the table
+    * writes): nulls are equal, and doubles and floats are normalized
+    * (NaN, -0.0) first, as Spark normalizes join keys. */
+  private[v2] def keyProjection(dataSchema: StructType): UnsafeProjection =
+    UnsafeProjection.create(dataSchema.zipWithIndex.map { case (f, i) =>
+      val c = BoundReference(i, f.dataType, nullable = true)
+      f.dataType match {
+        case DoubleType | FloatType => NormalizeNaNAndZero(c)
+        case _ => c
+      }
+    })
 }

@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.connector.read.PartitionReaderFactory
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Minimal Column ⇄ Expression bridge.
   *
@@ -10,8 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * columnNodeSupport.scala). Libraries that ship custom Catalyst
   * expressions with a Column-level API (Delta, Sedona, Frameless all
   * do the same) bridge via a one-file object in the
-  * `org.apache.spark.sql` namespace. This is the entire shim: two
-  * delegating defs, no behavior.
+  * `org.apache.spark.sql` namespace. This is the entire shim:
+  * delegating defs, plus Spark's own parquet reader for a scan planned
+  * outside a file index (it needs the session state).
   */
 package object graftbridge {
 
@@ -41,4 +47,21 @@ package object graftbridge {
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Spark's own parquet reader (vectorized, footer read once per
+    * file, missing columns null-filled) for an externally planned
+    * file scan: rows are `readDataSchema ++ partitionSchema`, the
+    * partition values coming from each `PartitionedFile`. Built by
+    * Spark's `ParquetScan`, so the reader's Hadoop conf is set up by
+    * Spark alone; its file index is never listed, only the factory is
+    * taken. The conf is broadcast once per call. */
+  def parquetReaderFactory(spark: SparkSession, dataSchema: StructType,
+                           readDataSchema: StructType,
+                           partitionSchema: StructType): PartitionReaderFactory = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    ParquetScan(session, session.sessionState.newHadoopConf(),
+      new InMemoryFileIndex(session, Nil, Map.empty, None),
+      dataSchema, readDataSchema, partitionSchema, Array.empty,
+      CaseInsensitiveStringMap.empty()).createReaderFactory()
+  }
 }

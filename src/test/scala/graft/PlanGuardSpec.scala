@@ -171,4 +171,40 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(scannedFiles.forall(_.contains("run=r2")),
       s"tail-span changelog read touched non-appended files:\n${scannedFiles.mkString("\n")}")
   }
+
+  test("a small DSv2 snapshot view is the broadcast build side of a join (manifest statistics)") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import spark.implicits._
+    import graft.sources.TripleSink
+    val path = java.nio.file.Files.createTempDirectory("graft-v2-stats").toString
+    TripleSink.write(Seq(("e1", "p", "a"), ("e2", "p", "b"), ("e3", "p", "c"))
+      .toDF("subj", "pred", "obj"), path, "r1", nParts = 4)
+    def view = spark.read.format("graft.sources.v2.TriplesSource")
+      .option("path", path).load()
+    assert(view.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(3)))
+
+    // without statistics a DSv2 relation sizes as Long.MaxValue and the
+    // 10k-row side would be broadcast instead
+    val big = spark.range(10000)
+      .select(concat(lit("e"), col("id").cast("string")).as("k"), col("id"))
+    val joined = big.join(view, col("k") === col("subj"))
+    assert(joined.collect().length == 3)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = joined.queryExecution.executedPlan
+    val bhj = aqe.collect(plan) { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size == 1, s"no broadcast hash join:\n$plan")
+    val build = if (bhj.head.buildSide == BuildLeft) bhj.head.left else bhj.head.right
+    assert(aqe.collect(build) { case s: BatchScanExec => s }.nonEmpty,
+      s"the view is not the build side:\n$plan")
+
+    // row counts are net of outstanding merge-on-read deletes
+    TripleSink.applyDeltaMOR(spark, path,
+      Seq.empty[(String, String, String)].toDF("subj", "pred", "obj"),
+      Seq(("e2", "p", "b")).toDF("subj", "pred", "obj"), "mor1")
+    assert(view.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(2)))
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TripleSink
@@ -23,6 +25,26 @@ class TriplesV2Spec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Set[(String, String, String)] =
     df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
+
+  /** The v2 read equals the library read row for row (as a multiset,
+    * printed exactly, so -0.0 and 0.0 stay apart) on `cols`. */
+  private def assertParity(path: String, cols: String*): Seq[String] = {
+    def show(df: DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
+    val lib = show(TripleSink.read(spark, path))
+    val got = show(v2(path))
+    assert(got == lib, s"v2 read diverged from the library read:\n$got\nvs\n$lib")
+    got
+  }
+
+  private def scans(df: DataFrame): Seq[BatchScanExec] = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: BatchScanExec => s }
+  }
+
+  private def triples(rs: (String, String, String)*): DataFrame =
+    rs.toDF("subj", "pred", "obj")
 
   test("v2 read matches the library read across append/merge/evolution/MOR; time travel via asOf and tag") {
     val path = Files.createTempDirectory("graft-v2-triples").toString
@@ -129,5 +151,99 @@ class TriplesV2Spec extends AnyFunSuite {
       assert(spark.sql("SELECT obj FROM kg_v2_spec WHERE subj = 'b' ORDER BY obj")
         .as[String].collect().toSeq == Seq("2", "3"))
     } finally spark.catalog.dropTempView("kg_v2_spec")
+  }
+
+  test("v2 MOR parity: a projection while deletes are outstanding; columnar scan only without deletes") {
+    val path = Files.createTempDirectory("graft-v2-mor-proj").toString
+    TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2"), ("c", "q", "3"),
+      ("b", "q", "4")), path, "r1", nParts = 4)
+    val clean = v2(path).select("subj", "obj")
+    val cleanScans = scans(clean)
+    assert(cleanScans.nonEmpty && cleanScans.forall(_.supportsColumnar),
+      s"no-delete table did not scan columnar:\n${clean.queryExecution.executedPlan}")
+
+    TripleSink.applyDeltaMOR(spark, path, triples(("d", "p", "5")),
+      triples(("b", "p", "2")), "mor1")
+    val projected = v2(path).select("subj")
+    assert(projected.queryExecution.executedPlan.toString
+      .contains("ReadSchema: struct<subj:string>"))
+    assert(assertParity(path, "subj") == Seq("[a]", "[b]", "[c]", "[d]"))
+    assertParity(path, "subj", "pred", "obj", "run_id", "part_id")
+    assert(!scans(projected).exists(_.supportsColumnar))
+  }
+
+  test("v2 parity without deletes: part_id read without run_id") {
+    val path = Files.createTempDirectory("graft-v2-partid").toString
+    TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2"), ("c", "q", "3"),
+      ("d", "q", "4")), path, "r1", nParts = 4)
+    val lib = TripleSink.read(spark, path)
+    assertParity(path, "subj", "part_id")
+    assertParity(path, "part_id")
+    assertParity(path, "obj", "part_id", "run_id")
+    val pid = lib.where($"subj" === "c").select("part_id").as[Int].head()
+    assert(v2(path).where($"part_id" === pid).select("subj").as[String]
+      .collect().toSet == lib.where($"part_id" === pid).select("subj").as[String]
+      .collect().toSet)
+    def counts(df: DataFrame) = df.groupBy("part_id").count().as[(Int, Long)].collect().toMap
+    assert(counts(v2(path)) == counts(lib))
+  }
+
+  test("v2 MOR parity: a delete scoped to an older run spares the same row re-written later") {
+    val path = Files.createTempDirectory("graft-v2-mor-scope").toString
+    TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2")), path, "r1", nParts = 4)
+    TripleSink.applyDeltaMOR(spark, path, triples(), triples(("a", "p", "1")), "mor1")
+    TripleSink.write(triples(("a", "p", "1")), path, "r2", nParts = 4, append = true)
+    assert(assertParity(path, "subj", "pred", "obj", "run_id") ==
+      Seq("[a,p,1,r2]", "[b,p,2,r1]"))
+  }
+
+  test("v2 MOR parity: deletes match null columns and -0.0 against 0.0 as <=> does") {
+    val path = Files.createTempDirectory("graft-v2-mor-nulls").toString
+    val cols = Seq("subj", "pred", "obj", "score", "note")
+    TripleSink.write(Seq(("a", "p", "1", 1.0, null: String), ("b", "p", "2", -0.0, "x"),
+      ("c", "p", "3", 2.0, "y")).toDF(cols: _*), path, "r1", nParts = 4)
+    TripleSink.applyDeltaMOR(spark, path,
+      Seq.empty[(String, String, String, Double, String)].toDF(cols: _*),
+      Seq(("a", "p", "1", 1.0, null: String), ("b", "p", "2", 0.0, "x"))
+        .toDF(cols: _*), "mor1")
+    assert(assertParity(path, cols: _*) == Seq("[c,p,3,2.0,y]"))
+  }
+
+  test("v2 MOR parity: two delete files outstanding at once") {
+    val path = Files.createTempDirectory("graft-v2-mor-two").toString
+    TripleSink.write(triples((0 until 12).map(i => (s"s$i", "p", s"$i")): _*),
+      path, "r1", nParts = 4)
+    TripleSink.applyDeltaMOR(spark, path, triples(("s12", "p", "12")),
+      triples(("s1", "p", "1"), ("s5", "p", "5")), "mor1")
+    TripleSink.applyDeltaMOR(spark, path, triples(),
+      triples(("s7", "p", "7"), ("s12", "p", "12")), "mor2")
+    assert(TripleSink.deleteFilesDf(spark, path).select("delete_run").distinct().count() == 2)
+    val got = assertParity(path, "subj", "pred", "obj", "run_id", "part_id")
+    assert(got.size == 9 && !got.exists(r => Seq("s1,", "s5,", "s7,", "s12,")
+      .exists(s => r.startsWith(s"[$s"))))
+  }
+
+  test("hostile branch and tag names are rejected before any path resolves") {
+    val path = Files.createTempDirectory("graft-v2-names").toString
+    TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2")), path, "r1", nParts = 4)
+    val before = rows(TripleSink.read(spark, path))
+    Seq("..", ".", "...", "a/b", "../x", "", "b r").foreach { bad =>
+      intercept[IllegalArgumentException](TripleSink.dropBranch(path, bad))
+      intercept[IllegalArgumentException](TripleSink.createBranch(path, bad, "r1"))
+      intercept[IllegalArgumentException](TripleSink.readBranch(spark, path, bad))
+      intercept[IllegalArgumentException](TripleSink.fastForward(path, bad))
+      intercept[IllegalArgumentException](
+        TripleSink.writeToBranch(triples(("c", "p", "3")), path, bad, "w1"))
+      intercept[IllegalArgumentException](TripleSink.tag(path, bad, "r1"))
+      intercept[IllegalArgumentException](TripleSink.readTag(spark, path, bad))
+      intercept[IllegalArgumentException](TripleSink.dropTag(path, bad))
+      intercept[IllegalArgumentException](v2(path, "branch" -> bad))
+      intercept[IllegalArgumentException](v2(path, "tag" -> bad))
+    }
+    assert(rows(TripleSink.read(spark, path)) == before && rows(v2(path)) == before)
+    // names with dots that are not only dots stay valid
+    TripleSink.createBranch(path, "v1.2", "r1")
+    assert(rows(v2(path, "branch" -> "v1.2")) == before)
+    assert(TripleSink.dropBranch(path, "v1.2"))
   }
 }
