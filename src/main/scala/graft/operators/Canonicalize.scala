@@ -93,18 +93,11 @@ object Canonicalize {
             if (nodes(x).norm_key < nodes(y).norm_key) (x, y)
             else if (nodes(y).norm_key < nodes(x).norm_key) (y, x) else (x, x)
           }
-          if (a != b && seen.add(a.toLong * nodes.length + b)) {
-            val ka = nodes(a).norm_key
-            val kb = nodes(b).norm_key
-            val jac = Hashing.jaccard(shingles(a), shingles(b))
-            val (short, long) = if (ka.length <= kb.length) (ka, kb) else (kb, ka)
-            val abbrev = short.nonEmpty && long.nonEmpty &&
-              short.charAt(0) == long.charAt(0) && Text.isSubsequence(short, long)
-            if (jac >= Linking.JaccardAccept ||
-                (abbrev && jac >= Linking.JaccardAbbrev)) {
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-            }
+          if (a != b && seen.add(a.toLong * nodes.length + b) &&
+              Linking.accepts(nodes(a).norm_key, nodes(b).norm_key,
+                Hashing.jaccard(shingles(a), shingles(b)))) {
+            val ra = find(a); val rb = find(b)
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
           }
           j += 1
         }
@@ -154,19 +147,22 @@ object Canonicalize {
   }
 
   /** Rewrite raw triples to canonical (subj, pred, obj), deduplicated.
-    * Unlinked mentions keep their own surface (left_outer + coalesce).
     * `raw` needs only the 7 arg columns (slim projection OK). */
-  def rewrite(raw: Dataset[_], canon: DataFrame): DataFrame = {
+  def rewrite(raw: Dataset[_], canon: DataFrame): DataFrame =
+    canonArgs(raw.toDF(), canon).distinct()
+
+  /** Each raw row's canonical (subj, pred, obj), one per row: unlinked
+    * mentions keep their own surface (left_outer + coalesce). Shared by
+    * [[rewrite]] and KgDelta's counted rewrite. */
+  private[operators] def canonArgs(raw: DataFrame, canon: DataFrame): DataFrame = {
     val subjMap = canon.select(col("etype").as("subj_type"),
       col("norm_key").as("subj_key"), col("canon").as("subj_canon"))
     val objMap = canon.select(col("etype").as("obj_type"),
       col("norm_key").as("obj_key"), col("canon").as("obj_canon"))
-    raw.toDF()
-      .join(subjMap, Seq("subj_type", "subj_key"), "left_outer")
+    raw.join(subjMap, Seq("subj_type", "subj_key"), "left_outer")
       .join(objMap, Seq("obj_type", "obj_key"), "left_outer")
       .select(coalesce(col("subj_canon"), col("subj")).as("subj"),
         col("pred"),
         coalesce(col("obj_canon"), col("obj")).as("obj"))
-      .distinct()
   }
 }

@@ -311,18 +311,9 @@ object KgDelta {
 
   /** Canonical rewrite with multiplicities: (subj, pred, obj, d) where
     * d = number of raw rows deriving that canonical triple. */
-  private def rewriteCounts(raw: DataFrame, canon: DataFrame): DataFrame = {
-    val subjMap = canon.select(col("etype").as("subj_type"),
-      col("norm_key").as("subj_key"), col("canon").as("subj_canon"))
-    val objMap = canon.select(col("etype").as("obj_type"),
-      col("norm_key").as("obj_key"), col("canon").as("obj_canon"))
-    raw.join(subjMap, Seq("subj_type", "subj_key"), "left_outer")
-      .join(objMap, Seq("obj_type", "obj_key"), "left_outer")
-      .select(coalesce(col("subj_canon"), col("subj")).as("subj"),
-        col("pred"),
-        coalesce(col("obj_canon"), col("obj")).as("obj"))
+  private def rewriteCounts(raw: DataFrame, canon: DataFrame): DataFrame =
+    Canonicalize.canonArgs(raw, canon)
       .groupBy("subj", "pred", "obj").agg(count(lit(1)).as("d"))
-  }
 
   /** Fold the append-only count log down to one row per mention — run
     * every k batches (like TripleSink.compact) to bound log length.

@@ -167,16 +167,24 @@ object Linking {
     }
   }
 
-  /** The accept/reject decision for one candidate key pair — exact
-    * shingle Jaccard plus the abbreviation-subsequence floor, narrow
-    * (shingles derive purely from the keys). Shared by the one-shot
-    * [[edges]] path and [[KgDelta]]'s index-probe path so both apply
-    * the identical rule. Returns the score iff the pair is accepted. */
+  /** Score one candidate key pair — exact shingle Jaccard, narrow
+    * (shingles derive purely from the keys) — and return it iff
+    * [[accepts]] the pair. Shared by the one-shot [[edges]] path and
+    * [[KgDelta]]'s index-probe path. */
   private[operators] def scorePair(ka: String, kb: String): Option[Double] = {
     val j = Hashing.jaccard(Text.shingles(ka), Text.shingles(kb))
+    if (accepts(ka, kb, j)) Some(j) else None
+  }
+
+  /** The one linking accept rule, given the pair's shingle Jaccard `j`:
+    * accept at [[JaccardAccept]], or at the lower [[JaccardAbbrev]]
+    * floor when the shorter key abbreviates the longer (same first
+    * character, a subsequence of it). [[scorePair]] and the
+    * driver-local `Canonicalize.canonMapLocal` (which keeps its
+    * precomputed shingles) both decide with it. */
+  private[operators] def accepts(ka: String, kb: String, j: Double): Boolean = {
     val (short, long) = if (ka.length <= kb.length) (ka, kb) else (kb, ka)
-    val abbrev = short.nonEmpty && long.nonEmpty &&
-      short.charAt(0) == long.charAt(0) && Text.isSubsequence(short, long)
-    if (j >= JaccardAccept || (abbrev && j >= JaccardAbbrev)) Some(j) else None
+    j >= JaccardAccept || (j >= JaccardAbbrev && short.nonEmpty &&
+      short.charAt(0) == long.charAt(0) && Text.isSubsequence(short, long))
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** A16: graph materialization into an Iceberg-style (subj, pred, obj)
   * triple table, with SNAPSHOTS, time travel, schema evolution, keyed
@@ -103,7 +103,14 @@ object TripleSink {
                             deletes: Seq[DeleteVis] = Nil) {
     def visibleRunNames: Seq[String] = visible.map(_.run)
     def totalRows: Long = partitions.map(_.rows).sum
+    /** The recorded schema as Spark types: what every reader of this
+      * snapshot decodes its files with, the DSv2 source included. */
+    def dataSchema: StructType = structOf(schema)
   }
+
+  /** Recorded (name, catalogString) pairs as a Spark schema. */
+  private def structOf(schema: Seq[(String, String)]): StructType =
+    StructType(schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
 
   /** Commits triples as a new snapshot: data files land under
     * `path/data/run=<runId>` partitioned by part_id =
@@ -175,30 +182,28 @@ object TripleSink {
     val dataCols = triples.columns.toSeq.filterNot(c => c == "part_id" || c == "run_id")
     require(CoreCols.forall(dataCols.contains),
       s"triples frame must carry ${CoreCols.mkString(", ")}; got ${dataCols.mkString(", ")}")
-    writeRunData(triples, path, runId, nParts)
-    val newStats = runStats(spark, path, runId)
+    val frameSchema = schemaOf(triples, dataCols)
 
-    // base = the snapshot this commit extends. For a retry of the
-    // latest run the base is the newest manifest NOT containing the
-    // run (its contribution must not be double-counted); otherwise the
-    // prior manifest.
+    // extended = the snapshot an append extends. For a retry of the
+    // latest run it is the newest manifest NOT containing the run (its
+    // contribution must not be double-counted); otherwise the prior
+    // manifest.
     val isRetry = retryOf.isDefined
-    val base = if (isRetry) all.reverse.find(!_.visibleRunNames.contains(runId))
-               else prior
     val effAppend = if (isRetry) retryOf.get.operation == "append" else append
+    val extended = (if (isRetry) all.reverse.find(!_.visibleRunNames.contains(runId))
+                    else prior).filter(_ => effAppend)
+    extended.foreach(b => requireRecordedTypes(b.schema, frameSchema, "triples"))
+    writeRunData(triples, path, runId, nParts)
+    val newStats = runStats(spark, path, runId, frameSchema)
+
     // an append extends the base snapshot, so its active delete files
     // carry over; an overwrite/replace starts from its own data alone
-    val (visible, partStats, schema, deletes) =
-      if (!effAppend || base.isEmpty) {
-        (Seq(RunVis(runId, None)), newStats, schemaOf(triples, dataCols),
-          Seq.empty[DeleteVis])
-      } else {
-        val b = base.get
-        (b.visible :+ RunVis(runId, None),
-          mergeStats(b.partitions, newStats),
-          unionSchema(b.schema, schemaOf(triples, dataCols)),
-          b.deletes)
-      }
+    val (visible, partStats, schema, deletes) = extended match {
+      case None => (Seq(RunVis(runId, None)), newStats, frameSchema, Seq.empty[DeleteVis])
+      case Some(b) =>
+        (b.visible :+ RunVis(runId, None), mergeStats(b.partitions, newStats),
+          unionSchema(b.schema, frameSchema), b.deletes)
+    }
     publish(path, Manifest(
       seq = prior.map(_.seq + 1).getOrElse(0),
       runId = runId,
@@ -222,7 +227,8 @@ object TripleSink {
     * that re-canonicalizes a few entities O(affected partitions), not
     * O(table). Stats: untouched partitions carry over from the prior
     * manifest; affected ones are recomputed over the new run only.
-    * Updates must match the table's current data schema. */
+    * Updates must match the table's current data schema, types
+    * included. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             runId: String): Unit = {
     validateRunId(runId)
@@ -235,14 +241,7 @@ object TripleSink {
     require(prior.nParts > 0,
       "table's latest manifest is pre-v3 with no recorded partition spec - " +
         "run compact() to upgrade before row-level commits")
-    val nParts = prior.nParts
-    val schemaCols = prior.schema.map(_._1)
-    require(updates.columns.toSet == schemaCols.toSet,
-      s"updates schema ${updates.columns.sorted.mkString(",")} must equal the " +
-        s"table schema ${schemaCols.sorted.mkString(",")} (evolve schemas via append)")
-
-    val upd = updates.select(schemaCols.map(col): _*)
-      .withColumn("part_id", pmod(xxhash64(col("subj")), lit(nParts)).cast("int"))
+    val upd = stampPart(conformDelta(updates, prior.schema, "updates"), prior.nParts)
       .localCheckpoint(true) // consumed twice (affected probe + union) and
                              // must not re-read table dirs this commit rewrites
     cowRewrite(spark, path, prior, runId, add = upd,
@@ -291,9 +290,9 @@ object TripleSink {
     val nParts = prior.nParts
     val schemaCols = prior.schema.map(_._1)
     // must not lazily re-read dirs this commit swaps out
-    val add = stampPart(conformDelta(additions, schemaCols, "additions"), nParts)
+    val add = stampPart(conformDelta(additions, prior.schema, "additions"), nParts)
       .localCheckpoint(true)
-    val del = stampPart(conformDelta(retractions, schemaCols, "retractions"), nParts)
+    val del = stampPart(conformDelta(retractions, prior.schema, "retractions"), nParts)
       .localCheckpoint(true)
     cowRewrite(spark, path, prior, runId, add = add,
       removeKeys = del.select(
@@ -341,23 +340,22 @@ object TripleSink {
       "table's latest manifest is pre-v3 with no recorded partition spec - " +
         "run compact() to upgrade before row-level commits")
     val nParts = prior.nParts
-    val schemaCols = prior.schema.map(_._1)
     // additions are consumed once (writeRunData re-derives part_id and
     // MOR never rewrites a visible directory), so no stamp/checkpoint;
     // retractions dedup to SET semantics — stats update by subtraction,
     // so a row listed twice would permanently skew rows/hashes while
     // the read-side anti-join removes each visible copy exactly once —
     // and checkpoint because they are consumed twice (stats + file)
-    val add = conformDelta(additions, schemaCols, "additions")
+    val add = conformDelta(additions, prior.schema, "additions")
     val del = stampPart(
-      conformDelta(retractions, schemaCols, "retractions").dropDuplicates(),
+      conformDelta(retractions, prior.schema, "retractions").dropDuplicates(),
       nParts).localCheckpoint(true)
     val delStats = computeStats(del)
     if (delStats.nonEmpty)
       del.drop("part_id").write.mode(SaveMode.Overwrite)
         .parquet(s"$path/_deletes/run=$runId")
     writeRunData(add, path, runId, nParts)
-    val addStats = runStats(spark, path, runId)
+    val addStats = runStats(spark, path, runId, prior.schema)
     if (addStats.isEmpty && delStats.isEmpty) {
       publish(path, prior.copy(seq = prior.seq + 1, runId = runId,
         operation = "delta-mor", file = null))
@@ -405,7 +403,8 @@ object TripleSink {
       // partitions whose visibility this commit swaps out
       .localCheckpoint(true)
     writeRunData(newData, path, runId, prior.nParts)
-    publishSwap(path, prior, runId, affected, runStats(spark, path, runId), op)
+    publishSwap(path, prior, runId, affected,
+      runStats(spark, path, runId, prior.schema), op)
   }
 
   /** Publish a copy-on-write partition-swap commit: `affected`
@@ -418,11 +417,10 @@ object TripleSink {
                           affected: Seq[Int], newStats: Seq[PartStat],
                           op: String): Unit = {
     val affectedSet = affected.toSet
-    val keptVis = prior.visible.flatMap { rv =>
-      val concrete = rv.parts.getOrElse(partsOnDisk(path, rv.run))
-      val kept = concrete.filterNot(affectedSet)
-      if (kept.isEmpty) None else Some(RunVis(rv.run, Some(kept.sorted)))
-    }
+    val kept = visiblePartDirs(path, prior).filterNot(d => affectedSet(d._2))
+      .groupMap(_._1)(_._2)
+    val keptVis = prior.visibleRunNames.flatMap(r =>
+      kept.get(r).map(ps => RunVis(r, Some(ps.sorted))))
     val written = partsOnDisk(path, runId)
     val vis = if (written.isEmpty) keptVis else keptVis :+ RunVis(runId, Some(written))
     val partStats = (prior.partitions.filterNot(p => affectedSet(p.partId)) ++ newStats)
@@ -441,11 +439,7 @@ object TripleSink {
 
   /** The table as of its LATEST snapshot. */
   def read(spark: SparkSession, path: String): DataFrame =
-    manifests(path).lastOption match {
-      case Some(m) => readVisible(spark, path, m)
-      case None => throw new IllegalArgumentException(
-        s"no committed snapshot under $path")
-    }
+    readVisible(spark, path, latest(path))
 
   /** Time travel: the table exactly as it stood when `runId` committed
     * — later overwrites/appends/merges do not affect the result,
@@ -455,11 +449,7 @@ object TripleSink {
     * via the latest-run retry path, whose visibility is frozen by
     * construction, so "newest manifest of the runId" is unambiguous. */
   def readAsOf(spark: SparkSession, path: String, runId: String): DataFrame =
-    manifests(path).filter(_.runId == runId).lastOption match {
-      case Some(m) => readVisible(spark, path, m)
-      case None => throw new IllegalArgumentException(
-        s"no snapshot for run_id=$runId under $path")
-    }
+    readVisible(spark, path, snapshotOf(manifests(path), path, runId))
 
   /** Snapshot log, oldest first: (seq, run_id, total_rows). Served
     * straight from manifest stats — no data scan. */
@@ -494,37 +484,26 @@ object TripleSink {
     *    flip-flops (inserted then deleted) cancel in a final pass over
     *    only the changed rows.
     *
-    * Schema evolution: old files are projected under the `to` schema
-    * (missing columns null-filled), matching what a reader of the `to`
-    * snapshot sees. */
+    * Schema evolution: every file is read under the `to` snapshot's
+    * recorded schema (a column a file predates reads as null), matching
+    * what a reader of the `to` snapshot sees; an endpoint's
+    * delete-matched rows are read under that endpoint's schema plus the
+    * `to` columns, so its delete files match as its own reads do. */
   def changes(spark: SparkSession, path: String, fromRunId: String,
               toRunId: String): DataFrame = {
     val all = manifests(path)
-    def snap(run: String): Manifest = all.filter(_.runId == run).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot for run_id=$run under $path"))
-    val mFrom = snap(fromRunId)
-    val mTo = snap(toRunId)
+    val mFrom = snapshotOf(all, path, fromRunId)
+    val mTo = snapshotOf(all, path, toRunId)
     require(mFrom.seq <= mTo.seq,
       s"from run_id=$fromRunId (seq=${mFrom.seq}) is newer than " +
         s"to run_id=$toRunId (seq=${mTo.seq})")
     val cols = mTo.schema
+    val toCols = cols.map(c => col(c._1))
 
-    def fileSet(m: Manifest): Set[(String, Int)] = m.visible.flatMap { rv =>
-      rv.parts.getOrElse(partsOnDisk(path, rv.run)).map(p => (rv.run, p))
-    }.toSet
-
-    def emptyFrame: DataFrame =
-      spark.range(0).select(cols.map { case (n, t) =>
-        lit(null).cast(t).as(n) }: _*)
+    def fileSet(m: Manifest): Set[(String, Int)] = visiblePartDirs(path, m).toSet
 
     def readPairs(pairs: Set[(String, Int)]): DataFrame =
-      if (pairs.isEmpty) emptyFrame
-      else projectToSchema(
-        spark.read.option("basePath", s"$path/data")
-          .option("mergeSchema", "true")
-          .parquet(pairs.toSeq.sorted.map { case (r, p) =>
-            s"$path/data/run=$r/part_id=$p" }: _*), cols)
+      readDirs(spark, path, pairs.toSeq.sorted, cols).select(toCols: _*)
 
     // segments: (from → pred(replace_1)], (replace_1 → pred(replace_2)],
     // …, (replace_k → to]. Each replace equals its predecessor in
@@ -558,21 +537,11 @@ object TripleSink {
       fs.filter(p => scoped(p._1))
     }
     def deleteMatched(m: Manifest, pairs: Set[(String, Int)]): Option[DataFrame] =
-      deleteRows(spark, path, m) match {
-        case None => None
-        case Some(dels) =>
-          if (pairs.isEmpty) None
-          else {
-            val raw = spark.read.option("basePath", s"$path/data")
-              .option("mergeSchema", "true")
-              .parquet(pairs.toSeq.sorted.map { case (r, p) =>
-                s"$path/data/run=$r/part_id=$p" }: _*)
-              .drop("run")
-            val matched = nullFill(raw, m.schema)
-              .join(broadcast(dels), deleteMatchCond(m.schema), "left_semi")
-            Some(projectToSchema(matched, cols))
-          }
-      }
+      if (pairs.isEmpty) None
+      else deleteRows(spark, path, m).map(dels =>
+        readDirs(spark, path, pairs.toSeq.sorted, unionSchema(m.schema, cols))
+          .join(broadcast(dels), deleteMatchCond(m.schema), "left_semi")
+          .select(toCols: _*))
 
     var deleteTerms = false
     val (insSegs, delSegs) = segs.map { case (a, b) =>
@@ -601,7 +570,7 @@ object TripleSink {
     }.unzip
 
     val (insNet, delNet) =
-      if (segs.isEmpty) (emptyFrame, emptyFrame)
+      if (segs.isEmpty) (readPairs(Set.empty), readPairs(Set.empty))
       else {
         val insAll = insSegs.reduce(_ unionByName _)
         val delAll = delSegs.reduce(_ unionByName _)
@@ -614,7 +583,7 @@ object TripleSink {
 
     insNet.withColumn("_change_type", lit("insert"))
       .unionByName(delNet.withColumn("_change_type", lit("delete")))
-      .select(col("_change_type") +: cols.map(c => col(c._1)): _*)
+      .select(col("_change_type") +: toCols: _*)
   }
 
   /** Snapshot refs 1 of 4 — TAG a snapshot (Iceberg's named refs): a
@@ -628,9 +597,7 @@ object TripleSink {
     * to a different snapshot is rejected ([[dropTag]] first). */
   def tag(path: String, name: String, runId: String): Unit = {
     validateRefName("tag", name)
-    val m = manifests(path).filter(_.runId == runId).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot for run_id=$runId under $path"))
+    val m = snapshotOf(manifests(path), path, runId)
     val rdir = root(path).resolve("_refs")
     Files.createDirectories(rdir)
     val target = rdir.resolve(s"tag-$name.json")
@@ -644,11 +611,8 @@ object TripleSink {
   }
 
   /** Snapshot refs 2 of 4 — read the table as of a tag. */
-  def readTag(spark: SparkSession, path: String, name: String): DataFrame = {
-    validateRefName("tag", name)
-    readAsOf(spark, path, resolveTag(path, name).getOrElse(
-      throw new IllegalArgumentException(s"no tag '$name' under $path")))
-  }
+  def readTag(spark: SparkSession, path: String, name: String): DataFrame =
+    readVisible(spark, path, resolveSnapshot(path, None, Some(name)))
 
   /** Snapshot refs 3 of 4 — the tag list: (name, run_id), name-sorted. */
   def tags(path: String): Seq[(String, String)] = {
@@ -695,9 +659,7 @@ object TripleSink {
     * open branch. */
   def createBranch(path: String, name: String, fromRunId: String): Unit = {
     validateRefName("branch", name)
-    val m = manifests(path).filter(_.runId == fromRunId).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot for run_id=$fromRunId under $path"))
+    val m = snapshotOf(manifests(path), path, fromRunId)
     require(manifests(path, Some(name)).isEmpty,
       s"branch '$name' already exists (dropBranch first)")
     // the seed keeps the base manifest's seq and runId — the divergence
@@ -727,14 +689,8 @@ object TripleSink {
   }
 
   /** Branches 3 of 6 — the table as of a branch's head snapshot. */
-  def readBranch(spark: SparkSession, path: String, name: String): DataFrame = {
-    validateRefName("branch", name)
-    manifests(path, Some(name)).lastOption match {
-      case Some(m) => readVisible(spark, path, m)
-      case None => throw new IllegalArgumentException(
-        s"no branch '$name' under $path")
-    }
-  }
+  def readBranch(spark: SparkSession, path: String, name: String): DataFrame =
+    readVisible(spark, path, resolveSnapshot(path, None, None, Some(name)))
 
   /** Branches 4 of 6 — the branch list: (name, head run_id), sorted. */
   def branches(path: String): Seq[(String, String)] =
@@ -855,8 +811,7 @@ object TripleSink {
     * replaced, kept for integrity checks (ResumeSpec runs it after
     * append/merge/compact sequences). */
   def statsAudit(spark: SparkSession, path: String): Boolean = {
-    val m = manifests(path).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $path"))
+    val m = latest(path)
     val recomputed = computeStats(readVisible(spark, path, m))
     val manifestStats = m.partitions.sortBy(_.partId)
     val ok = recomputed == manifestStats &&
@@ -926,9 +881,7 @@ object TripleSink {
     * ([[statsAudit]]). */
   def partitionsDf(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val m = manifests(path).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $path"))
-    m.partitions.map(p => (p.partId, p.rows, p.h))
+    latest(path).partitions.map(p => (p.partId, p.rows, p.h))
       .toDF("part_id", "rows", "content_hash")
   }
 
@@ -937,25 +890,10 @@ object TripleSink {
     * visibility actually covers, with sizes — what a scan planner or a
     * compaction policy looks at (small-file counts drive [[compact]]). */
   def filesDf(spark: SparkSession, path: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val m = manifests(path).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $path"))
-    val rows = m.visible.flatMap { rv =>
-      val parts = rv.parts.getOrElse(partsOnDisk(path, rv.run))
-      parts.flatMap { pid =>
-        val dir = root(path).resolve("data").resolve(s"run=${rv.run}")
-          .resolve(s"part_id=$pid")
-        if (!Files.isDirectory(dir)) Nil
-        else scala.util.Using.resource(Files.list(dir)) { s =>
-          s.iterator().asScala
-            .filter(f => f.getFileName.toString.endsWith(".parquet"))
-            .map(f => (rv.run, pid, f.toString, Files.size(f)))
-            .toList
-        }
-      }
-    }
-    rows.toDF("run_id", "part_id", "file", "bytes")
+    dataFiles(path, visiblePartDirs(path, latest(path)))
+      .map { case (run, pid, f) => (run, pid, f.toString, Files.size(f)) }
+      .toDF("run_id", "part_id", "file", "bytes")
   }
 
   /** Metadata table 4 of 4 — the LATEST snapshot's active equality-
@@ -965,21 +903,11 @@ object TripleSink {
     * exactly when this table is empty — [[compact]] is what empties
     * it. */
   def deleteFilesDf(spark: SparkSession, path: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val m = manifests(path).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $path"))
-    val rows = m.deletes.flatMap { d =>
-      val dir = root(path).resolve("_deletes").resolve(s"run=${d.run}")
-      if (!Files.isDirectory(dir)) Nil
-      else scala.util.Using.resource(Files.list(dir)) { s =>
-        s.iterator().asScala
-          .filter(f => f.getFileName.toString.endsWith(".parquet"))
-          .map(f => (d.run, d.scope.size, f.toString, Files.size(f)))
-          .toList
-      }
-    }
-    rows.toDF("delete_run", "scoped_runs", "file", "bytes")
+    latest(path).deletes.flatMap { d =>
+      parquetFiles(root(path).resolve("_deletes").resolve(s"run=${d.run}"))
+        .map(f => (d.run, d.scope.size, f.toString, Files.size(f)))
+    }.toDF("delete_run", "scoped_runs", "file", "bytes")
   }
 
   /** Table maintenance 3 of 3 — orphan reclamation (Iceberg's
@@ -1060,8 +988,7 @@ object TripleSink {
   def lookupSubjects(spark: SparkSession, path: String,
                      subjects: Seq[String]): DataFrame = {
     require(subjects.nonEmpty, "empty subject list")
-    val m = manifests(path).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $path"))
+    val m = latest(path)
     // pre-v3 manifest: no recorded partition spec to prune by — fall
     // back to the (correct, unpruned) full-visibility scan rather than
     // guess a spec and silently miss the subject's real partition
@@ -1086,9 +1013,7 @@ object TripleSink {
   def rollback(path: String, toRunId: String, runId: String): Unit = {
     validateRunId(runId)
     val all = manifests(path)
-    val target = all.filter(_.runId == toRunId).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot for run_id=$toRunId under $path"))
+    val target = snapshotOf(all, path, toRunId)
     require(!all.exists(_.runId == runId),
       s"run_id=$runId already committed - rollback commits are not retryable")
     requireRunIdFreeElsewhere(path, runId, None, all)
@@ -1096,10 +1021,11 @@ object TripleSink {
       operation = "rollback", file = null))
   }
 
-  /** Resolve a snapshot for an external scan planner (the DSv2 source
-    * [[graft.sources.v2.TriplesSource]]): the latest manifest, the one
-    * a runId committed, or the one a tag pins — the same rules
-    * [[read]]/[[readAsOf]]/[[readTag]] apply. */
+  /** Resolve the snapshot a read names: the latest manifest, the one a
+    * runId committed, the one a tag pins, or a branch head — shared by
+    * [[readTag]], [[readBranch]] and the DSv2 source
+    * ([[graft.sources.v2.TriplesSource]]), with the rules [[read]] and
+    * [[readAsOf]] apply. */
   private[sources] def resolveSnapshot(path: String, asOf: Option[String],
                                        tagName: Option[String],
                                        branchName: Option[String] = None): Manifest = {
@@ -1117,10 +1043,8 @@ object TripleSink {
       case None => asOf
     }
     run match {
-      case Some(r) => manifests(path).filter(_.runId == r).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no snapshot for run_id=$r under $path"))
-      case None => manifests(path).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshot under $path"))
+      case Some(r) => snapshotOf(manifests(path), path, r)
+      case None => latest(path)
     }
   }
 
@@ -1138,12 +1062,30 @@ object TripleSink {
     }.toSet
 
   /** Concrete (run, part_id) directories a snapshot's visibility covers
-    * — the scan-planning unit for external planners. */
+    * — the one resolver every reader, the changelog's file diff, the
+    * partition swap and the DSv2 planner go through. */
   private[sources] def visiblePartDirs(path: String,
                                        m: Manifest): Seq[(String, Int)] =
     m.visible.flatMap { rv =>
       rv.parts.getOrElse(partsOnDisk(path, rv.run)).map(p => (rv.run, p))
     }
+
+  /** The parquet files of (run, part_id) data directories, in
+    * directory order and sorted within each — the one lister behind
+    * [[filesDf]] and the DSv2 planner's splits. */
+  private[sources] def dataFiles(path: String,
+                                 dirs: Seq[(String, Int)]): Seq[(String, Int, Path)] =
+    dirs.flatMap { case (run, pid) =>
+      parquetFiles(root(path).resolve("data").resolve(s"run=$run")
+        .resolve(s"part_id=$pid")).map((run, pid, _))
+    }
+
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    if (!Files.isDirectory(dir)) Nil
+    else scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList.sorted)
+  }
 
   // ---- internals -----------------------------------------------------
 
@@ -1160,23 +1102,6 @@ object TripleSink {
       .partitionBy("part_id")
       .parquet(s"$path/data/run=$runId")
 
-  /** Null-fill columns of `schema` a frame predates (schema
-    * evolution) — the one shared fill every snapshot-scoped read uses,
-    * so readers, the changelog, and delete files cannot drift. */
-  private def nullFill(df: DataFrame, schema: Seq[(String, String)]): DataFrame = {
-    val present = df.columns.toSet
-    schema.foldLeft(df) { case (d, (n, t)) =>
-      if (present(n)) d else d.withColumn(n, lit(null).cast(t)) }
-  }
-
-  /** Project a frame to a snapshot schema exactly: null-fill, cast to
-    * the recorded types, recorded column order — optionally keeping
-    * trailing bookkeeping columns. */
-  private def projectToSchema(df: DataFrame, schema: Seq[(String, String)],
-                              keep: Seq[Column] = Nil): DataFrame =
-    nullFill(df, schema).select(
-      schema.map { case (n, t) => col(n).cast(t).as(n) } ++ keep: _*)
-
   /** The equality-delete match: every schema column null-safe-equal to
     * its `del_`-prefixed counterpart, scoped to the runs visible when
     * the delete committed — shared by the snapshot read and the
@@ -1186,15 +1111,31 @@ object TripleSink {
     schema.map { case (n, _) => col(n) <=> col(s"del_$n") }
       .reduce(_ && _) && array_contains(col("del_scope"), col("run_id"))
 
-  /** Schema-check a delta frame and project it to the table's column
-    * order — shared by the COW ([[applyDelta]]) and MOR
-    * ([[applyDeltaMOR]]) row-level paths so they cannot drift. */
-  private def conformDelta(df: DataFrame, schemaCols: Seq[String],
+  /** Schema-check a row-level frame (names and recorded types) and
+    * project it to the table's column order — shared by [[merge]], the
+    * COW ([[applyDelta]]) and MOR ([[applyDeltaMOR]]) paths so they
+    * cannot drift. */
+  private def conformDelta(df: DataFrame, schema: Seq[(String, String)],
                            what: String): DataFrame = {
+    val schemaCols = schema.map(_._1)
     require(df.columns.toSet == schemaCols.toSet,
       s"$what schema ${df.columns.sorted.mkString(",")} must equal the " +
         s"table schema ${schemaCols.sorted.mkString(",")}")
+    requireRecordedTypes(schema, schemaOf(df, schemaCols), what)
     df.select(schemaCols.map(col): _*)
+  }
+
+  /** A commit may add columns but never retype one: each column it
+    * shares with the recorded schema must carry the recorded type, so
+    * every file of a snapshot decodes under that snapshot's schema. */
+  private def requireRecordedTypes(recorded: Seq[(String, String)],
+                                   next: Seq[(String, String)], what: String): Unit = {
+    val types = recorded.toMap
+    next.foreach { case (n, t) =>
+      types.get(n).foreach(r => require(r == t,
+        s"$what column '$n' has type $t but the table records $r - a commit " +
+          "cannot change a column's type (overwrite to retype it)"))
+    }
   }
 
   /** Stamp the table's hash partition (the one partition spec every
@@ -1251,8 +1192,8 @@ object TripleSink {
 
   /** Append-commit schema union: prior columns in their order, then any
     * columns this commit introduces (schema evolution: add-column). A
-    * prior column missing from the new frame stays in the schema —
-    * readers null-fill it for the new run's files. */
+    * prior column missing from the new frame stays in the schema, and
+    * reads of the new run's files decode it as null. */
   private def unionSchema(prior: Seq[(String, String)],
                           next: Seq[(String, String)]): Seq[(String, String)] = {
     val known = prior.map(_._1).toSet
@@ -1371,6 +1312,18 @@ object TripleSink {
     }
   }
 
+  /** The latest snapshot of main's chain, or a loud error on an empty
+    * table. */
+  private def latest(path: String): Manifest =
+    manifests(path).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no committed snapshot under $path"))
+
+  /** The snapshot `runId` committed — the newest manifest bearing it —
+    * among `all`, or a loud error. */
+  private def snapshotOf(all: Seq[Manifest], path: String, runId: String): Manifest =
+    all.filter(_.runId == runId).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no snapshot for run_id=$runId under $path"))
+
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def parseManifest(file: Path): Manifest = {
@@ -1436,51 +1389,56 @@ object TripleSink {
     }
   }
 
-  /** Post-write stats over ONE run's directory — the incremental unit.
-    * An all-filtered-out commit writes a _SUCCESS-only directory parquet
-    * cannot infer a schema from; its stats are simply empty. */
-  private def runStats(spark: SparkSession, path: String, run: String): Seq[PartStat] =
-    if (partsOnDisk(path, run).isEmpty) Nil
-    else computeStats(
-      spark.read.option("basePath", s"$path/data")
-        .parquet(s"$path/data/run=$run")
-        .drop("run"))
+  /** Post-write stats over ONE run's directory — the incremental unit
+    * — reading only the core columns of the `schema` the run was
+    * written with. An all-filtered-out commit writes a _SUCCESS-only
+    * directory; its stats are simply empty. */
+  private def runStats(spark: SparkSession, path: String, run: String,
+                       schema: Seq[(String, String)]): Seq[PartStat] = {
+    val dirs = partsOnDisk(path, run).map(run -> _)
+    if (dirs.isEmpty) Nil
+    else computeStats(readDirs(spark, path, dirs, schema.filter(c => CoreCols.contains(c._1))))
+  }
 
-  /** Read a snapshot: union the (run, partition) directories its
-    * manifest lists — partition-scoped entries read only their part
-    * dirs (copy-on-write visibility) — then project the snapshot's
-    * recorded schema, null-filling columns a visible file predates
-    * (schema evolution). `basePath` makes `run` and `part_id` resolve
-    * as partitions of the common base; the synthetic `run` directory
-    * column is dropped in favor of the `run_id` data column the write
-    * path embeds. A snapshot with no data — an all-rows-filtered
-    * commit's _SUCCESS-only run dir, or a delta that retracted
-    * everything — reads as an EMPTY frame under the recorded schema,
-    * not an error: an empty table must stay readable and recoverable
-    * (the next append/delta commit refills it). */
+  /** The one reader of snapshot files: directories `dirs` under `base`,
+    * decoded under a recorded `schema`. The schema is given, never
+    * inferred, so planning reads no parquet footer and starts no Spark
+    * job, and a column a file predates (schema evolution) reads as
+    * null in Spark's own reader. A `key=value` directory level below
+    * `base` becomes a column, typed by `schema` when it names it. */
+  private def readFiles(spark: SparkSession, base: String, dirs: Seq[String],
+                        schema: Seq[(String, String)]): DataFrame =
+    spark.read.schema(structOf(schema)).option("basePath", base)
+      .parquet(dirs.map(d => s"$base/$d"): _*)
+
+  /** (run, part_id) data directories under a recorded `schema`, plus
+    * the `run_id` column the write path embeds and `part_id` from the
+    * directory name; no directories give an empty frame of that
+    * shape. */
+  private def readDirs(spark: SparkSession, path: String, dirs: Seq[(String, Int)],
+                       schema: Seq[(String, String)]): DataFrame = {
+    val full = schema :+ ("run_id" -> "string") :+ ("part_id" -> "int")
+    if (dirs.isEmpty)
+      spark.range(0).select(full.map { case (n, t) => lit(null).cast(t).as(n) }: _*)
+    else readFiles(spark, s"$path/data",
+      dirs.map { case (r, p) => s"run=$r/part_id=$p" }, full)
+      .drop("run") // the directory's run=<id>; run_id is the data column
+  }
+
+  /** Read a snapshot: its visible (run, partition) directories —
+    * partition-scoped entries read only their part dirs (copy-on-write
+    * visibility), `partFilter` prunes by manifest ([[lookupSubjects]])
+    * — under the snapshot's recorded schema, minus the rows its active
+    * delete files match. A snapshot with no data — an
+    * all-rows-filtered commit's _SUCCESS-only run dir, or a delta that
+    * retracted everything — reads as an EMPTY frame under the recorded
+    * schema, not an error: an empty table must stay readable and
+    * recoverable (the next append/delta commit refills it). */
   private def readVisible(spark: SparkSession, path: String,
                           m: Manifest,
                           partFilter: Option[Set[Int]] = None): DataFrame = {
-    // resolve to concrete part dirs so runs that wrote no data (or
-    // whose dirs hold no parquet) contribute no unreadable paths;
-    // partFilter is manifest-level partition pruning ([[lookupSubjects]])
-    val paths = m.visible.flatMap { rv =>
-      val concrete = rv.parts.getOrElse(partsOnDisk(path, rv.run))
-      partFilter.fold(concrete)(f => concrete.filter(f))
-        .map(p => s"$path/data/run=${rv.run}/part_id=$p")
-    }
-    if (paths.isEmpty) {
-      val cols = m.schema.map { case (n, t) => lit(null).cast(t).as(n) } :+
-        lit(null).cast("string").as("run_id") :+ lit(null).cast("int").as("part_id")
-      return spark.range(0).select(cols: _*)
-    }
-    val raw = spark.read
-      .option("basePath", s"$path/data")
-      .option("mergeSchema", "true") // union schema across evolved runs
-      .parquet(paths: _*)
-      .drop("run")
-    val visibleRows = projectToSchema(raw, m.schema,
-      keep = Seq(col("run_id"), col("part_id")))
+    val visibleRows = readDirs(spark, path,
+      visiblePartDirs(path, m).filter(d => partFilter.forall(_(d._2))), m.schema)
     // merge-on-read: anti-join active equality-delete files, each
     // scoped to the runs visible when it committed. The delete side
     // broadcasts — it is the small outstanding-deletes set, reclaimed
@@ -1493,16 +1451,19 @@ object TripleSink {
   }
 
   /** Rows of a snapshot's delete files under `del_`-prefixed names,
-    * conformed to the snapshot's schema, each carrying its scope — the
-    * one place delete rows are null-filled and cast, for the library
-    * reads and the DSv2 reader alike. */
+    * each carrying the scope of its delete run — every delete directory
+    * in one read, decoded under the snapshot's recorded schema like its
+    * data (a column added after a delete committed reads as null, as it
+    * does in the older runs the delete scopes) — for the library reads
+    * and the DSv2 reader alike. */
   private[sources] def deleteRows(spark: SparkSession, path: String,
                                   m: Manifest): Option[DataFrame] =
     if (m.deletes.isEmpty) None
-    else Some(m.deletes.map { d =>
-      nullFill(spark.read.parquet(s"$path/_deletes/run=${d.run}"), m.schema)
-        .select(m.schema.map { case (n, t) =>
-          col(n).cast(t).as(s"del_$n") } :+
-          typedlit(d.scope).as("del_scope"): _*)
-    }.reduce(_ unionByName _))
+    else {
+      val scopes = typedlit(m.deletes.map(d => d.run -> d.scope).toMap)
+      Some(readFiles(spark, s"$path/_deletes", m.deletes.map(d => s"run=${d.run}"),
+          m.schema :+ ("run" -> "string"))
+        .select(m.schema.map { case (n, _) => col(n).as(s"del_$n") } :+
+          element_at(scopes, col("run")).as("del_scope"): _*))
+    }
 }

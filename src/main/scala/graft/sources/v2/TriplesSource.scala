@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import java.nio.file.Files
 import java.util.{Collections, OptionalLong, Set => JSet}
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -78,16 +79,13 @@ object TriplesTable {
   /** Per-file constants, read from the split rather than the file. */
   private[v2] val PartCols = StructType(Seq(
     StructField("run_id", StringType), StructField("part_id", IntegerType)))
-
-  private[v2] def dataSchema(m: TripleSink.Manifest): StructType = StructType(
-    m.schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
 }
 
 final class TriplesTable(path: String, m: TripleSink.Manifest)
     extends Table with SupportsRead {
   override def name(): String = s"graft_triples($path)@${m.runId}"
   override def schema(): StructType =
-    StructType(TriplesTable.dataSchema(m) ++ TriplesTable.PartCols)
+    StructType(m.dataSchema ++ TriplesTable.PartCols)
   override def capabilities(): JSet[TableCapability] =
     Collections.singleton(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -131,7 +129,7 @@ final class TriplesScanBuilder(path: String, m: TripleSink.Manifest,
 final class TriplesScan(path: String, m: TripleSink.Manifest,
                         required: StructType, partFilter: Option[Set[Int]])
     extends Scan with Batch with SupportsReportStatistics {
-  private val dataSchema = TriplesTable.dataSchema(m)
+  private val dataSchema = m.dataSchema
   private val readData =
     StructType(required.filter(f => dataSchema.fieldNames.contains(f.name)))
   private val readParts =
@@ -146,26 +144,15 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
 
   /** The visible data files after partition pruning, listed once and
     * shared by statistics and split planning. */
-  private lazy val files: Array[PartitionedFile] = {
-    import scala.jdk.CollectionConverters._
-    TripleSink.visiblePartDirs(path, m)
-      .filter { case (_, p) => partFilter.forall(_.contains(p)) }
-      .flatMap { case (run, pid) =>
-        val dir = java.nio.file.Paths.get(
-          path.stripPrefix("file:"), "data", s"run=$run", s"part_id=$pid")
-        if (!java.nio.file.Files.isDirectory(dir)) Nil
-        else scala.util.Using.resource(java.nio.file.Files.list(dir)) {
-          _.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toList.sorted
-            .map { f =>
-              val len = java.nio.file.Files.size(f)
-              PartitionedFile(InternalRow(UTF8String.fromString(run), pid),
-                SparkPath.fromPath(new HPath(f.toUri)), 0L, len, Array.empty[String],
-                java.nio.file.Files.getLastModifiedTime(f).toMillis, len)
-            }
-        }
+  private lazy val files: Array[PartitionedFile] =
+    TripleSink.dataFiles(path, TripleSink.visiblePartDirs(path, m)
+        .filter { case (_, p) => partFilter.forall(_.contains(p)) })
+      .map { case (run, pid, f) =>
+        val len = Files.size(f)
+        PartitionedFile(InternalRow(UTF8String.fromString(run), pid),
+          SparkPath.fromPath(new HPath(f.toUri)), 0L, len, Array.empty[String],
+          Files.getLastModifiedTime(f).toMillis, len)
       }.toArray
-  }
 
   /** Spark's reader fills partition columns by position from the
     * schema its factory is given: `readParts` on the plain path, all of
