@@ -25,36 +25,15 @@ import graft.sources.{PageRow, Pages, TripleSink}
   */
 object Pipeline {
 
-  /** @param fingerprintInputs checkpointed mode only: spend one extra
-    *   aggregation pass per stage computing input fingerprints, so a
-    *   resume detects changed upstream data and recomputes exactly the
-    *   affected partitions (Lineage). Disable for immutable inputs.
-    * @param localThreshold entity-node count below which linking/CC run
+  /** @param localThreshold entity-node count below which linking/CC run
     *   driver-side (size-adaptive small-graph path); 0 forces the
     *   distributed LSH-join + large/small-star path — the 100×-scale
-    *   code path, benched via q_kg_triples_dist.
-    * @param cacheRawTriples direct mode only: persist the slim triple
-    *   projection (MEMORY_AND_DISK) so the narrow extract→Viterbi chain
-    *   runs once per action instead of once per consumer. Right when
-    *   the triple stream fits cluster memory+disk; set false at corpus
-    *   scales where even the slim projection would thrash the local
-    *   disks — the two consumers then recompute the narrow chain
-    *   (pure CPU, embarrassingly parallel) instead of spilling.
-    *   Checkpointed mode ignores this: stages materialize to storage,
-    *   which is the 100 TB shape.
-    * @param ccReliable durable-checkpoint option for the distributed
-    *   CC loop (parquet write-read every k iterations instead of
-    *   executor-local blocks): survives executor loss on a cluster's
-    *   shared FS. None (default) = localCheckpoint, the single-box
-    *   shape. */
+    *   code path, benched via q_kg_triples_dist. */
   final case class Config(
       nParts: Int = 32,
       runId: String = "run-1",
       checkpointDir: Option[String] = None,
-      fingerprintInputs: Boolean = true,
-      localThreshold: Long = 1L << 20,
-      cacheRawTriples: Boolean = true,
-      ccReliable: Option[operators.ConnectedComponents.Reliable] = None)
+      localThreshold: Long = 1L << 20)
 
   final case class Outputs(
       extracted: DataFrame,
@@ -83,14 +62,11 @@ object Pipeline {
         // disk. (Checkpointed mode materializes the full stage to
         // storage instead — the 100 TB shape.)
         val raw = Stages.rawTriples(tagged)
-        val rawSlim0 = raw.toDF().select("subj", "subj_type", "subj_key",
+        val rawSlim = raw.toDF().select("subj", "subj_type", "subj_key",
           "pred", "obj", "obj_type", "obj_key")
-        val rawSlim =
-          if (cfg.cacheRawTriples)
-            rawSlim0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else rawSlim0
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val nodes = Linking.nodesFromTripleArgs(rawSlim)
-        val canon = Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold, cfg.ccReliable)
+        val canon = Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold)
         val triples = Canonicalize.rewrite(rawSlim, canon)
         Outputs(extracted, tagged, ments, raw, canon, triples)
 
@@ -99,29 +75,26 @@ object Pipeline {
         val lin = new Lineage(spark, dir, cfg.runId)
         // input fingerprints (per-partition bit_xor of row hashes) let a
         // resume recompute exactly the partitions whose input changed
-        val pagesParts =
-          if (!cfg.fingerprintInputs) None
-          else Some(pages.toDF().withColumn("part_id",
-            pmod(xxhash64(col("url")), lit(cfg.nParts)).cast("int")))
+        val pagesParts = pages.toDF().withColumn("part_id",
+          pmod(xxhash64(col("url")), lit(cfg.nParts)).cast("int"))
         val extracted = lin.runPartitioned("extracted",
-          Stages.extract(pages, cfg.nParts), pagesParts)
+          Stages.extract(pages, cfg.nParts), Some(pagesParts))
         val tagged = Stages.tag(extracted, bcModel)
         val raw = lin.runPartitioned("triples_raw", {
           // part_id rides along from extracted via a re-derivation on url
           Stages.rawTriples(tagged).toDF()
             .withColumn("part_id", pmod(xxhash64(col("url")), lit(cfg.nParts)).cast("int"))
-        }, if (cfg.fingerprintInputs) Some(extracted) else None)
+        }, Some(extracted))
         val rawDs = raw.drop("part_id").as[RawTripleRow]
         val ments = Stages.mentions(tagged)
         val nodes = Linking.nodesFromTriples(rawDs)
-        val rawFp = if (cfg.fingerprintInputs) Some(lin.globalFingerprint(raw)) else None
+        val rawFp = lin.globalFingerprint(raw)
         val canon = lin.runGlobal("canon_map",
-          Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold, cfg.ccReliable), rawFp)
+          Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold), Some(rawFp))
         // triples depend on BOTH raw and canon: combine the fingerprints
-        val canonFp = if (cfg.fingerprintInputs) Some(lin.globalFingerprint(canon)) else None
-        val triplesFp = for { a <- rawFp; b <- canonFp } yield (a._1 ^ b._1, a._2 + b._2)
-        val triples = lin.runGlobal("triples",
-          Canonicalize.rewrite(rawDs, canon), triplesFp)
+        val canonFp = lin.globalFingerprint(canon)
+        val triples = lin.runGlobal("triples", Canonicalize.rewrite(rawDs, canon),
+          Some((rawFp._1 ^ canonFp._1, rawFp._2 + canonFp._2)))
         TripleSink.write(triples, s"$dir/triples_table", cfg.runId, cfg.nParts)
         Outputs(extracted, tagged, ments, rawDs, canon, triples)
     }

@@ -121,16 +121,10 @@ object Scale {
 
   /** Fork one child JVM (own heap + GC — the executor shape). Child
     * stdout/stderr go to `<outFile>.log` so a crashed child is
-    * diagnosable. `cpuSet` optionally taskset-pins the child to a core
-    * range — measured 35% SLOWER on this box (a child's worker+GC+JIT
-    * threads exceed its core count) and therefore NOT used by the
-    * protocol; the parameter stays as the documented, reproducible
-    * record of that experiment. */
-  private def forkChild(pagesPath: String, cores: Int, outFile: String,
-                        cpuSet: Option[String]): Process = {
+    * diagnosable. */
+  private def forkChild(pagesPath: String, cores: Int, outFile: String): Process = {
     val javaBin = s"${sys.props("java.home")}/bin/java"
-    val pin = cpuSet.toSeq.flatMap(s => Seq("taskset", "-c", s))
-    val cmd: Seq[String] = pin ++ Seq(javaBin) ++ jdk17AddOpens ++ Seq(
+    val cmd: Seq[String] = Seq(javaBin) ++ jdk17AddOpens ++ Seq(
       "-Xmx6g", "-Xms6g", "-XX:+UseParallelGC",
       s"-XX:ParallelGCThreads=$cores", "-XX:+AlwaysPreTouch",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
@@ -176,7 +170,7 @@ object Scale {
         // the core count; the OS's freedom to use a neighbor's
         // momentarily-idle core is slack a cluster node also has for
         // its own executor's threads)
-        val procs = files.map(f => forkChild(path, n, f.toString, None))
+        val procs = files.map(f => forkChild(path, n, f.toString))
         val exits = procs.map(_.waitFor())
         val wall = (System.nanoTime() - t0) / 1e9
         // fail LOUDLY with the child's log tail instead of emitting a

@@ -1202,7 +1202,7 @@ object SparkEntry {
     // retractions commit as a scoped equality-delete FILE — no data
     // partition is rewritten (Iceberg v2's write-side position of the
     // COW/MOR dial; CdcBench measures 5× on scattered retractions) —
-    // and readers apply it as a broadcast anti-join scoped to the runs
+    // and readers drop the rows it matches, scoped to the runs
     // visible when the delete committed. The read-back must equal
     // DuckDB's mirror of "base minus retracted plus re-added", so a
     // delete file that under- or over-matches fails the hash.
@@ -1251,10 +1251,10 @@ object SparkEntry {
     }),
 
     // Iceberg-emulation POINT LOOKUP (A16, round-5): entity-edge fetch
-    // over the subject-hash layout — the lookup computes the probes'
-    // part_ids from the manifest's partition spec and scans ONLY those
-    // directories (ResumeSpec pins the pruned inputFiles), so a
-    // 10^12-row table answers "edges of entity X" at 1/nParts cost.
+    // over the subject-hash layout — the `subj` filter pushes into the
+    // snapshot scan, which plans ONLY the files of the probes' hash
+    // partitions (ResumeSpec pins the planned files), so a 10^12-row
+    // table answers "edges of entity X" at 1/nParts cost.
     // Values oracle against a plain IN-list select.
     "q_sink_lookup" -> ((s, d) => {
       val path = scratchDir("graft_sink_lookup")

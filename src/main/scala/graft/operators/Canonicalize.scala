@@ -28,12 +28,11 @@ object Canonicalize {
     * same pure functions locally; above the threshold run the
     * distributed plan. LinkingSpec asserts both paths agree. */
   def canonMapAdaptive(nodes: Dataset[NodeRow],
-                       localThreshold: Long = 1L << 20,
-                       reliable: Option[ConnectedComponents.Reliable] = None): DataFrame = {
+                       localThreshold: Long = 1L << 20): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
     if (localThreshold <= 0)
-      return canonMap(nodes, Linking.edges(Linking.signatures(nodes)), reliable)
+      return canonMap(nodes, Linking.edges(Linking.signatures(nodes)))
     nodes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (nodes.count() <= localThreshold) {
       val out = canonMapLocal(spark, nodes.collect())
@@ -47,11 +46,10 @@ object Canonicalize {
       // tolerance: localCheckpoint blocks die with their executor, so
       // this pin trades durability for speed and relies on job-level
       // retry; the node table is cheap to rebuild (one aggregation over
-      // raw triples), unlike the CC loop's iterations — which is why the
-      // durable seam (`reliable`) covers the loop, not this pin.
+      // raw triples), unlike the CC loop's iterations.
       val chk = nodes.localCheckpoint(true)
       nodes.unpersist()
-      canonMap(chk, Linking.edges(Linking.signatures(chk)), reliable)
+      canonMap(chk, Linking.edges(Linking.signatures(chk)))
     }
   }
 
@@ -120,8 +118,7 @@ object Canonicalize {
   }
 
   /** (etype, norm_key) → canonical surface, for every node. */
-  def canonMap(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow],
-               reliable: Option[ConnectedComponents.Reliable] = None): DataFrame = {
+  def canonMap(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
 
@@ -132,7 +129,7 @@ object Canonicalize {
         Hashing.nodeId(e.etype, e.key_b)))
       .toDF("src", "dst")
 
-    val assign = ConnectedComponents.run(idEdges, reliable = reliable) // (id, comp)
+    val assign = ConnectedComponents.run(idEdges) // (id, comp)
     val withComp = idNodes.join(assign, Seq("id"), "left_outer")
       .withColumn("comp", coalesce(col("comp"), col("id")))
 

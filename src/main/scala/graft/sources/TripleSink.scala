@@ -2,10 +2,13 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, graftbridge}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+
+import graft.sources.v2.TriplesTable
 
 /** A16: graph materialization into an Iceberg-style (subj, pred, obj)
   * triple table, with SNAPSHOTS, time travel, schema evolution, keyed
@@ -306,9 +309,10 @@ object TripleSink {
     * `_deletes/run=<runId>` — scoped to the data runs visible at this
     * commit, so later re-adds are untouched — and `additions` append
     * as a normal run; NO existing partition is rewritten. Readers
-    * anti-join active delete files at scan time (cost proportional to
-    * the outstanding delete volume, reclaimed by the next [[compact]],
-    * which materializes the deletes away and clears the list). This is
+    * drop the rows active delete files match at scan time (cost
+    * proportional to the outstanding delete volume, reclaimed by the
+    * next [[compact]], which materializes the deletes away and clears
+    * the list). This is
     * the escape hatch for [[applyDelta]]'s measured worst case: a
     * retraction set scattered uniformly over subjects dirties every
     * hash partition under copy-on-write (CdcBench `merge_scattered`),
@@ -344,7 +348,7 @@ object TripleSink {
     // MOR never rewrites a visible directory), so no stamp/checkpoint;
     // retractions dedup to SET semantics — stats update by subtraction,
     // so a row listed twice would permanently skew rows/hashes while
-    // the read-side anti-join removes each visible copy exactly once —
+    // the read-side delete match removes each visible copy exactly once —
     // and checkpoint because they are consumed twice (stats + file)
     val add = conformDelta(additions, prior.schema, "additions")
     val del = stampPart(
@@ -979,23 +983,15 @@ object TripleSink {
     * partition spec every write path shares: fetching one entity's
     * outgoing edges reads at most |subjects| part directories per
     * visible run instead of the table (at the 10^12-row design point,
-    * 1/nParts of the data per subject). Pruning happens at MANIFEST
-    * level: the lookup part_ids come from [[subjectParts]] — and only
-    * the surviving (run, part) directories are listed and scanned
-    * (spec-asserted via inputFiles). MOR delete files still anti-join
-    * (they are scoped by run, not partition); the residual subj
-    * filter cuts hash-bucket cohabitants. */
+    * 1/nParts of the data per subject). The `subj` filter pushes into
+    * the snapshot scan, which plans only the files of the subjects'
+    * partitions ([[subjectParts]]; a pre-v3 manifest records no spec
+    * and scans everything), and is re-applied to cut hash-bucket
+    * cohabitants. MOR deletes apply as in every snapshot read. */
   def lookupSubjects(spark: SparkSession, path: String,
                      subjects: Seq[String]): DataFrame = {
     require(subjects.nonEmpty, "empty subject list")
-    val m = latest(path)
-    // pre-v3 manifest: no recorded partition spec to prune by — fall
-    // back to the (correct, unpruned) full-visibility scan rather than
-    // guess a spec and silently miss the subject's real partition
-    if (m.nParts <= 0)
-      return readVisible(spark, path, m).filter(col("subj").isin(subjects: _*))
-    readVisible(spark, path, m, Some(subjectParts(subjects, m.nParts)))
-      .filter(col("subj").isin(subjects: _*))
+    read(spark, path).filter(col("subj").isin(subjects: _*))
   }
 
   /** Snapshot ROLLBACK (Delta's RESTORE / Iceberg's
@@ -1104,9 +1100,10 @@ object TripleSink {
 
   /** The equality-delete match: every schema column null-safe-equal to
     * its `del_`-prefixed counterpart, scoped to the runs visible when
-    * the delete committed — shared by the snapshot read and the
-    * changelog's delete-term fold; the DSv2 reader
-    * ([[graft.sources.v2.TriplesSource]]) matches the same rows. */
+    * the delete committed. Only the changelog's delete terms use it:
+    * they need the rows a delete DOES match, which no snapshot read
+    * yields. Snapshot reads apply the same match in the DSv2 reader
+    * ([[graft.sources.v2.MorReaderFactory]]). */
   private def deleteMatchCond(schema: Seq[(String, String)]): Column =
     schema.map { case (n, _) => col(n) <=> col(s"del_$n") }
       .reduce(_ && _) && array_contains(col("del_scope"), col("run_id"))
@@ -1400,8 +1397,10 @@ object TripleSink {
     else computeStats(readDirs(spark, path, dirs, schema.filter(c => CoreCols.contains(c._1))))
   }
 
-  /** The one reader of snapshot files: directories `dirs` under `base`,
-    * decoded under a recorded `schema`. The schema is given, never
+  /** The reader of raw file sets — a run's data for its stats, the
+    * changelog's file diff, delete files: directories `dirs` under
+    * `base`, decoded under a recorded `schema`. Snapshot reads go
+    * through [[readVisible]] instead. The schema is given, never
     * inferred, so planning reads no parquet footer and starts no Spark
     * job, and a column a file predates (schema evolution) reads as
     * null in Spark's own reader. A `key=value` directory level below
@@ -1425,37 +1424,26 @@ object TripleSink {
       .drop("run") // the directory's run=<id>; run_id is the data column
   }
 
-  /** Read a snapshot: its visible (run, partition) directories —
-    * partition-scoped entries read only their part dirs (copy-on-write
-    * visibility), `partFilter` prunes by manifest ([[lookupSubjects]])
-    * — under the snapshot's recorded schema, minus the rows its active
-    * delete files match. A snapshot with no data — an
-    * all-rows-filtered commit's _SUCCESS-only run dir, or a delta that
-    * retracted everything — reads as an EMPTY frame under the recorded
-    * schema, not an error: an empty table must stay readable and
-    * recoverable (the next append/delta commit refills it). */
-  private def readVisible(spark: SparkSession, path: String,
-                          m: Manifest,
-                          partFilter: Option[Set[Int]] = None): DataFrame = {
-    val visibleRows = readDirs(spark, path,
-      visiblePartDirs(path, m).filter(d => partFilter.forall(_(d._2))), m.schema)
-    // merge-on-read: anti-join active equality-delete files, each
-    // scoped to the runs visible when it committed. The delete side
-    // broadcasts — it is the small outstanding-deletes set, reclaimed
-    // by the next compact(); the table side never shuffles for this.
-    deleteRows(spark, path, m) match {
-      case None => visibleRows
-      case Some(dels) =>
-        visibleRows.join(broadcast(dels), deleteMatchCond(m.schema), "left_anti")
-    }
-  }
+  /** Read a snapshot: the DSv2 [[graft.sources.v2.TriplesTable]]
+    * relation over manifest `m`, the one planner of a snapshot's
+    * visible rows. It reads the visible (run, partition) files under the
+    * snapshot's recorded schema, minus the rows its active delete files
+    * match, and prunes by pushed `subj`/`part_id` filters. A snapshot
+    * with no data — an all-rows-filtered commit's _SUCCESS-only run
+    * dir, or a delta that retracted everything — reads as an EMPTY
+    * frame under the recorded schema, not an error: an empty table must
+    * stay readable and recoverable (the next append/delta commit
+    * refills it). */
+  private def readVisible(spark: SparkSession, path: String, m: Manifest): DataFrame =
+    graftbridge.ofRows(spark, DataSourceV2Relation.create(
+      new TriplesTable(path, m), None, None))
 
   /** Rows of a snapshot's delete files under `del_`-prefixed names,
     * each carrying the scope of its delete run — every delete directory
     * in one read, decoded under the snapshot's recorded schema like its
     * data (a column added after a delete committed reads as null, as it
-    * does in the older runs the delete scopes) — for the library reads
-    * and the DSv2 reader alike. */
+    * does in the older runs the delete scopes) — for the DSv2 reader and
+    * the changelog's delete terms. */
   private[sources] def deleteRows(spark: SparkSession, path: String,
                                   m: Manifest): Option[DataFrame] =
     if (m.deletes.isEmpty) None

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -31,33 +32,39 @@ import graft.sources.TripleSink
   *   CREATE TEMPORARY VIEW kg USING graft.sources.v2.TriplesSource
   *     OPTIONS (path '...', asOf 'r1')        -- plain SQL from here on
   *
-  * Semantics match [[TripleSink.read]]/readAsOf/readTag/readBranch
-  * exactly (TriplesV2Spec asserts value equality on evolved, merged and
-  * MOR-deleted tables). This file only PLANS; decoding is Spark's own
-  * parquet reader, the one the library reads use:
+  * It is also the relation behind every library snapshot read
+  * ([[TripleSink.read]], readAsOf, readTag, readBranch, lookupSubjects,
+  * statsAudit, compact and merge's partition rewrite), so the two
+  * surfaces cannot diverge. This file only PLANS; decoding is Spark's
+  * own parquet reader:
   *
   *  - SNAPSHOT-PINNED PLANNING: the manifest resolves once at table
-  *    load; commits racing the query do not shift what it reads.
-  *  - PARTITION PRUNING from pushed `subj` predicates: EqualTo/In
-  *    prune to the subjects' hash partitions at PLAN time
-  *    ([[TripleSink.subjectParts]], the writers' own hash). Reported as
-  *    residual — Spark re-applies every predicate post-scan, so
-  *    correctness never depends on the pruning math.
+  *    load; commits racing the query do not shift what it reads. Files
+  *    come from the manifest's visibility, never from a directory
+  *    listing job, so planning starts no Spark job.
+  *  - PARTITION PRUNING from pushed `subj` and `part_id` predicates:
+  *    EqualTo/In prune to the subjects' hash partitions
+  *    ([[TripleSink.subjectParts]], the writers' own hash; skipped for a
+  *    pre-v3 manifest, which records no spec) and to the named part_ids
+  *    at PLAN time. Reported as residual — Spark re-applies every
+  *    predicate post-scan, so correctness never depends on the pruning
+  *    math.
   *  - STATISTICS from the manifest: rows are the pruned partitions'
   *    recorded counts (already net of MOR deletes), size the planned
   *    files' bytes — so a small view broadcasts in a join.
-  *  - ONE SPLIT PER VISIBLE DATA FILE: each file becomes a
-  *    `FilePartition` whose `PartitionedFile` carries (run_id, part_id)
-  *    as partition values, read by Spark's `ParquetPartitionReaderFactory`
+  *  - SPLITS AS SPARK SIZES THEM: files are cut and packed by
+  *    `FilePartition.maxSplitBytes`/`getFilePartitions`, as Spark's own
+  *    file scans do; each `PartitionedFile` carries (run_id, part_id) as
+  *    partition values, read by Spark's `ParquetPartitionReaderFactory`
   *    (vectorized, footer read once, files predating an evolved column
   *    null-filled; columnar batches when nothing needs row-level work).
   *  - COLUMN PRUNING to the parquet read schema — except while MOR
   *    deletes are outstanding: then every data column is read, rows a
   *    delete matches are dropped, and the projection follows. Delete
   *    rows come from [[TripleSink.deleteRows]] (collected once on the
-  *    driver) and match as its `deleteMatchCond` does: null-safe
-  *    equality on every schema column, scoped by the file's run, with
-  *    doubles normalized (NaN, -0.0) as `<=>` compares them.
+  *    driver) and match by null-safe equality on every schema column,
+  *    scoped by each row's run, with doubles normalized (NaN, -0.0) as
+  *    `<=>` compares them.
   */
 final class TriplesSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -97,21 +104,25 @@ final class TriplesScanBuilder(path: String, m: TripleSink.Manifest,
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = full
-  /** Conjunction of pushed subj constraints: None = unconstrained;
-    * Some(s) = subj must be in s (EqualTo/In narrow by intersection —
+  /** Conjunctions of pushed constraints: None = unconstrained; Some(s)
+    * = the column must be in s (EqualTo/In narrow by intersection —
     * they arrive as separate conjuncts of one WHERE clause). */
   private var subjSet: Option[Set[String]] = None
+  private var partSet: Option[Set[Int]] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def narrow(s: Set[String]): Unit =
-      subjSet = Some(subjSet.fold(s)(_ intersect s))
+    def narrow[T](cur: Option[Set[T]], s: Set[T]): Option[Set[T]] =
+      Some(cur.fold(s)(_ intersect s))
     filters.foreach {
-      case EqualTo("subj", v: String) => narrow(Set(v))
+      case EqualTo("subj", v: String) => subjSet = narrow(subjSet, Set(v))
       case In("subj", vs) if vs.forall(_.isInstanceOf[String]) =>
-        narrow(vs.map(_.asInstanceOf[String]).toSet)
+        subjSet = narrow(subjSet, vs.map(_.asInstanceOf[String]).toSet)
+      case EqualTo("part_id", v: Int) => partSet = narrow(partSet, Set(v))
+      case In("part_id", vs) if vs.forall(_.isInstanceOf[Int]) =>
+        partSet = narrow(partSet, vs.map(_.asInstanceOf[Int]).toSet)
       case _ => // not prunable: scan all partitions, Spark filters
     }
     filters // all residual: correctness never depends on pruning
@@ -119,9 +130,10 @@ final class TriplesScanBuilder(path: String, m: TripleSink.Manifest,
   override def pushedFilters(): Array[Filter] = Array.empty
 
   override def build(): Scan = {
-    // a pre-v3 manifest records no partition spec: no pruning
-    val partFilter = subjSet.filter(_ => m.nParts > 0)
+    // a pre-v3 manifest records no partition spec: no subj pruning
+    val bySubj = subjSet.filter(_ => m.nParts > 0)
       .map(TripleSink.subjectParts(_, m.nParts))
+    val partFilter = (bySubj ++ partSet).reduceOption(_ intersect _)
     new TriplesScan(path, m, required, partFilter)
   }
 }
@@ -154,17 +166,26 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
           Files.getLastModifiedTime(f).toMillis, len)
       }.toArray
 
-  /** Spark's reader fills partition columns by position from the
-    * schema its factory is given: `readParts` on the plain path, all of
-    * `PartCols` under MOR (which reads run_id at ordinal 0). */
+  /** Splits sized and packed as Spark's own file scans do: files cut at
+    * `maxSplitBytes`, largest first, packed by `getFilePartitions`, so
+    * one split may hold files of several runs. Spark's reader fills
+    * partition columns by position from the schema its factory is
+    * given: `readParts` on the plain path, all of `PartCols` under MOR
+    * (which reads run_id after the data columns). */
   override def planInputPartitions(): Array[InputPartition] = {
+    val spark = SparkSession.active
     val parts = if (deletes.isEmpty) readParts else TriplesTable.PartCols
     val idx = parts.fieldNames.map(TriplesTable.PartCols.fieldIndex)
-    files.zipWithIndex.map { case (f, i) =>
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.map(_.fileSize + openCost).sum)
+    val splits = files.toSeq.flatMap { f =>
       val values = InternalRow.fromSeq(idx.toSeq.map(j =>
         f.partitionValues.get(j, TriplesTable.PartCols(j).dataType)))
-      FilePartition(i, Array(f.copy(partitionValues = values))): InputPartition
-    }
+      (0L until f.fileSize by maxSplit).map(off => f.copy(partitionValues = values,
+        start = off, length = math.min(maxSplit, f.fileSize - off)))
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -193,9 +214,9 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
         val key = MorReaderFactory.keyProjection(dataSchema)
         val toInternal = CatalystTypeConverters.createToCatalystConverter(delSchema)
         val n = dataSchema.length
-        val byRun: Map[String, Set[UnsafeRow]] = rows.toSeq.flatMap { r =>
+        val byRun: Map[UTF8String, Set[UnsafeRow]] = rows.toSeq.flatMap { r =>
           val k = key(toInternal(r).asInstanceOf[InternalRow]).copy()
-          r.getSeq[String](n).map(_ -> k)
+          r.getSeq[String](n).map(UTF8String.fromString(_) -> k)
         }.groupMap(_._1)(_._2).map { case (run, ks) => run -> ks.toSet }
         new MorReaderFactory(
           bridge.parquetReaderFactory(spark, dataSchema, dataSchema,
@@ -206,19 +227,17 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
 }
 
 /** Merge-on-read: rows of every data column plus (run_id, part_id)
-  * from `files`, minus those a delete scoped to the split's run
-  * matches, projected to the columns `out`. */
+  * from `files`, minus those a delete scoped to the row's run matches,
+  * projected to the columns `out`. A split may span runs, so each row's
+  * scope comes from its own run_id. */
 final class MorReaderFactory(files: PartitionReaderFactory, dataSchema: StructType,
-                             deletes: Map[String, Set[UnsafeRow]],
+                             deletes: Map[UTF8String, Set[UnsafeRow]],
                              out: Array[String])
     extends PartitionReaderFactory {
   private val all = StructType(dataSchema ++ TriplesTable.PartCols)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // one file per split (TriplesScan.planInputPartitions)
-    val run = partition.asInstanceOf[FilePartition].files.head
-      .partitionValues.getUTF8String(0).toString
-    val dels = deletes.getOrElse(run, Set.empty[UnsafeRow])
+    val runAt = all.fieldIndex("run_id")
     val key = MorReaderFactory.keyProjection(dataSchema)
     val project = UnsafeProjection.create(out.toSeq.map { c =>
       val i = all.fieldIndex(c)
@@ -227,9 +246,17 @@ final class MorReaderFactory(files: PartitionReaderFactory, dataSchema: StructTy
     val rows = files.createReader(partition)
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
+      // rows arrive file by file: look the scope up when the run changes
+      private var run: UTF8String = _
+      private var dels = Set.empty[UnsafeRow]
       override def next(): Boolean = {
         while (rows.next()) {
           cur = rows.get()
+          val r = cur.getUTF8String(runAt)
+          if (r != run) {
+            run = r.clone()
+            dels = deletes.getOrElse(run, Set.empty[UnsafeRow])
+          }
           if (dels.isEmpty || !dels.contains(key(cur))) return true
         }
         false

@@ -373,20 +373,21 @@ class ResumeSpec extends AnyFunSuite {
     assert(hit.select("subj", "obj").as[(String, String)].collect().toSet ==
       Set(("e7", "v7"), ("e42", "v42"), ("e180", "v180")))
 
-    // the scan must touch ONLY the probes' part dirs — at most
+    // the scan must plan ONLY the probes' part dirs — at most
     // |probes| partitions per run, never the whole table
     val expectedParts = probes.toDF("subj")
       .select(pmod(xxhash64(col("subj")), lit(8)).cast("int"))
       .as[Int].collect().toSet
-    val touched = hit.inputFiles.map { f =>
+    val planned = graft.PlannedScan.files(hit)
+    val touched = planned.map { f =>
       val m = "part_id=(\\d+)".r.findFirstMatchIn(f)
       assert(m.isDefined, s"non-partitioned input $f")
       m.get.group(1).toInt
     }.toSet
     assert(touched == expectedParts,
       s"lookup scanned partitions $touched, expected $expectedParts of 8")
-    assert(hit.inputFiles.length < TripleSink.read(spark, path).inputFiles.length,
-      "lookup read as many files as a full scan")
+    assert(planned.length < graft.PlannedScan.files(TripleSink.read(spark, path)).length,
+      "lookup planned as many files as a full scan")
 
     // a subject absent from the table returns empty, still pruned
     assert(TripleSink.lookupSubjects(spark, path, Seq("nope")).count() == 0)

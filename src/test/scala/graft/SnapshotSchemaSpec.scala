@@ -42,10 +42,10 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     path
   }
 
-  test("read, readAsOf and lookupSubjects plan from the manifest: no Spark job before an action") {
-    val path = evolvedMorTable()
-    assert(TripleSink.deleteFilesDf(spark, path).select("delete_run")
-      .distinct().count() == 2)
+  /** Plans read, readAsOf(`asOf`) and lookupSubjects(`probes`) of the
+    * table under `path` and asserts that none starts a Spark job before
+    * an action (and that each then yields rows). */
+  private def assertNoPlanningJobs(path: String, asOf: String, probes: Seq[String]): Unit = {
     val sc = spark.sparkContext
     val group = "snapshot-schema-plan"
     val jobs = new AtomicInteger
@@ -59,8 +59,8 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     try {
       Seq[(String, () => DataFrame)](
         "read" -> (() => TripleSink.read(spark, path)),
-        "readAsOf" -> (() => TripleSink.readAsOf(spark, path, "r2")),
-        "lookupSubjects" -> (() => TripleSink.lookupSubjects(spark, path, Seq("c", "e")))
+        "readAsOf" -> (() => TripleSink.readAsOf(spark, path, asOf)),
+        "lookupSubjects" -> (() => TripleSink.lookupSubjects(spark, path, probes))
       ).foreach { case (name, plan) =>
         graftbus.drain(sc)
         jobs.set(0)
@@ -73,6 +73,25 @@ class SnapshotSchemaSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("read, readAsOf and lookupSubjects plan from the manifest: no Spark job before an action") {
+    val path = evolvedMorTable()
+    assert(TripleSink.deleteFilesDf(spark, path).select("delete_run")
+      .distinct().count() == 2)
+    assertNoPlanningJobs(path, "r2", Seq("c", "e"))
+  }
+
+  test("no planning job however many directories are visible: 2 runs x 32 partitions") {
+    val path = Files.createTempDirectory("graft-snapshot-many-dirs").toString
+    def frame(lo: Int, hi: Int) =
+      (lo until hi).map(i => (s"e$i", "p", s"$i")).toDF("subj", "pred", "obj")
+    TripleSink.write(frame(0, 400), path, "r1", nParts = 32)
+    TripleSink.write(frame(400, 800), path, "r2", nParts = 32, append = true)
+    // more visible directories than Spark lists without a job (32)
+    assert(TripleSink.filesDf(spark, path).select("run_id", "part_id")
+      .distinct().count() == 64)
+    assertNoPlanningJobs(path, "r2", Seq("e1", "e401"))
   }
 
   test("a delete written before an append added a column still removes its row: library, DSv2 and changes") {

@@ -111,26 +111,39 @@ class TriplesV2Spec extends AnyFunSuite {
     TripleSink.write((400 until 500).map(i => (s"e$i", "p", s"v$i"))
       .toDF("subj", "pred", "obj"), path, "r2", nParts = 8, append = true)
 
+    // pruning is asserted on the files the scan plans: splits pack
+    // several files each
+    def files(df: DataFrame): Int = PlannedScan.files(df).size
     val full = v2(path)
-    val fullSplits = full.rdd.getNumPartitions
-    assert(fullSplits >= 16, s"expected >=16 file splits, got $fullSplits")
+    val fullFiles = files(full)
+    assert(fullFiles >= 16, s"expected >=16 planned files, got $fullFiles")
 
     // EqualTo: one subject -> one hash partition per run
     val one = full.filter(col("subj") === "e42")
-    assert(one.rdd.getNumPartitions <= 2,
-      s"subj= pruning failed: ${one.rdd.getNumPartitions} of $fullSplits splits")
+    assert(files(one) <= 2,
+      s"subj= pruning failed: ${files(one)} of $fullFiles files")
     assert(rows(one) == Set(("e42", "p", "v42")))
 
     // In: the probes' partitions only — and values complete (pruning
     // must never lose a row, whatever the hash math does)
     val in = full.filter(col("subj").isin("e1", "e250", "e499"))
-    assert(in.rdd.getNumPartitions < fullSplits / 2)
+    assert(files(in) < fullFiles / 2)
     assert(rows(in) ==
       Set(("e1", "p", "v1"), ("e250", "p", "v250"), ("e499", "p", "v499")))
 
-    // contradictory conjuncts intersect to nothing: zero splits planned
+    // contradictory conjuncts intersect to nothing: zero files planned
+    // (Catalyst folds the EqualTo pair away before the scan; the In pair
+    // reaches the scan builder, which intersects it)
     val none = full.filter(col("subj") === "e1" && col("subj") === "e2")
-    assert(none.rdd.getNumPartitions == 0 && none.count() == 0)
+    assert(files(none) == 0 && none.count() == 0)
+    val noneIn = full.filter(col("subj").isin("e1", "e2") && col("subj").isin("e3", "e4"))
+    assert(files(noneIn) == 0 && noneIn.count() == 0)
+
+    // part_id EqualTo/In prune to the named partitions of every run
+    assert(files(full.filter(col("part_id") === 3)) == 2)
+    val twoParts = full.filter(col("part_id").isin(1, 5))
+    assert(files(twoParts) == 4)
+    assert(twoParts.select("part_id").as[Int].collect().toSet == Set(1, 5))
 
     // column pruning reaches the scan (the Scan prints its ReadSchema)
     val projected = full.select("subj").queryExecution.executedPlan.toString
@@ -195,6 +208,37 @@ class TriplesV2Spec extends AnyFunSuite {
     TripleSink.write(triples(("a", "p", "1")), path, "r2", nParts = 4, append = true)
     assert(assertParity(path, "subj", "pred", "obj", "run_id") ==
       Seq("[a,p,1,r2]", "[b,p,2,r1]"))
+  }
+
+  test("v2 MOR: a split packing files of two runs scopes each row's deletes by its own run") {
+    val path = Files.createTempDirectory("graft-v2-mor-packed").toString
+    val older = (0 until 24).map(i => (s"s$i", "p", s"$i"))
+    TripleSink.write(triples(older :+ (("a", "p", "1")): _*), path, "r1", nParts = 4)
+    TripleSink.applyDeltaMOR(spark, path, triples(), triples(("a", "p", "1")), "mor1")
+    TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2")), path, "r2",
+      nParts = 4, append = true)
+    val expected = (older ++ Seq(("a", "p", "1"), ("b", "p", "2"))).map {
+      case (s, p, o) => s"[$s,$p,$o]" }.sorted
+    def show(df: DataFrame) =
+      df.select("subj", "pred", "obj").collect().map(_.toString).toSeq.sorted
+    // one task's worth of bytes per split: every file lands in one split
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW kg_v2_packed
+                 |USING $Fmt OPTIONS (path '$path')""".stripMargin)
+    try {
+      val lib = TripleSink.read(spark, path)
+      val splits = PlannedScan.splits(lib)
+      assert(splits.size < PlannedScan.files(lib).size, s"${splits.size} splits")
+      val runs = "run=([^/]+)/".r
+      assert(splits.exists(_.files.map(f =>
+        runs.findFirstMatchIn(f.filePath.toString).get.group(1)).distinct.size == 2),
+        "no split holds files of both runs")
+      assert(show(lib) == expected)
+      assert(show(spark.sql("SELECT subj, pred, obj FROM kg_v2_packed")) == expected)
+    } finally {
+      spark.catalog.dropTempView("kg_v2_packed")
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
   }
 
   test("v2 MOR parity: deletes match null columns and -0.0 against 0.0 as <=> does") {
