@@ -38,6 +38,11 @@ final case class HmmModel(
     }
     flat
   }
+
+  /** `logA` as one row-major `T*T` array (`transFlat(k*T + j)` =
+    * `logA(k)(j)`), built once per JVM like [[emitFlat]]: the Viterbi
+    * inner loop reads it with one array index. */
+  @transient lazy val transFlat: Array[Double] = logA.flatten
 }
 
 object Hmm {
@@ -96,42 +101,47 @@ object Hmm {
     val T = model.tags.length
     val n = chars.length
     if (n == 0) return Array.empty
-    val delta = Array.ofDim[Double](n, T)
-    val back = Array.ofDim[Int](n, T)
+    // delta(i)(t) and back(i)(t) live at [i*T + t] of one array each
+    val delta = new Array[Double](n * T)
+    val back = new Array[Int](n * T)
     val flat = model.emitFlat
+    val trans = model.transFlat
     val unk = model.logBUnk
     var e0 = if (chars(0) < flat.length) flat(chars(0)) else null
     if (e0 == null) e0 = unk
     var t = 0
     while (t < T) {
-      delta(0)(t) = model.logPi(t) + e0(t)
+      delta(t) = model.logPi(t) + e0(t)
       t = t + 1
     }
     var i = 1
     while (i < n) {
       var e = if (chars(i) < flat.length) flat(chars(i)) else null
       if (e == null) e = unk
+      val prev = (i - 1) * T
+      val cur = i * T
       var j = 0
       while (j < T) {
         var best = Double.NegativeInfinity
         var bestK = 0
         var k = 0
         while (k < T) {
-          val s = delta(i - 1)(k) + model.logA(k)(j)
+          val s = delta(prev + k) + trans(k * T + j)
           if (s > best) { best = s; bestK = k }
           k += 1
         }
-        delta(i)(j) = best + e(j)
-        back(i)(j) = bestK
+        delta(cur + j) = best + e(j)
+        back(cur + j) = bestK
         j += 1
       }
       i += 1
     }
+    val last = (n - 1) * T
     var best = Double.NegativeInfinity
     var bestT = 0
     t = 0
     while (t < T) {
-      if (delta(n - 1)(t) > best) { best = delta(n - 1)(t); bestT = t }
+      if (delta(last + t) > best) { best = delta(last + t); bestT = t }
       t += 1
     }
     val path = new Array[String](n)
@@ -139,7 +149,7 @@ object Hmm {
     i = n - 1
     while (i >= 0) {
       path(i) = model.tags(cur)
-      cur = back(i)(cur)
+      cur = back(i * T + cur)
       i -= 1
     }
     path

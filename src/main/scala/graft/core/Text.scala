@@ -17,13 +17,13 @@ object Text {
     * UTF-8 decode → drop <script>/<style> subtrees → strip all tags →
     * HTML-entity decode (&amp; &lt; &gt; &quot; &#NNN; only) →
     * collapse runs of [ \t\r\n]+ to a single space → trim.
-    */
+    *
+    * After the two subtree drops, the last three steps run as ONE pass
+    * over the chars into a `char[]` ([[stripDecodeCollapse]]), with the
+    * same result as running them one after the other. */
   def extractText(html: Array[Byte]): String = {
     val raw = new String(html, StandardCharsets.UTF_8)
-    val noSubtrees = dropElement(dropElement(raw, "script"), "style")
-    val noTags = stripTags(noSubtrees)
-    val decoded = decodeEntities(noTags)
-    collapseWs(decoded)
+    stripDecodeCollapse(dropElement(dropElement(raw, "script"), "style"))
   }
 
   /** Case-insensitively removes <name ...> ... </name> subtrees.
@@ -75,80 +75,79 @@ object Text {
     sb.toString
   }
 
-  /** Replaces every <...> run with a single space ('<' without a closing
-    * '>' drops the rest of the input — deterministic rule). */
-  private[core] def stripTags(s: String): String = {
-    if (s.indexOf('<') < 0) return s // no tags → no copy
-    val sb = new StringBuilder(s.length)
+  /** Strip tags, decode entities and collapse whitespace in one pass:
+    *  - every <...> run becomes one space ('<' without a closing '>'
+    *    drops the rest of the input);
+    *  - exactly &amp; &lt; &gt; &quot; and &#NNN; (decimal, 1..7 digits,
+    *    valid code point) are decoded; anything else passes through;
+    *  - runs of space/tab/CR/LF become one space, leading and trailing
+    *    runs are dropped.
+    * This equals strip, then decode, then collapse. An entity's
+    * look-ahead over the raw chars fails wherever it would fail over the
+    * tag-stripped chars, since neither '<' nor the tag's space fits any
+    * entity pattern. Decoded chars are emitted and never re-scanned, so
+    * a decoded '<' or '&' stays literal. Tag spaces and decoded
+    * whitespace go through the one collapse state (`ws`). The output is
+    * never longer than the input. */
+  private def stripDecodeCollapse(s: String): String = {
+    val in = s.toCharArray
+    val n = in.length
+    val out = new Array[Char](n)
+    var o = 0
+    var ws = false
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
+    while (i < n) {
+      var c = in(i) // the char this step emits: ' ' for a tag
+      var lo = '\u0000' // low surrogate of a decoded supplementary code point
       if (c == '<') {
-        val gt = s.indexOf('>', i)
-        sb.append(' ')
-        i = if (gt < 0) s.length else gt + 1
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Decodes exactly &amp; &lt; &gt; &quot; and &#NNN; (decimal, 1..7
-    * digits, valid code point). Single pass — produced '&' is not
-    * re-scanned, so no double-decoding. Anything else passes through. */
-  private[core] def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s // no entities → no copy
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        if (s.startsWith("&amp;", i)) { sb.append('&'); i += 5 }
-        else if (s.startsWith("&lt;", i)) { sb.append('<'); i += 4 }
-        else if (s.startsWith("&gt;", i)) { sb.append('>'); i += 4 }
-        else if (s.startsWith("&quot;", i)) { sb.append('"'); i += 6 }
-        else if (s.startsWith("&#", i)) {
-          var j = i + 2
-          while (j < s.length && j < i + 9 && Character.isDigit(s.charAt(j))) j += 1
-          if (j > i + 2 && j < s.length && s.charAt(j) == ';') {
-            val cp = try java.lang.Integer.parseInt(s.substring(i + 2, j))
-                     catch { case _: NumberFormatException => -1 }
-            if (cp >= 0 && cp <= 0x10FFFF && Character.isValidCodePoint(cp)) {
-              sb.appendAll(Character.toChars(cp)); i = j + 1
-            } else { sb.append(c); i += 1 }
-          } else { sb.append(c); i += 1 }
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Collapse runs of space/tab/CR/LF to one space, then trim. */
-  private[core] def collapseWs(s: String): String = {
-    // already-collapsed fast path (single scan, no alloc): no tab/CR/LF,
-    // no double space, no leading/trailing space → return unchanged
-    var clean = s.isEmpty || (s.charAt(0) != ' ' && s.charAt(s.length - 1) != ' ')
-    var k = 0
-    while (clean && k < s.length) {
-      val c = s.charAt(k)
-      if (c == '\t' || c == '\r' || c == '\n' ||
-          (c == ' ' && k + 1 < s.length && s.charAt(k + 1) == ' ')) clean = false
-      k += 1
-    }
-    if (clean) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    var inWs = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == ' ' || c == '\t' || c == '\r' || c == '\n') inWs = true
+        i += 1
+        while (i < n && in(i) != '>') i += 1
+        i += 1
+        c = ' '
+      } else if (c == '&') {
+        val e = entityAt(in, i)
+        if (e < 0) i += 1
+        else {
+          val cp = e.toInt
+          i += (e >>> 32).toInt
+          if (Character.isBmpCodePoint(cp)) c = cp.toChar
+          else { c = Character.highSurrogate(cp); lo = Character.lowSurrogate(cp) }
+        }
+      } else i += 1
+      if (c == ' ' || c == '\t' || c == '\r' || c == '\n') ws = true
       else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
+        if (ws && o > 0) { out(o) = ' '; o += 1 }
+        ws = false
+        out(o) = c; o += 1
+        if (lo != 0) { out(o) = lo; o += 1 }
       }
-      i += 1
     }
-    sb.toString
+    new String(out, 0, o)
+  }
+
+  /** The entity at `in(i) == '&'` as `(length << 32) | code point`, or
+    * -1 when none of the five forms starts there. */
+  private def entityAt(in: Array[Char], i: Int): Long = {
+    def at(lit: String): Boolean = {
+      var k = 0
+      while (k < lit.length && i + k < in.length && in(i + k) == lit.charAt(k)) k += 1
+      k == lit.length
+    }
+    if (at("&amp;")) (5L << 32) | '&'
+    else if (at("&lt;")) (4L << 32) | '<'
+    else if (at("&gt;")) (4L << 32) | '>'
+    else if (at("&quot;")) (6L << 32) | '"'
+    else if (!at("&#")) -1L
+    else {
+      var j = i + 2
+      while (j < in.length && j < i + 9 && Character.isDigit(in(j))) j += 1
+      if (j == i + 2 || j == in.length || in(j) != ';') -1L
+      else {
+        val cp = try java.lang.Integer.parseInt(new String(in, i + 2, j - i - 2))
+                 catch { case _: NumberFormatException => -1 }
+        if (Character.isValidCodePoint(cp)) ((j + 1 - i).toLong << 32) | cp else -1L
+      }
+    }
   }
 
   /** A4 sentence split (FIXTURES.md §4): split AFTER any of 。！？；\n;
@@ -222,8 +221,6 @@ object Text {
   def sha256Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8))
-    val sb = new StringBuilder(64)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    java.util.HexFormat.of().formatHex(d)
   }
 }

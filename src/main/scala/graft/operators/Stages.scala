@@ -6,11 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.PageRow
 
-/** Extracted page: text byte-identical to the oracle extractor per url
-  * (BASELINE.json:15). part_id drives lineage/resume granularity. */
-final case class ExtractedRow(url: String, warc_ts: java.time.Instant,
-                              text: String, lang: String)
-
 /** One tagged sentence with its decoded entity spans. */
 final case class TaggedRow(url: String, sent_idx: Int, sent: String, spans: Seq[Span])
 
@@ -28,29 +23,36 @@ final case class RawTripleRow(url: String, sent_idx: Int,
 /** The narrow A2–A10 chain: pages → extracted → tagged → mentions /
   * raw triples. Every function here is a narrow transformation (no
   * shuffle) — one pipelined Spark stage end to end, which is the core
-  * scaling property of the pipeline (SURVEY.md §3.2). The typed lambdas
-  * call the same graft.core pure functions as the oracle.
+  * scaling property of the pipeline (SURVEY.md §3.2). The extraction
+  * udf and the typed lambdas call the same graft.core pure functions as
+  * the oracle.
   */
 object Stages {
 
   /** A2 extract + part_id + sha. Uses the pre-extracted text when the
     * source provides one, else extracts from html — both paths produce
     * the same bytes for synthesized pages, and the sha256 column is the
-    * byte-identity witness. */
-  def extract(pages: Dataset[PageRow], nParts: Int): DataFrame = {
-    import pages.sparkSession.implicits._
-    pages
-      .map(p => ExtractedRow(p.url, p.warc_ts,
-        if (p.text != null) p.text else Text.extractText(p.html), p.lang))
+    * byte-identity witness. A column expression, not a typed map: a
+    * filter on `url`, `warc_ts` or `lang` downstream (the language
+    * filter in [[tag]]) pushes below the extraction, so pages it drops
+    * are never extracted. */
+  def extract(pages: Dataset[PageRow], nParts: Int): DataFrame =
+    pages.select(col("url"), col("warc_ts"),
+        coalesce(col("text"), extractHtml(col("html"))).as("text"), col("lang"))
       .withColumn("part_id", pmod(xxhash64(col("url")), lit(nParts)).cast("int"))
       .withColumn("text_sha256", sha2(col("text"), 256))
-  }
+
+  /** [[Text.extractText]] as a deterministic column function. */
+  private val extractHtml =
+    udf((html: Array[Byte]) => Text.extractText(html)).withName("extractHtml")
 
   /** A3 language filter + A4 split + A5 char tokenize + A8 Viterbi +
     * A9 BIO span decode, fused into one mapPartitions (model broadcast
     * once per executor — "batched Pandas-free mapPartitions inference",
     * BASELINE.json:6). The lang filter stays a Column predicate ahead of
-    * the typed lambda so Catalyst can push it into the scan. */
+    * the typed lambda, so Catalyst pushes it below [[extract]]'s
+    * projection and into the page scan: only zh pages are extracted and
+    * tagged. */
   def tag(extracted: DataFrame, bcModel: Broadcast[HmmModel]): Dataset[TaggedRow] = {
     val spark = extracted.sparkSession
     import spark.implicits._

@@ -43,6 +43,12 @@ class TextSpec extends AnyFunSuite {
     assert(!Text.isSubsequence("清华", "北京大学"))
     assert(Text.isSubsequence("", "x"))
   }
+  test("sha256Hex: known vectors, lower-case hex") {
+    assert(Text.sha256Hex("abc") ==
+      "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+    assert(Text.sha256Hex("") ==
+      "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855")
+  }
 }
 
 class BioSpec extends AnyFunSuite {

@@ -207,4 +207,47 @@ class PlanGuardSpec extends AnyFunSuite {
       Seq(("e2", "p", "b")).toDF("subj", "pred", "obj"), "mor1")
     assert(view.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(2)))
   }
+
+  test("the tag path never extracts a non-zh page: the lang filter runs below extraction") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    import graft.core.Fixture
+    import graft.operators.Stages
+    import graft.sources.PageRow
+    // non-zh rows carry neither text nor html: extracting one throws
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text", "lang", "source")
+      .as[(Long, String, String, String)].collect().toSeq
+    val rows = graft.oracle.RefOracle.pagesFor(docs).map { p =>
+      PageRow(p.url, java.time.Instant.ofEpochSecond(Fixture.pageTsSeconds(p.docId)),
+        if (p.lang == "zh") p.html else null, null, p.lang)
+    }
+    assert(rows.exists(_.lang != "zh") && rows.exists(_.lang == "zh"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-zh-guard").toString
+    rows.toDS().write.mode("overwrite").parquet(dir)
+    val pages = spark.read.parquet(dir).as[PageRow]
+    val bc = spark.sparkContext.broadcast(Fixture.model)
+    val tagged = Stages.tag(Stages.extract(pages, 8), bc)
+    def triples(ds: org.apache.spark.sql.Dataset[PageRow]) =
+      Stages.rawTriples(Stages.tag(Stages.extract(ds, 8), bc))
+        .collect().toSeq.sortBy(_.toString)
+    val got = triples(pages)
+    assert(got.nonEmpty)
+    assert(got == triples(rows.filter(_.lang == "zh").toDS()))
+
+    // the optimized plan filters on lang below the extraction projection,
+    // and the scan receives the predicate
+    val plan = tagged.queryExecution.optimizedPlan
+    val extraction = plan.collect { case p: Project if p.projectList.exists(_.exists {
+      case u: ScalaUDF => u.udfName.contains("extractHtml"); case _ => false }) => p }
+    assert(extraction.size == 1, s"no extraction projection:\n$plan")
+    def langFilters(p: LogicalPlan) = p.collect {
+      case f: Filter if f.condition.references.exists(_.name == "lang") => f }
+    assert(langFilters(extraction.head.child).nonEmpty &&
+      langFilters(plan).size == langFilters(extraction.head.child).size,
+      s"lang filter above the extraction:\n$plan")
+    assert(tagged.queryExecution.executedPlan.toString.contains("EqualTo(lang,zh)"),
+      tagged.queryExecution.executedPlan.toString)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TripleSink
 
 /** DSv2 read integration for the snapshot table
-  * (graft.sources.v2.TriplesSource): value parity with the library
-  * read paths, snapshot-pinned planning, plan-time partition pruning
+  * (graft.sources.v2.TriplesSource): value parity with the table's raw
+  * data and delete files, snapshot-pinned planning, plan-time partition pruning
   * from pushed subj predicates, column pruning, schema evolution,
   * MOR delete application, and the SQL view surface. */
 class TriplesV2Spec extends AnyFunSuite {
@@ -26,14 +26,45 @@ class TriplesV2Spec extends AnyFunSuite {
   private def rows(df: DataFrame): Set[(String, String, String)] =
     df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
 
-  /** The v2 read equals the library read row for row (as a multiset,
-    * printed exactly, so -0.0 and 0.0 stay apart) on `cols`. */
+  /** The latest snapshot's rows on `cols`, printed as `Row`s, built
+    * from its raw files without the snapshot read: every data file
+    * [[TripleSink.filesDf]] lists, read with plain `spark.read.parquet`
+    * (its part_id taken from the listing), minus the rows a file of
+    * [[TripleSink.deleteFilesDf]] deletes. A delete applies to the data
+    * runs committed before its own run, and matches a row when every
+    * column it carries is equal, nulls equal and -0.0 equal to 0.0. */
+  private def reference(path: String, cols: Seq[String]): Seq[String] = {
+    val seqOf = TripleSink.snapshotsDf(spark, path).select("run_id", "seq")
+      .as[(String, Int)].collect().groupMapReduce(_._1)(_._2)(math.min)
+    val data = TripleSink.filesDf(spark, path).select("part_id", "file")
+      .as[(Int, String)].collect().toSeq
+      .map { case (pid, f) => spark.read.parquet(f).withColumn("part_id", lit(pid)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true)).collect().toSeq
+    val deletes = TripleSink.deleteFilesDf(spark, path).select("delete_run", "file")
+      .as[(String, String)].collect().toSeq
+      .flatMap { case (d, f) => spark.read.parquet(f).collect().map(d -> _) }
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => x == y || (x.isNaN && y.isNaN)
+      case _ => a == b
+    }
+    def deleted(r: Row): Boolean = deletes.exists { case (d, del) =>
+      seqOf(r.getAs[String]("run_id")) < seqOf(d) &&
+        del.schema.fieldNames.forall(c => same(r.getAs[Any](c), del.getAs[Any](c)))
+    }
+    data.filterNot(deleted).map(r => Row.fromSeq(cols.map(r.getAs[Any])).toString).sorted
+  }
+
+  /** The v2 read and the library read each equal [[reference]] row for
+    * row (as a multiset, printed exactly, so -0.0 and 0.0 stay apart)
+    * on `cols`. */
   private def assertParity(path: String, cols: String*): Seq[String] = {
     def show(df: DataFrame) =
       df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
-    val lib = show(TripleSink.read(spark, path))
+    val want = reference(path, cols)
     val got = show(v2(path))
-    assert(got == lib, s"v2 read diverged from the library read:\n$got\nvs\n$lib")
+    assert(got == want, s"v2 read diverged from the raw files:\n$got\nvs\n$want")
+    val lib = show(TripleSink.read(spark, path))
+    assert(lib == want, s"library read diverged from the raw files:\n$lib\nvs\n$want")
     got
   }
 
@@ -65,15 +96,9 @@ class TriplesV2Spec extends AnyFunSuite {
     TripleSink.tag(path, "v1", "r1")
 
     // latest snapshot: full value parity including the evolved column
-    // and run_id/part_id, against the library read
-    val lib = TripleSink.read(spark, path)
-      .select("subj", "pred", "obj", "score", "run_id", "part_id")
-      .as[(String, String, String, Option[Long], String, Int)].collect().toSet
-    val got = v2(path)
-      .select("subj", "pred", "obj", "score", "run_id", "part_id")
-      .as[(String, String, String, Option[Long], String, Int)].collect().toSet
-    assert(got == lib && got.map(_._1) == Set("a", "c", "d", "e"),
-      s"v2 read diverged: $got vs $lib")
+    // and run_id/part_id, against the snapshot's raw files
+    assertParity(path, "subj", "pred", "obj", "score", "run_id", "part_id")
+    assert(rows(v2(path)).map(_._1) == Set("a", "c", "d", "e"))
 
     // time travel: asOf == readAsOf (pre-evolution snapshot has no
     // score column at all), tag == readTag
@@ -189,16 +214,18 @@ class TriplesV2Spec extends AnyFunSuite {
     val path = Files.createTempDirectory("graft-v2-partid").toString
     TripleSink.write(triples(("a", "p", "1"), ("b", "p", "2"), ("c", "q", "3"),
       ("d", "q", "4")), path, "r1", nParts = 4)
-    val lib = TripleSink.read(spark, path)
     assertParity(path, "subj", "part_id")
     assertParity(path, "part_id")
     assertParity(path, "obj", "part_id", "run_id")
-    val pid = lib.where($"subj" === "c").select("part_id").as[Int].head()
+    val byPart = reference(path, Seq("part_id", "subj")).map { r =>
+      val Array(pid, subj) = r.stripPrefix("[").stripSuffix("]").split(",")
+      (pid.toInt, subj)
+    }
+    val pid = byPart.find(_._2 == "c").get._1
     assert(v2(path).where($"part_id" === pid).select("subj").as[String]
-      .collect().toSet == lib.where($"part_id" === pid).select("subj").as[String]
-      .collect().toSet)
-    def counts(df: DataFrame) = df.groupBy("part_id").count().as[(Int, Long)].collect().toMap
-    assert(counts(v2(path)) == counts(lib))
+      .collect().toSet == byPart.filter(_._1 == pid).map(_._2).toSet)
+    assert(v2(path).groupBy("part_id").count().as[(Int, Long)].collect().toMap ==
+      byPart.groupMapReduce(_._1)(_ => 1L)(_ + _))
   }
 
   test("v2 MOR parity: a delete scoped to an older run spares the same row re-written later") {
