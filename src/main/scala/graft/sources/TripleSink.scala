@@ -3,10 +3,16 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.v2.TriplesTable
 
@@ -108,12 +114,9 @@ object TripleSink {
     def totalRows: Long = partitions.map(_.rows).sum
     /** The recorded schema as Spark types: what every reader of this
       * snapshot decodes its files with, the DSv2 source included. */
-    def dataSchema: StructType = structOf(schema)
+    def dataSchema: StructType =
+      StructType(schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
   }
-
-  /** Recorded (name, catalogString) pairs as a Spark schema. */
-  private def structOf(schema: Seq[(String, String)]): StructType =
-    StructType(schema.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
 
   /** Commits triples as a new snapshot: data files land under
     * `path/data/run=<runId>` partitioned by part_id =
@@ -197,25 +200,26 @@ object TripleSink {
                     else prior).filter(_ => effAppend)
     extended.foreach(b => requireRecordedTypes(b.schema, frameSchema, "triples"))
     writeRunData(triples, path, runId, nParts)
-    val newStats = runStats(spark, path, runId, frameSchema)
 
     // an append extends the base snapshot, so its active delete files
     // carry over; an overwrite/replace starts from its own data alone
-    val (visible, partStats, schema, deletes) = extended match {
-      case None => (Seq(RunVis(runId, None)), newStats, frameSchema, Seq.empty[DeleteVis])
+    val (visible, baseStats, schema, deletes) = extended match {
+      case None => (Seq(RunVis(runId, None)), Nil, frameSchema, Seq.empty[DeleteVis])
       case Some(b) =>
-        (b.visible :+ RunVis(runId, None), mergeStats(b.partitions, newStats),
+        (b.visible :+ RunVis(runId, None), b.partitions,
           unionSchema(b.schema, frameSchema), b.deletes)
     }
-    publish(path, Manifest(
+    val m = Manifest(
       seq = prior.map(_.seq + 1).getOrElse(0),
       runId = runId,
       operation = if (isRetry) retryOf.get.operation
                   else opLabel.getOrElse(if (append) "append" else "overwrite"),
-      snapshotId = partStats.foldLeft(0L)(_ ^ _.h),
-      nParts = nParts,
-      visible = visible, schema = schema, partitions = partStats,
-      file = null, deletes = deletes), branch)
+      snapshotId = 0L, nParts = nParts,
+      visible = visible, schema = schema, partitions = Nil,
+      file = null, deletes = deletes)
+    val partStats = mergeStats(baseStats, runStats(spark, path, m, runId))
+    publish(path, m.copy(snapshotId = partStats.foldLeft(0L)(_ ^ _.h),
+      partitions = partStats), branch)
   }
 
   /** MERGE INTO-style keyed upsert (Iceberg's copy-on-write row-level
@@ -359,7 +363,7 @@ object TripleSink {
       del.drop("part_id").write.mode(SaveMode.Overwrite)
         .parquet(s"$path/_deletes/run=$runId")
     writeRunData(add, path, runId, nParts)
-    val addStats = runStats(spark, path, runId, prior.schema)
+    val addStats = runStats(spark, path, prior, runId)
     if (addStats.isEmpty && delStats.isEmpty) {
       publish(path, prior.copy(seq = prior.seq + 1, runId = runId,
         operation = "delta-mor", file = null))
@@ -408,7 +412,7 @@ object TripleSink {
       .localCheckpoint(true)
     writeRunData(newData, path, runId, prior.nParts)
     publishSwap(path, prior, runId, affected,
-      runStats(spark, path, runId, prior.schema), op)
+      runStats(spark, path, prior, runId), op)
   }
 
   /** Publish a copy-on-write partition-swap commit: `affected`
@@ -488,11 +492,13 @@ object TripleSink {
     *    flip-flops (inserted then deleted) cancel in a final pass over
     *    only the changed rows.
     *
-    * Schema evolution: every file is read under the `to` snapshot's
-    * recorded schema (a column a file predates reads as null), matching
-    * what a reader of the `to` snapshot sees; an endpoint's
-    * delete-matched rows are read under that endpoint's schema plus the
-    * `to` columns, so its delete files match as its own reads do. */
+    * Schema evolution: every file set is read through the snapshot
+    * relation, narrowed to its directories ([[fileSet]]), under the `to`
+    * snapshot's recorded schema (a column a file predates reads as
+    * null), matching what a reader of the `to` snapshot sees; an
+    * endpoint's delete-matched rows are read under that endpoint's
+    * schema plus the `to` columns, and its delete rows under its own
+    * schema, so its delete files match as its own reads do. */
   def changes(spark: SparkSession, path: String, fromRunId: String,
               toRunId: String): DataFrame = {
     val all = manifests(path)
@@ -504,10 +510,12 @@ object TripleSink {
     val cols = mTo.schema
     val toCols = cols.map(c => col(c._1))
 
-    def fileSet(m: Manifest): Set[(String, Int)] = visiblePartDirs(path, m).toSet
+    def dirSet(m: Manifest): Set[(String, Int)] = visiblePartDirs(path, m).toSet
 
-    def readPairs(pairs: Set[(String, Int)]): DataFrame =
-      readDirs(spark, path, pairs.toSeq.sorted, cols).select(toCols: _*)
+    // `m` is the endpoint whose visibility holds `pairs`: its partition
+    // spec is the one those files were written under
+    def readPairs(m: Manifest, pairs: Set[(String, Int)]): DataFrame =
+      readVisible(spark, path, fileSet(m, pairs.toSeq.sorted, cols)).select(toCols: _*)
 
     // segments: (from → pred(replace_1)], (replace_1 → pred(replace_2)],
     // …, (replace_k → to]. Each replace equals its predecessor in
@@ -534,27 +542,27 @@ object TripleSink {
     // cancellation nets them. When both endpoints carry the same
     // delete state over the same scoped visibility, D(a) == D(b) and
     // the terms are skipped without being computed.
-    // fs = the endpoint's already-computed fileSet (avoids re-listing
+    // fs = the endpoint's already-computed dirSet (avoids re-listing
     // part dirs once per use on long-visibility tables)
     def scopedPairs(m: Manifest, fs: Set[(String, Int)]): Set[(String, Int)] = {
       val scoped = m.deletes.flatMap(_.scope).toSet
       fs.filter(p => scoped(p._1))
     }
     def deleteMatched(m: Manifest, pairs: Set[(String, Int)]): Option[DataFrame] =
-      if (pairs.isEmpty) None
-      else deleteRows(spark, path, m).map(dels =>
-        readDirs(spark, path, pairs.toSeq.sorted, unionSchema(m.schema, cols))
-          .join(broadcast(dels), deleteMatchCond(m.schema), "left_semi")
-          .select(toCols: _*))
+      if (pairs.isEmpty || m.deletes.isEmpty) None
+      else Some(readVisible(spark, path,
+          fileSet(m, pairs.toSeq.sorted, unionSchema(m.schema, cols)))
+        .join(broadcast(deleteFrame(spark, path, m)), deleteMatchCond(m.schema), "left_semi")
+        .select(toCols: _*))
 
     var deleteTerms = false
     val (insSegs, delSegs) = segs.map { case (a, b) =>
-      val fa = fileSet(a)
-      val fb = fileSet(b)
+      val fa = dirSet(a)
+      val fb = dirSet(b)
       val removed = fa -- fb
       val added = fb -- fa
-      val oldRows = readPairs(removed)
-      val newRows = readPairs(added)
+      val oldRows = readPairs(a, removed)
+      val newRows = readPairs(b, added)
       // the diff shuffle runs only when files changed on BOTH sides
       // (merge/overwrite): a pure-append segment's inserts are exactly
       // the added files' rows and its delete side is the (empty) old
@@ -574,7 +582,7 @@ object TripleSink {
     }.unzip
 
     val (insNet, delNet) =
-      if (segs.isEmpty) (readPairs(Set.empty), readPairs(Set.empty))
+      if (segs.isEmpty) (readPairs(mTo, Set.empty), readPairs(mTo, Set.empty))
       else {
         val insAll = insSegs.reduce(_ unionByName _)
         val delAll = delSegs.reduce(_ unionByName _)
@@ -702,15 +710,18 @@ object TripleSink {
       manifests(path, Some(n)).lastOption.map(m => n -> m.runId))
 
   /** Branches 5 of 6 — publish a branch's staged work onto main
-    * (Iceberg's `fast_forward`): main's head must still be the
-    * branch's fork point — a DIVERGED main fails loudly (merging
-    * diverged chains is a semantic decision, not a ref move) — and the
-    * branch head's state (visibility, schema, stats, deletes) becomes
-    * one new main commit tagged `fast-forward`, carrying the head's
-    * runId so [[readAsOf]] time travel works on main afterwards. No
-    * data file is read or moved. A branch with nothing staged is a
-    * no-op. The branch stays open (drop it separately); its runs stay
-    * live until then. */
+    * (Iceberg's `fast_forward`): main's head must be an ancestor of the
+    * branch head — the fork point, or an earlier publish of one of the
+    * branch's own commits (run ids are table-global, so a main commit
+    * bearing a branch commit's runId can only be its publish) — so a
+    * branch can be published again after staging more. A DIVERGED main
+    * (any other commit at its head) fails loudly: merging diverged
+    * chains is a semantic decision, not a ref move. The branch head's
+    * state (visibility, schema, stats, deletes) becomes one new main
+    * commit tagged `fast-forward`, carrying the head's runId so
+    * [[readAsOf]] time travel works on main afterwards. No data file is
+    * read or moved. A branch with nothing staged is a no-op. The branch
+    * stays open (drop it separately); its runs stay live until then. */
   def fastForward(path: String, name: String): Unit = {
     validateRefName("branch", name)
     val bAll = manifests(path, Some(name))
@@ -720,13 +731,15 @@ object TripleSink {
     if (head.seq == base.seq) return // nothing staged
     val main = manifests(path)
     if (main.lastOption.exists(_.runId == head.runId)) return // already published (idempotent)
-    require(main.nonEmpty && main.last.seq == base.seq &&
-        main.last.runId == base.runId,
+    val ancestor = main.lastOption.exists(h =>
+      (h.seq == base.seq && h.runId == base.runId) ||
+        bAll.tail.exists(_.runId == h.runId))
+    require(ancestor,
       s"main has advanced since branch '$name' forked (main head seq=" +
         s"${main.lastOption.map(_.seq).getOrElse(-1)}/run_id=" +
         s"${main.lastOption.map(_.runId).getOrElse("-")}; fork point seq=" +
-        s"${base.seq}/run_id=${base.runId}) - fast-forward requires a " +
-        "non-diverged main")
+        s"${base.seq}/run_id=${base.runId}) - fast-forward requires main's " +
+        "head to be the fork point or a publish of this branch's commits")
     require(!main.exists(_.runId == head.runId),
       s"run_id=${head.runId} already committed on main")
     publish(path, head.copy(seq = main.last.seq + 1,
@@ -1058,8 +1071,8 @@ object TripleSink {
     }.toSet
 
   /** Concrete (run, part_id) directories a snapshot's visibility covers
-    * — the one resolver every reader, the changelog's file diff, the
-    * partition swap and the DSv2 planner go through. */
+    * — the one resolver behind the DSv2 planner (so every read), the
+    * changelog's file diff, the partition swap and [[filesDf]]. */
   private[sources] def visiblePartDirs(path: String,
                                        m: Manifest): Seq[(String, Int)] =
     m.visible.flatMap { rv =>
@@ -1099,10 +1112,11 @@ object TripleSink {
       .parquet(s"$path/data/run=$runId")
 
   /** The equality-delete match: every schema column null-safe-equal to
-    * its `del_`-prefixed counterpart, scoped to the runs visible when
-    * the delete committed. Only the changelog's delete terms use it:
-    * they need the rows a delete DOES match, which no snapshot read
-    * yields. Snapshot reads apply the same match in the DSv2 reader
+    * its `del_`-prefixed counterpart in [[deleteFrame]], scoped to the
+    * runs visible when the delete committed (`del_scope`). Only the
+    * changelog's delete terms use it: they need the rows a delete DOES
+    * match, which no snapshot read yields. Snapshot reads apply the
+    * same match to the same [[deleteRows]] in the DSv2 reader
     * ([[graft.sources.v2.MorReaderFactory]]). */
   private def deleteMatchCond(schema: Seq[(String, String)]): Column =
     schema.map { case (n, _) => col(n) <=> col(s"del_$n") }
@@ -1386,49 +1400,37 @@ object TripleSink {
     }
   }
 
-  /** Post-write stats over ONE run's directory — the incremental unit
-    * — reading only the core columns of the `schema` the run was
-    * written with. An all-filtered-out commit writes a _SUCCESS-only
-    * directory; its stats are simply empty. */
-  private def runStats(spark: SparkSession, path: String, run: String,
-                       schema: Seq[(String, String)]): Seq[PartStat] = {
+  /** Post-write stats over ONE run's directories — the incremental
+    * unit — read through the snapshot relation of `m`, the manifest the
+    * commit holds, narrowed to the run ([[fileSet]]); only the core
+    * columns and part_id are decoded. An all-filtered-out commit writes
+    * a _SUCCESS-only directory; its stats are simply empty. */
+  private def runStats(spark: SparkSession, path: String, m: Manifest,
+                       run: String): Seq[PartStat] = {
     val dirs = partsOnDisk(path, run).map(run -> _)
     if (dirs.isEmpty) Nil
-    else computeStats(readDirs(spark, path, dirs, schema.filter(c => CoreCols.contains(c._1))))
+    else computeStats(readVisible(spark, path, fileSet(m, dirs, m.schema)))
   }
 
-  /** The reader of raw file sets — a run's data for its stats, the
-    * changelog's file diff, delete files: directories `dirs` under
-    * `base`, decoded under a recorded `schema`. Snapshot reads go
-    * through [[readVisible]] instead. The schema is given, never
-    * inferred, so planning reads no parquet footer and starts no Spark
-    * job, and a column a file predates (schema evolution) reads as
-    * null in Spark's own reader. A `key=value` directory level below
-    * `base` becomes a column, typed by `schema` when it names it. */
-  private def readFiles(spark: SparkSession, base: String, dirs: Seq[String],
-                        schema: Seq[(String, String)]): DataFrame =
-    spark.read.schema(structOf(schema)).option("basePath", base)
-      .parquet(dirs.map(d => s"$base/$d"): _*)
-
-  /** (run, part_id) data directories under a recorded `schema`, plus
-    * the `run_id` column the write path embeds and `part_id` from the
-    * directory name; no directories give an empty frame of that
-    * shape. */
-  private def readDirs(spark: SparkSession, path: String, dirs: Seq[(String, Int)],
-                       schema: Seq[(String, String)]): DataFrame = {
-    val full = schema :+ ("run_id" -> "string") :+ ("part_id" -> "int")
-    if (dirs.isEmpty)
-      spark.range(0).select(full.map { case (n, t) => lit(null).cast(t).as(n) }: _*)
-    else readFiles(spark, s"$path/data",
-      dirs.map { case (r, p) => s"run=$r/part_id=$p" }, full)
-      .drop("run") // the directory's run=<id>; run_id is the data column
-  }
+  /** A raw file set as a manifest: `m` narrowed to the (run, part_id)
+    * directories `dirs`, decoded under `schema`, with no delete file and
+    * no recorded row count (its scan reports only its size). Read by
+    * [[readVisible]] like any snapshot, so it plans from the listed
+    * files, starts no Spark job, and a column a file predates reads as
+    * null. `m`'s partition spec must be the one `dirs` were written
+    * under, as `subj` pruning relies on it. */
+  private def fileSet(m: Manifest, dirs: Seq[(String, Int)],
+                      schema: Seq[(String, String)]): Manifest =
+    m.copy(visible = dirs.map(_._1).distinct.map(r =>
+        RunVis(r, Some(dirs.collect { case (`r`, p) => p }))),
+      schema = schema, partitions = Nil, deletes = Nil, file = null)
 
   /** Read a snapshot: the DSv2 [[graft.sources.v2.TriplesTable]]
     * relation over manifest `m`, the one planner of a snapshot's
-    * visible rows. It reads the visible (run, partition) files under the
-    * snapshot's recorded schema, minus the rows its active delete files
-    * match, and prunes by pushed `subj`/`part_id` filters. A snapshot
+    * visible rows and of every raw file set ([[fileSet]]). It reads the
+    * visible (run, partition) files under the snapshot's recorded
+    * schema, minus the rows its active delete files match, and prunes
+    * by pushed `subj`/`part_id` filters. A snapshot
     * with no data — an all-rows-filtered commit's _SUCCESS-only run
     * dir, or a delta that retracted everything — reads as an EMPTY
     * frame under the recorded schema, not an error: an empty table must
@@ -1438,20 +1440,38 @@ object TripleSink {
     graftbridge.ofRows(spark, DataSourceV2Relation.create(
       new TriplesTable(path, m), None, None))
 
-  /** Rows of a snapshot's delete files under `del_`-prefixed names,
-    * each carrying the scope of its delete run — every delete directory
-    * in one read, decoded under the snapshot's recorded schema like its
-    * data (a column added after a delete committed reads as null, as it
-    * does in the older runs the delete scopes) — for the DSv2 reader and
+  /** The rows of each of a snapshot's delete runs, decoded on the
+    * driver under the snapshot's recorded schema (a column added after a
+    * delete committed reads as null, as it does in the older runs the
+    * delete scopes) by the parquet reader the snapshot scan uses, from
+    * the files [[parquetFiles]] lists: no Spark job. Read by the DSv2
+    * scan ([[graft.sources.v2.TriplesScan]]) and, as [[deleteFrame]], by
     * the changelog's delete terms. */
   private[sources] def deleteRows(spark: SparkSession, path: String,
-                                  m: Manifest): Option[DataFrame] =
-    if (m.deletes.isEmpty) None
+                                  m: Manifest): Seq[(DeleteVis, Seq[InternalRow])] =
+    if (m.deletes.isEmpty) Nil
     else {
-      val scopes = typedlit(m.deletes.map(d => d.run -> d.scope).toMap)
-      Some(readFiles(spark, s"$path/_deletes", m.deletes.map(d => s"run=${d.run}"),
-          m.schema :+ ("run" -> "string"))
-        .select(m.schema.map { case (n, _) => col(n).as(s"del_$n") } :+
-          element_at(scopes, col("run")).as("del_scope"): _*))
+      val factory = graftbridge.parquetReaderFactory(spark, m.dataSchema,
+        m.dataSchema, new StructType())
+      m.deletes.map { d =>
+        val files = parquetFiles(root(path).resolve("_deletes").resolve(s"run=${d.run}"))
+          .map(TriplesTable.split(_, InternalRow.empty))
+        val reader = factory.createReader(FilePartition(0, files.toArray))
+        try d -> Iterator.continually(reader).takeWhile(_.next()).map(_.get().copy()).toList
+        finally reader.close()
+      }
     }
+
+  /** [[deleteRows]] as a local relation under `del_`-prefixed names,
+    * each row carrying its delete run's scope as `del_scope` — the
+    * shape [[deleteMatchCond]] joins. */
+  private def deleteFrame(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    val schema = StructType(m.dataSchema.map(f => f.copy(name = s"del_${f.name}")) :+
+      StructField("del_scope", ArrayType(StringType)))
+    val rows = deleteRows(spark, path, m).flatMap { case (d, rs) =>
+      val scope = new GenericArrayData(d.scope.map(UTF8String.fromString))
+      rs.map(r => InternalRow.fromSeq(r.toSeq(m.dataSchema) :+ scope))
+    }
+    graftbridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
 }

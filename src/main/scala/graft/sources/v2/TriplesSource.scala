@@ -5,8 +5,8 @@ import java.util.{Collections, OptionalLong, Set => JSet}
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Row, SparkSession, graftbridge => bridge}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{SparkSession, graftbridge => bridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -25,7 +25,7 @@ import graft.sources.TripleSink
   * snapshot table — the surface that makes the KG table a first-class
   * Spark relation instead of a library call:
   *
-  *   spark.read.format("graft.sources.v2.TriplesSource")
+  *   session.read.format("graft.sources.v2.TriplesSource")
   *     .option("path", table)
   *     .option("asOf", runId | "tag", name | "branch", name).load()
   *
@@ -51,7 +51,9 @@ import graft.sources.TripleSink
   *    math.
   *  - STATISTICS from the manifest: rows are the pruned partitions'
   *    recorded counts (already net of MOR deletes), size the planned
-  *    files' bytes — so a small view broadcasts in a join.
+  *    files' bytes — so a small view broadcasts in a join. A raw file
+  *    set (a manifest narrowed to some directories, which records no
+  *    counts) reports its size only.
   *  - SPLITS AS SPARK SIZES THEM: files are cut and packed by
   *    `FilePartition.maxSplitBytes`/`getFilePartitions`, as Spark's own
   *    file scans do; each `PartitionedFile` carries (run_id, part_id) as
@@ -61,10 +63,11 @@ import graft.sources.TripleSink
   *  - COLUMN PRUNING to the parquet read schema — except while MOR
   *    deletes are outstanding: then every data column is read, rows a
   *    delete matches are dropped, and the projection follows. Delete
-  *    rows come from [[TripleSink.deleteRows]] (collected once on the
-  *    driver) and match by null-safe equality on every schema column,
-  *    scoped by each row's run, with doubles normalized (NaN, -0.0) as
-  *    `<=>` compares them.
+  *    rows come from [[TripleSink.deleteRows]] (decoded once per scan on
+  *    the driver by the same parquet reader, with no Spark job) and
+  *    match by null-safe equality on every schema column, scoped by each
+  *    row's run through the delete run's recorded scope, with doubles
+  *    normalized (NaN, -0.0) as `<=>` compares them.
   */
 final class TriplesSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -86,6 +89,13 @@ object TriplesTable {
   /** Per-file constants, read from the split rather than the file. */
   private[v2] val PartCols = StructType(Seq(
     StructField("run_id", StringType), StructField("part_id", IntegerType)))
+
+  /** All of parquet file `f` as a split, with partition `values`. */
+  private[sources] def split(f: java.nio.file.Path, values: InternalRow): PartitionedFile = {
+    val len = Files.size(f)
+    PartitionedFile(values, SparkPath.fromPath(new HPath(f.toUri)), 0L, len,
+      Array.empty[String], Files.getLastModifiedTime(f).toMillis, len)
+  }
 }
 
 final class TriplesTable(path: String, m: TripleSink.Manifest)
@@ -160,10 +170,7 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
     TripleSink.dataFiles(path, TripleSink.visiblePartDirs(path, m)
         .filter { case (_, p) => partFilter.forall(_.contains(p)) })
       .map { case (run, pid, f) =>
-        val len = Files.size(f)
-        PartitionedFile(InternalRow(UTF8String.fromString(run), pid),
-          SparkPath.fromPath(new HPath(f.toUri)), 0L, len, Array.empty[String],
-          Files.getLastModifiedTime(f).toMillis, len)
+        TriplesTable.split(f, InternalRow(UTF8String.fromString(run), pid))
       }.toArray
 
   /** Splits sized and packed as Spark's own file scans do: files cut at
@@ -188,41 +195,38 @@ final class TriplesScan(path: String, m: TripleSink.Manifest,
     FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
   }
 
+  /** Rows are the recorded counts of the pruned partitions; a manifest
+    * that records none (a raw file set) reports its size only. */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong = OptionalLong.of(files.map(_.length).sum)
-    override def numRows(): OptionalLong = OptionalLong.of(m.partitions
-      .filter(p => partFilter.forall(_.contains(p.partId))).map(_.rows).sum)
+    override def numRows(): OptionalLong =
+      if (m.partitions.isEmpty) OptionalLong.empty()
+      else OptionalLong.of(m.partitions
+        .filter(p => partFilter.forall(_.contains(p.partId))).map(_.rows).sum)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
-  /** Outstanding delete rows, collected once per scan; None when there
-    * are none. */
-  private lazy val deletes: Option[(StructType, Array[Row])] =
-    TripleSink.deleteRows(SparkSession.active, path, m)
-      .map(d => (d.schema, d.collect())).filter(_._2.nonEmpty)
+  /** Outstanding delete keys by the data run they apply to, read once
+    * per scan; empty when there are none. */
+  private lazy val deletes: Map[UTF8String, Set[UnsafeRow]] = {
+    val key = MorReaderFactory.keyProjection(dataSchema)
+    TripleSink.deleteRows(SparkSession.active, path, m).flatMap { case (d, rows) =>
+      val keys = rows.map(key(_).copy()).toSet
+      d.scope.map(UTF8String.fromString(_) -> keys)
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+  }
 
   /** Built once per scan: planning asks more than one `BatchScanExec`
     * over this scan for its factory, and each would otherwise broadcast
     * the Hadoop conf again. */
   private lazy val readerFactory: PartitionReaderFactory = {
     val spark = SparkSession.active
-    deletes match {
-      case None =>
-        bridge.parquetReaderFactory(spark, dataSchema, readData, readParts)
-      case Some((delSchema, rows)) =>
-        val key = MorReaderFactory.keyProjection(dataSchema)
-        val toInternal = CatalystTypeConverters.createToCatalystConverter(delSchema)
-        val n = dataSchema.length
-        val byRun: Map[UTF8String, Set[UnsafeRow]] = rows.toSeq.flatMap { r =>
-          val k = key(toInternal(r).asInstanceOf[InternalRow]).copy()
-          r.getSeq[String](n).map(UTF8String.fromString(_) -> k)
-        }.groupMap(_._1)(_._2).map { case (run, ks) => run -> ks.toSet }
-        new MorReaderFactory(
-          bridge.parquetReaderFactory(spark, dataSchema, dataSchema,
-            TriplesTable.PartCols),
-          dataSchema, byRun, readSchema().fieldNames)
-    }
+    if (deletes.isEmpty)
+      bridge.parquetReaderFactory(spark, dataSchema, readData, readParts)
+    else new MorReaderFactory(
+      bridge.parquetReaderFactory(spark, dataSchema, dataSchema, TriplesTable.PartCols),
+      dataSchema, deletes, readSchema().fieldNames)
   }
 }
 

@@ -8,9 +8,8 @@ object PlanAuditR5 {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
     val d = "/root/testdata/sf0.01"
-    // 1. z-ordered table: both filters must reach the parquet scan
+    // z-ordered table: both filters must reach the parquet scan
     val zdir = java.nio.file.Files.createTempDirectory("audit-z").toString
     graft.sources.ZOrder.write(
       spark.read.parquet(s"$d/lineitem.parquet")
@@ -28,20 +27,6 @@ object PlanAuditR5 {
     println("ZORDER-PLAN-START")
     println(zplan.take(3000))
     println("ZORDER-PLAN-END")
-    // 2. merge()'s touched-partition read: the part_id filter must prune
-    //    partitions of the partitioned run dir (PartitionFilters)
-    val tdir = java.nio.file.Files.createTempDirectory("audit-m").toString
-    val base = (0 until 100).map(i => (s"s$i", "p", s"v$i"))
-      .toDF("subj", "pred", "obj")
-    graft.sources.TripleSink.write(base, tdir, "r1", nParts = 8)
-    val read = graft.sources.TripleSink.read(spark, tdir)
-      .filter(col("part_id").isin(1, 3))
-    read.collect()
-    val scan = read.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    println(s"SINK partitionFilters=${scan.partitionFilters.nonEmpty} " +
-      s"selected=${scan.selectedPartitions.partitionCount} of 8")
     spark.stop()
   }
 }

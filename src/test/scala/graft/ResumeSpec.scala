@@ -848,6 +848,40 @@ class ResumeSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] { TripleSink.fastForward(path, "exp") }
   }
 
+  test("branches: fastForward publishes a branch again after more staging; a main commit between rejects") {
+    import graft.sources.TripleSink
+    val path = Files.createTempDirectory("graft-sink-branch-ff2").toString
+    def frame(rows: (String, String, String)*) = rows.toDF("subj", "pred", "obj")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
+      df.select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
+
+    TripleSink.write(frame(("a", "p", "1")), path, "m1", nParts = 4)
+    TripleSink.createBranch(path, "wap", "m1")
+    TripleSink.writeToBranch(frame(("b", "p", "2")), path, "wap", "b1",
+      nParts = 4, append = true)
+    TripleSink.fastForward(path, "wap")
+    // main's head is now the publish of b1, a commit of the branch chain
+    TripleSink.writeToBranch(frame(("c", "p", "3")), path, "wap", "b2",
+      nParts = 4, append = true)
+    TripleSink.fastForward(path, "wap")
+    assert(TripleSink.snapshots(path).map(_._2) == Seq("m1", "b1", "b2"))
+    assert(rows(TripleSink.read(spark, path)) ==
+      Set(("a", "p", "1"), ("b", "p", "2"), ("c", "p", "3")))
+    assert(rows(TripleSink.readAsOf(spark, path, "b1")) ==
+      Set(("a", "p", "1"), ("b", "p", "2")))
+    assert(TripleSink.statsAudit(spark, path))
+
+    // a main commit between two publishes diverges main: still rejected
+    TripleSink.writeToBranch(frame(("d", "p", "4")), path, "wap", "b3",
+      nParts = 4, append = true)
+    TripleSink.write(frame(("e", "p", "5")), path, "m2", nParts = 4, append = true)
+    val e = intercept[IllegalArgumentException](TripleSink.fastForward(path, "wap"))
+    assert(e.getMessage.contains("main has advanced"), e.getMessage)
+    assert(TripleSink.snapshots(path).map(_._2) == Seq("m1", "b1", "b2", "m2"))
+    assert(rows(TripleSink.read(spark, path)) ==
+      Set(("a", "p", "1"), ("b", "p", "2"), ("c", "p", "3"), ("e", "p", "5")))
+  }
+
   test("run ids stay reserved while their data is VISIBLE, even after their manifest expired") {
     import graft.sources.TripleSink
     val path = Files.createTempDirectory("graft-sink-reuse").toString

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.TripleSink
 
 /** Every snapshot read decodes its files under the schema the
-  * snapshot's manifest records: planning a read starts no Spark job,
-  * delete files written before a column was added still match, and a
+  * snapshot's manifest records: planning a read (or a changelog) starts
+  * no Spark job, a merge-on-read collect() is one job, delete files
+  * written before a column was added still match, and a
   * commit that would retype a recorded column is refused when it is
   * made. */
 class SnapshotSchemaSpec extends AnyFunSuite {
@@ -42,38 +43,42 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     path
   }
 
-  /** Plans read, readAsOf(`asOf`) and lookupSubjects(`probes`) of the
-    * table under `path` and asserts that none starts a Spark job before
-    * an action (and that each then yields rows). */
-  private def assertNoPlanningJobs(path: String, asOf: String, probes: Seq[String]): Unit = {
+  /** The Spark jobs `body` starts, with its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
     val sc = spark.sparkContext
-    val group = "snapshot-schema-plan"
+    val group = "snapshot-schema-jobs"
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           jobs.incrementAndGet()
     }
+    graftbus.drain(sc)
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "planning only")
+    sc.setJobGroup(group, "counted")
     try {
-      Seq[(String, () => DataFrame)](
-        "read" -> (() => TripleSink.read(spark, path)),
-        "readAsOf" -> (() => TripleSink.readAsOf(spark, path, asOf)),
-        "lookupSubjects" -> (() => TripleSink.lookupSubjects(spark, path, probes))
-      ).foreach { case (name, plan) =>
-        graftbus.drain(sc)
-        jobs.set(0)
-        val df = plan()
-        graftbus.drain(sc)
-        assert(jobs.get == 0, s"$name started ${jobs.get} Spark job(s) before an action")
-        assert(df.count() > 0)
-      }
+      val out = body
+      graftbus.drain(sc)
+      (jobs.get, out)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Plans read, readAsOf(`asOf`) and lookupSubjects(`probes`) of the
+    * table under `path` and asserts that none starts a Spark job before
+    * an action (and that each then yields rows). */
+  private def assertNoPlanningJobs(path: String, asOf: String, probes: Seq[String]): Unit =
+    Seq[(String, () => DataFrame)](
+      "read" -> (() => TripleSink.read(spark, path)),
+      "readAsOf" -> (() => TripleSink.readAsOf(spark, path, asOf)),
+      "lookupSubjects" -> (() => TripleSink.lookupSubjects(spark, path, probes))
+    ).foreach { case (name, plan) =>
+      val (jobs, df) = jobsOf(plan())
+      assert(jobs == 0, s"$name started $jobs Spark job(s) before an action")
+      assert(df.count() > 0)
+    }
 
   test("read, readAsOf and lookupSubjects plan from the manifest: no Spark job before an action") {
     val path = evolvedMorTable()
@@ -92,6 +97,38 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     assert(TripleSink.filesDf(spark, path).select("run_id", "part_id")
       .distinct().count() == 64)
     assertNoPlanningJobs(path, "r2", Seq("e1", "e401"))
+  }
+
+  test("a merge-on-read collect() is one Spark job: delete files are read on the driver") {
+    val path = evolvedMorTable()
+    val expected = Set[Row4](("c", "q", "3", None), ("e", "p", "5", Some(8L)))
+    Seq[((String, () => DataFrame), Set[Row4])](
+      "read" -> (() => TripleSink.read(spark, path)) -> expected,
+      "lookupSubjects" -> (() => TripleSink.lookupSubjects(spark, path, Seq("b", "e"))) ->
+        Set[Row4](("e", "p", "5", Some(8L))),
+      "DSv2 view" -> (() => spark.read.format("graft.sources.v2.TriplesSource")
+        .option("path", path).load()) -> expected
+    ).foreach { case ((name, plan), want) =>
+      val df = plan()
+      val (jobs, got) = jobsOf(rows4(df))
+      assert(got == want, name)
+      assert(jobs == 1, s"$name: collect() started $jobs Spark jobs")
+    }
+  }
+
+  test("changes over more than 32 visible directories and a merge-on-read delete: no job before an action") {
+    val path = Files.createTempDirectory("graft-snapshot-many-dirs-cdc").toString
+    def frame(lo: Int, hi: Int) =
+      (lo until hi).map(i => (s"e$i", "p", s"$i")).toDF("subj", "pred", "obj")
+    TripleSink.write(frame(0, 400), path, "r1", nParts = 32)
+    TripleSink.write(frame(400, 800), path, "r2", nParts = 32, append = true)
+    TripleSink.applyDeltaMOR(spark, path, frame(0, 0),
+      Seq(("e5", "p", "5"), ("e405", "p", "405")).toDF("subj", "pred", "obj"), "d1")
+    val (jobs, chg) = jobsOf(TripleSink.changes(spark, path, "r1", "d1"))
+    assert(jobs == 0, s"changes started $jobs Spark job(s) before an action")
+    val got = chg.select("_change_type", "subj").as[(String, String)].collect()
+    assert(got.sorted.toSeq == (("delete", "e5") +:
+      (400 until 800).filter(_ != 405).map(i => ("insert", s"e$i"))).sorted)
   }
 
   test("a delete written before an append added a column still removes its row: library, DSv2 and changes") {
