@@ -1,10 +1,10 @@
 package graft
 
-/** Host-contention meter backing the round-4 pre-registered scaling
-  * quiet-gate (graft.Scale; BENCH.md) and the per-run calibration
-  * fields in graft.Bench's output. This container's /proc/stat is the
-  * HOST's CPU accounting, so two foreign-load signals are directly
-  * measurable rather than inferred from timing variance:
+/** Host-contention meter: the one quiet gate of graft.Bench and
+  * graft.Scale, and the calibration fields of their JSON (and of
+  * kgbench's). This container's /proc/stat is the HOST's CPU
+  * accounting, so two foreign-load signals are directly measurable
+  * rather than inferred from timing variance:
   *
   *  - **foreign busy%**: non-idle share of all host CPUs over an
   *    interval in which THIS process runs nothing — any busy is other
@@ -13,6 +13,11 @@ package graft
   *    have runnable threads, so it is probed DURING a short
   *    multi-thread spin (an idle box shows zero steal even under a
   *    saturated hypervisor) and recorded during each timed pass.
+  *
+  * [[probe]] takes both signals the way the round-4 protocol
+  * registered them (BENCH.md): a 3 s idle window, then a 2 s × 8-thread
+  * spin. [[quiet]] is the registered verdict over them: foreign busy
+  * ≤ 8 %, probe steal ≤ 2 %, and steal during the timed run ≤ 0.35 %.
   *
   * Why it exists: round 3's scaling-gate failure was diagnosed as host
   * contention (one protocol round measured efficiency 1.032 — four
@@ -45,6 +50,24 @@ object HostMeter {
     val tot = math.max(1L, b.total - a.total).toDouble
     (r, 100.0 * (b.busy - a.busy) / tot, 100.0 * (b.steal - a.steal) / tot)
   }
+
+  /** Host signals before a timed run: `busy` and `idleSteal` over the
+    * idle window, `steal` under the spin. */
+  final case class Probe(busy: Double, idleSteal: Double, steal: Double)
+
+  /** The registered pre-run probe: 3 s asleep, then 2 s × 8 threads
+    * spinning. */
+  def probe(): Probe = {
+    val (_, busy, idleSteal) = during(Thread.sleep(3000))
+    val (_, _, steal) = during(spin(8, 2000))
+    Probe(busy, idleSteal, steal)
+  }
+
+  /** The registered verdict: accept iff foreign busy ≤ 8 %, probe steal
+    * ≤ 2 % and steal over the timed run ≤ 0.35 % (a gate before any run
+    * passes 0). */
+  def quiet(p: Probe, runSteal: Double = 0.0): Boolean =
+    p.busy <= 8.0 && p.steal <= 2.0 && runSteal <= 0.35
 
   /** Spin `threads` busy threads for `millis` — the probe load under
     * which steal becomes observable. The mix result is published to a

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import graft.sources.Pages
 
 /** Materializes a synthesized pages table to parquet so benchmarks can
@@ -14,13 +14,7 @@ import graft.sources.Pages
 object PagesGen {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, replicate, heavy, outPath) = args
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     import org.apache.spark.sql.functions._
     Pages.synthesize(spark, sfDir, replicate.toInt, heavy.toInt)
       .toDF()

@@ -87,7 +87,7 @@ object Pipeline {
         }, Some(extracted))
         val rawDs = raw.drop("part_id").as[RawTripleRow]
         val ments = Stages.mentions(tagged)
-        val nodes = Linking.nodesFromTriples(rawDs)
+        val nodes = Linking.nodesFromTripleArgs(rawDs.toDF())
         val rawFp = lin.globalFingerprint(raw)
         val canon = lin.runGlobal("canon_map",
           Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold), Some(rawFp))
@@ -100,9 +100,8 @@ object Pipeline {
     }
   }
 
-  /** Convenience: synthesize pages from a testdata dir and run direct. */
+  /** Convenience: synthesize pages from a testdata dir and run them. */
   def runOnTestdata(spark: SparkSession, sfDir: String,
-                    replicate: Int = 1, cfg: Config = Config(),
-                    heavy: Int = 1): Outputs =
-    run(spark, Pages.synthesize(spark, sfDir, replicate, heavy), cfg)
+                    cfg: Config = Config()): Outputs =
+    run(spark, Pages.synthesize(spark, sfDir), cfg)
 }

@@ -1,39 +1,25 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-efficiency evidence for the north rule ("throughput scaling
-  * efficiency ≥ 0.8 between N and 4N executors", BASELINE.json).
+  * efficiency ≥ 0.8 between N and 4N executors", BASELINE.json), by the
+  * multi-JVM protocol pre-registered in BENCH.md. The gate is closed
+  * (recorded unmeetable on the shared host after two pre-registered
+  * failures); this main reproduces the record and is not to be re-run
+  * against it.
   *
-  * No real multi-node cluster exists in this sandbox, so the flagship
-  * job runs at two cluster sizes on this box, in three modes:
+  * No real multi-node cluster exists in this sandbox, so each round
+  * times 1 × local[N] JVM against 4 CONCURRENT local[N] JVMs, each a
+  * separate OS process with its own pre-touched 6 GB heap — the
+  * single-box proxy for "N executors vs 4N executors" (a cluster's
+  * executors are separate JVMs on separate heaps). Every child runs a
+  * warm-up over 10 % of the pages, then ONE timed flagship pass over the
+  * same fixed parquet pages (graft.PagesGen). A round's efficiency is
+  * t1 / max(t4_i); the graded statistic is the median over rounds.
+  * Per-pass numbers go to stderr, the final JSON line to stdout.
   *
-  *  - "multijvm" (headline): 1 × local[8] JVM vs 4 CONCURRENT local[8]
-  *    JVMs, each a separate OS process with its own heap — the faithful
-  *    single-box proxy for "N executors vs 4N executors" (a cluster's
-  *    executors are separate JVMs on separate heaps; production Spark
-  *    runs several medium executors per node for exactly this reason).
-  *    Each JVM processes the same fixed parquet input; efficiency =
-  *    aggregate throughput of the 4-JVM pass over 4× the 1-JVM
-  *    throughput = T_1 / max(T_i). Per-pass numbers go to stderr, the
-  *    final JSON line to stdout.
-  *  - "local": local[N] vs local[4N] threads in ONE JVM — the
-  *    prescribed thread-scaling proxy; bounded by single-JVM
-  *    stop-the-world GC growing with mutator-thread count plus the
-  *    shared memory bus (terms that do not exist between cluster
-  *    nodes); reported alongside the headline.
-  *  - "cluster": local-cluster[N,8,mem] vs local-cluster[4N,8,mem]
-  *    (separate executor JVMs but shared bus/disk; reported for
-  *    completeness).
-  *
-  * Same input at both sizes; spark.sql.shuffle.partitions scales with
-  * total cores. Results: BENCH.md / BASELINE.md.
-  *
-  * Usage:
-  *   runMain graft.Scale [sfDir] [replicate] [N] [rounds]
-  *                       [local|cluster|multijvm] [heavy] [pagesParquet]
-  * (multijvm requires pagesParquet — produce it with graft.PagesGen.)
+  * Usage: runMain graft.Scale <N> <rounds> <pagesParquet>
   */
 object Scale {
 
@@ -49,73 +35,29 @@ object Scale {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** `executors = 0` → local[cores] (threads in one JVM). Otherwise
-    * local-cluster[executors, cores, mem] — real separate executor
-    * JVMs. */
-  private def newSession(executors: Int, cores: Int): SparkSession = {
-    val totalCores = math.max(1, executors) * cores
-    val execMemMb = 6144
-    val b = SparkSession.builder()
-      .appName(s"graft-scale-${executors}x$cores")
-      .config("spark.sql.shuffle.partitions", totalCores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val withMaster =
-      if (executors <= 0) b.master(s"local[$cores]")
-      else b.master(s"local-cluster[$executors,$cores,$execMemMb]")
-        .config("spark.executor.memory", s"${execMemMb}m")
-        .config("spark.executor.extraClassPath",
-          sys.props.getOrElse("graft.classes", "/root/repo/target/scala-2.13/classes"))
-        .config("spark.executor.extraJavaOptions",
-          "-XX:+UseParallelGC -XX:ParallelGCThreads=8")
-    val s = withMaster.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** One flagship pass: pages → extract → tag → triples → link → CC →
-    * rewrite. ONE action only — a second count would re-run the narrow
-    * chain and distort the timing. Page count is docs × replicate. */
-  private def flagship(spark: SparkSession, sfDir: String, replicate: Int,
-                       heavy: Int, pagesPath: Option[String]): (Long, Long) = {
-    val cfg = Pipeline.Config(nParts = spark.sparkContext.defaultParallelism * 2)
-    val out = pagesPath match {
-      case Some(path) =>
-        import spark.implicits._
-        Pipeline.run(spark, spark.read.parquet(path).as[graft.sources.PageRow], cfg)
-      case None => Pipeline.runOnTestdata(spark, sfDir, replicate, cfg, heavy)
-    }
-    val nTriples = out.triples.count()
-    val nPages = pagesPath match {
-      case Some(path) => spark.read.parquet(path).count() // metadata-only
-      case None => spark.read.parquet(s"$sfDir/documents.parquet").count() * replicate
-    }
-    (nPages, nTriples)
-  }
-
-  /** Child-JVM entry (multijvm mode): a warm-up pass over ~10% of the
-    * corpus (cluster executors at the 100 TB design point run
-    * JIT-warm for hours — steady state is the honest regime, and both
-    * cluster sizes get the identical warm-up), then ONE timed full
-    * flagship pass; writes "sec pages triples" to outFile. */
+  /** Child-JVM entry: a warm-up pass over ~10% of the corpus (cluster
+    * executors at the 100 TB design point run JIT-warm for hours —
+    * steady state is the honest regime, and both cluster sizes get the
+    * identical warm-up), then ONE timed full flagship pass (one action:
+    * a second count would re-run the narrow chain); writes
+    * "sec pages triples" to outFile. */
   private def runChild(pagesPath: String, cores: Int, outFile: String): Unit = {
-    val spark = newSession(0, cores)
+    val spark = LocalSession(cores)
     try {
       import spark.implicits._
       val cfg = Pipeline.Config(nParts = spark.sparkContext.defaultParallelism * 2)
+      def pages = spark.read.parquet(pagesPath).as[graft.sources.PageRow]
       // warm-up size is corpus-relative (a fixed row count would be the
       // WHOLE corpus for heavy-page inputs with fewer, larger rows);
       // the count is metadata-only on parquet
-      val nRows = spark.read.parquet(pagesPath).count()
-      val warm = spark.read.parquet(pagesPath)
-        .limit(math.max(1L, nRows / 10).min(Int.MaxValue.toLong).toInt)
-        .as[graft.sources.PageRow]
-      Pipeline.run(spark, warm, cfg).triples.count()
+      val nRows = pages.count()
+      Pipeline.run(spark,
+        pages.limit(math.max(1L, nRows / 10).min(Int.MaxValue.toLong).toInt), cfg)
+        .triples.count()
       val t0 = System.nanoTime()
-      val (p, t) = flagship(spark, "", 1, 1, Some(pagesPath))
+      val nTriples = Pipeline.run(spark, pages, cfg).triples.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Files.writeString(Paths.get(outFile), f"$sec%.3f $p $t")
+      Files.writeString(Paths.get(outFile), f"$sec%.3f $nRows $nTriples")
     } finally spark.stop()
   }
 
@@ -136,208 +78,148 @@ object Scale {
     pb.start()
   }
 
+  /** `count` concurrent child JVMs, each running the identical flagship
+    * over `path`; returns (per-child secs, wall sec). */
+  private def pass(path: String, n: Int, count: Int): (Array[Double], Double) = {
+    val files = (0 until count)
+      .map(i => Files.createTempFile(s"graft-scale-$count-$i", ".txt"))
+    val t0 = System.nanoTime()
+    // NOT pinned: taskset-pinning each child to its own core range was
+    // measured 35% SLOWER (child worker+GC+JIT threads exceed the core
+    // count; the OS's freedom to use a neighbor's momentarily-idle core
+    // is slack a cluster node also has for its own executor's threads)
+    val procs = files.map(f => forkChild(path, n, f.toString))
+    val exits = procs.map(_.waitFor())
+    val wall = (System.nanoTime() - t0) / 1e9
+    // fail LOUDLY with the child's log tail instead of emitting a
+    // benchmark JSON built on an empty result file
+    exits.zip(files).foreach { case (rc, f) =>
+      if (rc != 0) {
+        val logPath = Paths.get(f.toString + ".log")
+        val tail = if (Files.exists(logPath)) {
+          val lines = Files.readAllLines(logPath)
+          lines.subList(math.max(0, lines.size - 30), lines.size)
+            .toArray.mkString("\n")
+        } else "(no log)"
+        sys.error(s"scale child exited rc=$rc; log tail:\n$tail")
+      }
+    }
+    val secs = files.map(f => Files.readString(f).trim.split(" ")(0).toDouble)
+    files.foreach { f =>
+      Files.deleteIfExists(f)
+      Files.deleteIfExists(Paths.get(f.toString + ".log"))
+    }
+    (secs.toArray, wall)
+  }
+
+  /** QUIET-GATE before each pass (round-4 pre-registration): the
+    * [[HostMeter.probe]] must pass [[HostMeter.quiet]]; retry every 20 s
+    * and abort the protocol (an infrastructure error — a restart is
+    * allowed) after 15 min of waiting at any single gate. Returns the
+    * seconds waited. */
+  private def quietGate(tag: String): Double = {
+    val t0 = System.nanoTime()
+    var attempt = 1
+    var p = HostMeter.probe()
+    while (!HostMeter.quiet(p)) {
+      System.err.println(
+        f"[scale] gate busy ($tag) busy=${p.busy}%.1f%% steal=${p.steal}%.1f%% attempt=$attempt — waiting 20s")
+      if (System.nanoTime() - t0 > 15L * 60 * 1000000000L)
+        sys.error(s"quiet-gate deadline (15 min) exceeded at $tag — " +
+          "host never went quiet; protocol aborted (infrastructure " +
+          "error per pre-registration; a restart is permitted)")
+      Thread.sleep(20000)
+      attempt += 1
+      p = HostMeter.probe()
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    System.err.println(
+      f"[scale] gate OPEN ($tag) busy=${p.busy}%.1f%% steal=${p.steal}%.1f%% waited=$waited%.0fs")
+    waited
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("__child")) {
       runChild(args(1), args(2).toInt, args(3))
       return
     }
-
-    val sfDir = args.lift(0).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val replicate = args.lift(1).map(_.toInt).getOrElse(8)
-    val n = args.lift(2).map(_.toInt).getOrElse(8)
-    val trials = args.lift(3).map(_.toInt).getOrElse(2)
-    val mode = args.lift(4).getOrElse("local") // local | cluster | multijvm
-    // page-size multiplier: heavy>1 concatenates that many fixture docs
-    // per page (~250B * heavy), approximating real web-page text sizes
-    val heavy = args.lift(5).map(_.toInt).getOrElse(1)
-    // optional pre-materialized pages parquet (see graft.PagesGen):
-    // measures the pipeline over fixed on-disk input, the WARC shape
-    val pagesPath = args.lift(6)
-
-    if (mode == "multijvm") {
-      val path = pagesPath.getOrElse(
-        sys.error("multijvm mode needs a pagesParquet arg (graft.PagesGen)"))
-
-      /** `count` concurrent child JVMs, each running the identical
-        * flagship over `path`; returns (per-child secs, wall sec). */
-      def pass(count: Int): (Array[Double], Double) = {
-        val files = (0 until count)
-          .map(i => Files.createTempFile(s"graft-scale-$count-$i", ".txt"))
-        val t0 = System.nanoTime()
-        // NOT pinned: taskset-pinning each child to its own core range
-        // was measured 35% SLOWER (child worker+GC+JIT threads exceed
-        // the core count; the OS's freedom to use a neighbor's
-        // momentarily-idle core is slack a cluster node also has for
-        // its own executor's threads)
-        val procs = files.map(f => forkChild(path, n, f.toString))
-        val exits = procs.map(_.waitFor())
-        val wall = (System.nanoTime() - t0) / 1e9
-        // fail LOUDLY with the child's log tail instead of emitting a
-        // benchmark JSON built on an empty result file
-        exits.zip(files).foreach { case (rc, f) =>
-          if (rc != 0) {
-            val logPath = Paths.get(f.toString + ".log")
-            val tail = if (Files.exists(logPath)) {
-              val lines = Files.readAllLines(logPath)
-              lines.subList(math.max(0, lines.size - 30), lines.size)
-                .toArray.mkString("\n")
-            } else "(no log)"
-            sys.error(s"scale child exited rc=$rc; log tail:\n$tail")
-          }
-        }
-        val secs = files.map(f => Files.readString(f).trim.split(" ")(0).toDouble)
-        files.foreach { f =>
-          Files.deleteIfExists(f)
-          Files.deleteIfExists(Paths.get(f.toString + ".log"))
-        }
-        (secs.toArray, wall)
-      }
-
-      // Alternate 1-JVM and 4-JVM passes (fresh JVMs each pass → both
-      // sides equally JIT-cold). GRADED STATISTIC (round-4 protocol,
-      // pre-registered in BENCH.md before the run): the MEDIAN of
-      // per-round efficiencies t1_r / max(t4_r). Pairing each 1-JVM
-      // pass with its adjacent 4-JVM pass cancels slow box drift
-      // (thermal / page-cache state changes on a scale of hours, not
-      // the ~6 min of one round), and the median over the rounds
-      // absorbs outliers without min-style cherry-picking. Min-based
-      // numbers stay in the JSON as the round-2/3-comparable secondary.
-      //
-      // Round-4 variance controls (both pre-registered in BENCH.md;
-      // round 3 lost the gate to measured HOST contention, not engine
-      // inefficiency — one round's four concurrent JVMs each beat the
-      // lone JVM):
-      //  - QUIET-GATE before each pass: foreign busy ≤ 8% of host CPU
-      //    over a 3 s idle observation AND steal ≤ 2% during a
-      //    2 s × 8-thread spin probe; retry every 20 s, abort the
-      //    protocol (infrastructure error — restart allowed) after
-      //    15 min of waiting at any single gate.
-      //  - VOID RULE: a round in which hypervisor steal exceeded 3%
-      //    of host CPU during either timed pass is voided and re-run
-      //    (max 2 voids per round index; a third contaminated attempt
-      //    counts as measured). Steal is recorded per pass either way.
-      def quietGate(tag: String): Double = {
-        val deadline = System.nanoTime() + 15L * 60 * 1000000000L
-        val t0 = System.nanoTime()
-        var attempt = 0
-        while (true) {
-          attempt += 1
-          val (_, busyIdle, _) = HostMeter.during(Thread.sleep(3000))
-          val (_, _, stealProbe) = HostMeter.during(HostMeter.spin(8, 2000))
-          if (busyIdle <= 8.0 && stealProbe <= 2.0) {
-            val waited = (System.nanoTime() - t0) / 1e9
-            System.err.println(
-              f"[scale] gate OPEN ($tag) busy=$busyIdle%.1f%% steal=$stealProbe%.1f%% waited=$waited%.0fs")
-            return waited
-          }
-          System.err.println(
-            f"[scale] gate busy ($tag) busy=$busyIdle%.1f%% steal=$stealProbe%.1f%% attempt=$attempt — waiting 20s")
-          if (System.nanoTime() > deadline)
-            sys.error(s"quiet-gate deadline (15 min) exceeded at $tag — " +
-              "host never went quiet; protocol aborted (infrastructure " +
-              "error per pre-registration; a restart is permitted)")
-          Thread.sleep(20000)
-        }
-        0.0 // unreachable
-      }
-
-      // per kept round: (t1, s4, steal1, steal4, gateWaitSec)
-      val roundsBuf = collection.mutable.ArrayBuffer
-        .empty[(Double, Array[Double], Double, Double, Double)]
-      var voided = 0
-      var round = 1
-      while (round <= trials) {
-        var attempts = 0
-        var kept = false
-        while (!kept) {
-          attempts += 1
-          val w0 = quietGate(s"round $round 1-jvm")
-          val ((s1, w1), busy1, steal1) = HostMeter.during(pass(1))
-          System.err.println(
-            f"[scale] round=$round 1-jvm: child=${s1.head}%.1fs wall=$w1%.1fs busy=$busy1%.1f%% steal=$steal1%.2f%%")
-          val wG = quietGate(s"round $round 4-jvm")
-          val ((s4, w4), busy4, steal4) = HostMeter.during(pass(4))
-          System.err.println(
-            f"[scale] round=$round 4-jvm: children=${s4.map(x => f"$x%.1f").mkString(",")}s wall=$w4%.1fs busy=$busy4%.1f%% steal=$steal4%.2f%%")
-          // v2 void cap: ONE re-run per round index (v1's two-re-run cap
-          // met chronic burst steal and blew the session wall-clock —
-          // see BENCH.md round-4 v1 abort record)
-          if ((steal1 > 3.0 || steal4 > 3.0) && attempts <= 1) {
-            voided += 1
-            System.err.println(
-              f"[scale] round=$round VOIDED (steal1=$steal1%.2f%% steal4=$steal4%.2f%% > 3%%) — re-running (attempt $attempts of 2)")
-          } else {
-            if (steal1 > 3.0 || steal4 > 3.0)
-              System.err.println(
-                f"[scale] round=$round contaminated but COUNTED (2nd attempt; pre-registered cap)")
-            roundsBuf += ((s1.head, s4, steal1, steal4, w0 + wG))
-            kept = true
-          }
-        }
-        round += 1
-      }
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      val perRound = roundsBuf.map { case (t1r, s4, _, _, _) => (t1r, s4.max, t1r / s4.max) }
-      perRound.zipWithIndex.foreach { case ((a, b, e), i) =>
-        System.err.println(f"[scale] round=${i + 1} t1=$a%.1fs t4max=$b%.1fs eff=$e%.3f")
-      }
-      val eff = median(perRound.map(_._3).toSeq)
-      val t1 = median(perRound.map(_._1).toSeq)
-      val t4 = median(perRound.map(_._2).toSeq)
-      val t1min = perRound.map(_._1).min
-      val t4min = perRound.map(_._2).min
-      val spark0 = newSession(0, 2)
-      val pages = try spark0.read.parquet(path).count() finally spark0.stop()
-      val effRounds = perRound.map { case (_, _, e) => f"$e%.3f" }.mkString("[", ",", "]")
-      val t1Rounds = perRound.map { case (a, _, _) => f"$a%.2f" }.mkString("[", ",", "]")
-      val t4Rounds = perRound.map { case (_, b, _) => f"$b%.2f" }.mkString("[", ",", "]")
-      val steal1R = roundsBuf.map { case (_, _, s, _, _) => f"$s%.2f" }.mkString("[", ",", "]")
-      val steal4R = roundsBuf.map { case (_, _, _, s, _) => f"$s%.2f" }.mkString("[", ",", "]")
-      val gateWaits = roundsBuf.map { case (_, _, _, _, w) => f"$w%.0f" }.mkString("[", ",", "]")
-      println(
-        s"""{"metric":"scaling_efficiency","value":${f"$eff%.3f"},"unit":"ratio","statistic":"median_of_round_ratios","mode":"multijvm","units_n":1,"units_4n":4,"cores_per_unit":$n,"rounds":$trials,"sec_n":${f"$t1%.2f"},"sec_4n":${f"$t4%.2f"},"efficiency_rounds":$effRounds,"sec_n_rounds":$t1Rounds,"sec_4n_rounds":$t4Rounds,"min_based_efficiency":${f"${t1min / t4min}%.3f"},"steal_pct_n_rounds":$steal1R,"steal_pct_4n_rounds":$steal4R,"gate_wait_sec_rounds":$gateWaits,"voided_rounds":$voided,"pages":$pages,"docs_per_sec_n":${f"${pages / t1}%.0f"},"docs_per_sec_4n":${f"${4 * pages / t4}%.0f"},"pages_path":"$path"}""")
-      return
+    val (n, trials, path) = args match {
+      case Array(n, rounds, pages) => (n.toInt, rounds.toInt, pages)
+      case _ => sys.error("usage: graft.Scale <N> <rounds> <pagesParquet>")
     }
 
-    val clusterMode = mode == "cluster"
-
-    /** One timed pass in a fresh session for `units`. */
-    def onePass(units: Int, warm: Boolean): (Double, Long, Long) = {
-      val spark =
-        if (clusterMode) newSession(units, 8) else newSession(0, units)
-      try {
-        if (warm) flagship(spark, sfDir, math.max(1, replicate / 8), heavy,
-          if (pagesPath.isDefined) pagesPath else None)
-        val t0 = System.nanoTime()
-        val out = flagship(spark, sfDir, replicate, heavy, pagesPath)
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[scale] units=$units trial=$sec%.2fs")
-        (sec, out._1, out._2)
-      } finally spark.stop()
-    }
-
-    // ALTERNATE the two sizes (N, 4N, N, 4N, ...) and take the min per
-    // size: JIT keeps improving for minutes inside one JVM, so running
-    // all N-side trials first would systematically inflate T_N (and the
-    // efficiency). Alternation gives both sizes the same JIT exposure.
-    var tN = Double.MaxValue
-    var t4N = Double.MaxValue
-    var pages = 0L
-    var triples = 0L
+    // Alternate 1-JVM and 4-JVM passes (fresh JVMs each pass → both
+    // sides equally JIT-cold). GRADED STATISTIC (round-4 protocol,
+    // pre-registered in BENCH.md before the run): the MEDIAN of
+    // per-round efficiencies t1_r / max(t4_r). Pairing each 1-JVM
+    // pass with its adjacent 4-JVM pass cancels slow box drift
+    // (thermal / page-cache state changes on a scale of hours, not
+    // the ~6 min of one round), and the median over the rounds
+    // absorbs outliers without min-style cherry-picking. Min-based
+    // numbers stay in the JSON as the round-2/3-comparable secondary.
+    //
+    // VOID RULE (round-4 pre-registration, v2 cap): a round in which
+    // hypervisor steal exceeded 3% of host CPU during either timed pass
+    // is voided and re-run ONCE (v1's two-re-run cap met chronic burst
+    // steal and blew the session wall-clock — BENCH.md round-4 v1 abort
+    // record); a second contaminated attempt counts as measured. Steal
+    // is recorded per pass either way.
+    // per kept round: (t1, s4, steal1, steal4, gateWaitSec)
+    val roundsBuf = collection.mutable.ArrayBuffer
+      .empty[(Double, Array[Double], Double, Double, Double)]
+    var voided = 0
     for (round <- 1 to trials) {
-      val (a, p, t) = onePass(n, warm = round == 1)
-      val (b, _, _) = onePass(4 * n, warm = round == 1)
-      tN = math.min(tN, a)
-      t4N = math.min(t4N, b)
-      pages = p
-      triples = t
+      var attempts = 0
+      var kept = false
+      while (!kept) {
+        attempts += 1
+        val w0 = quietGate(s"round $round 1-jvm")
+        val ((s1, w1), busy1, steal1) = HostMeter.during(pass(path, n, 1))
+        System.err.println(
+          f"[scale] round=$round 1-jvm: child=${s1.head}%.1fs wall=$w1%.1fs busy=$busy1%.1f%% steal=$steal1%.2f%%")
+        val wG = quietGate(s"round $round 4-jvm")
+        val ((s4, w4), busy4, steal4) = HostMeter.during(pass(path, n, 4))
+        System.err.println(
+          f"[scale] round=$round 4-jvm: children=${s4.map(x => f"$x%.1f").mkString(",")}s wall=$w4%.1fs busy=$busy4%.1f%% steal=$steal4%.2f%%")
+        if ((steal1 > 3.0 || steal4 > 3.0) && attempts <= 1) {
+          voided += 1
+          System.err.println(
+            f"[scale] round=$round VOIDED (steal1=$steal1%.2f%% steal4=$steal4%.2f%% > 3%%) — re-running (attempt $attempts of 2)")
+        } else {
+          if (steal1 > 3.0 || steal4 > 3.0)
+            System.err.println(
+              f"[scale] round=$round contaminated but COUNTED (2nd attempt; pre-registered cap)")
+          roundsBuf += ((s1.head, s4, steal1, steal4, w0 + wG))
+          kept = true
+        }
+      }
     }
-    val eff = (tN / t4N) / 4.0
-    println(
-      s"""{"metric":"scaling_efficiency","value":${f"$eff%.3f"},"unit":"ratio","mode":"${if (clusterMode) "executors" else "threads"}","units_n":$n,"units_4n":${4 * n},"sec_n":${f"$tN%.2f"},"sec_4n":${f"$t4N%.2f"},"pages":$pages,"triples":$triples,"docs_per_sec_n":${f"${pages / tN}%.0f"},"docs_per_sec_4n":${f"${pages / t4N}%.0f"},"sf":"$sfDir","replicate":$replicate,"heavy":$heavy,"pages_path":"${pagesPath.getOrElse("")}"}""")
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
+    val perRound = roundsBuf.map { case (t1r, s4, _, _, _) => (t1r, s4.max, t1r / s4.max) }
+    perRound.zipWithIndex.foreach { case ((a, b, e), i) =>
+      System.err.println(f"[scale] round=${i + 1} t1=$a%.1fs t4max=$b%.1fs eff=$e%.3f")
+    }
+    val eff = median(perRound.map(_._3).toSeq)
+    val t1 = median(perRound.map(_._1).toSeq)
+    val t4 = median(perRound.map(_._2).toSeq)
+    val spark0 = LocalSession(2)
+    val pages = try spark0.read.parquet(path).count() finally spark0.stop()
+    println(Bench.json(Seq("metric" -> "scaling_efficiency", "value" -> eff,
+      "unit" -> "ratio", "statistic" -> "median_of_round_ratios",
+      "mode" -> "multijvm", "units_n" -> 1, "units_4n" -> 4,
+      "cores_per_unit" -> n, "rounds" -> trials, "sec_n" -> t1, "sec_4n" -> t4,
+      "efficiency_rounds" -> perRound.map(_._3).toSeq,
+      "sec_n_rounds" -> perRound.map(_._1).toSeq,
+      "sec_4n_rounds" -> perRound.map(_._2).toSeq,
+      "min_based_efficiency" -> perRound.map(_._1).min / perRound.map(_._2).min,
+      "steal_pct_n_rounds" -> roundsBuf.map(_._3).toSeq,
+      "steal_pct_4n_rounds" -> roundsBuf.map(_._4).toSeq,
+      "gate_wait_sec_rounds" -> roundsBuf.map(_._5).toSeq,
+      "voided_rounds" -> voided, "pages" -> pages,
+      "docs_per_sec_n" -> pages / t1, "docs_per_sec_4n" -> 4 * pages / t4,
+      "pages_path" -> path)))
   }
 }

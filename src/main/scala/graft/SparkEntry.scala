@@ -300,7 +300,7 @@ object SparkEntry {
     // exactly (asserted in PipelineSpec); benched per round so the
     // distributed tail has standing performance evidence.
     "q_kg_triples_dist" -> ((s, d) =>
-      Pipeline.runOnTestdata(s, d, 1, Pipeline.Config(localThreshold = 0))
+      Pipeline.runOnTestdata(s, d, Pipeline.Config(localThreshold = 0))
         .triples.orderBy("subj", "pred", "obj")),
 
     // Incremental KG maintenance (round-5): the corpus arrives as two
@@ -312,7 +312,7 @@ object SparkEntry {
     // the from-scratch q_kg_triples rewrite value-for-value, which is
     // model-based and therefore rows-only at the driver.
     "q_kg_delta" -> ((s, d) => {
-      val raw = Pipeline.runOnTestdata(s, d, 1).rawTriples.toDF()
+      val raw = Pipeline.runOnTestdata(s, d).rawTriples.toDF()
         .localCheckpoint(true)
       val batches = (0 until 2).map(b =>
         raw.filter(pmod(xxhash64(col("url")), lit(2)) === b))

@@ -65,12 +65,9 @@ object Linking {
     * complete — an entity that never appears in a triple cannot affect
     * the rewrite — and it lets the flagship plan derive the expensive
     * tagged stage ONCE (raw triples feed both linking and rewrite; the
-    * mentions branch would force a second pass over the corpus). */
-  def nodesFromTriples(raw: Dataset[RawTripleRow]): Dataset[NodeRow] =
-    nodesFromTripleArgs(raw.toDF())
-
-  /** Same as [[nodesFromTriples]] but over the slim 7-column projection
-    * the pipeline persists (no url/sent_idx).
+    * mentions branch would force a second pass over the corpus).
+    * Reads only the 7 subject/object columns, so it takes the raw-triples
+    * table or the slim projection the pipeline persists (no url/sent_idx).
     *
     * No explicit salt here, deliberately (round-3 change): for a
     * count aggregation, Catalyst's map-side partial HashAggregate

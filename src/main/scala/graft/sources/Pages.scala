@@ -16,8 +16,8 @@ final case class PageRow(url: String, warc_ts: Instant, html: Array[Byte],
   * third doc has text=null to force the html-extraction path.
   *
   * `replicate` fans each document out to `replicate` distinct pages
-  * (distinct doc ids → distinct planted content), used by Bench to scale
-  * the corpus without external data.
+  * (distinct doc ids → distinct planted content), used by PagesGen and
+  * the benchmark to scale the corpus without external data.
   */
 object Pages {
 
@@ -51,15 +51,14 @@ object Pages {
     * incremental-ingest mode ([[graft.streaming.Streaming.triplesIngest]]).
     * Identical row math (shared [[fromDocs]]), so stream and batch
     * produce byte-identical pages for the same doc rows. */
-  def synthesizeStream(spark: SparkSession, sfDir: String, replicate: Int = 1,
-                       heavy: Int = 1,
+  def synthesizeStream(spark: SparkSession, sfDir: String,
                        filesPerTrigger: Option[Int] = None): Dataset[PageRow] = {
     import spark.implicits._
     val docs = graft.streaming.Streaming
       .streamTable(spark, s"$sfDir/documents.parquet", filesPerTrigger)
       .select("doc_id", "text", "lang", "source").as[DocRow]
       .repartition(spark.sparkContext.defaultParallelism * 8)
-    fromDocs(docs, replicate, heavy)
+    fromDocs(docs, 1, 1)
   }
 
   private def fromDocs(docs: Dataset[DocRow], replicate: Int,

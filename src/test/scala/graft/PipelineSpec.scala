@@ -8,18 +8,7 @@ import graft.operators._
 import graft.oracle.RefOracle
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(8)
 }
 
 class CcSpec extends AnyFunSuite {
@@ -144,7 +133,7 @@ class LinkingSpec extends AnyFunSuite {
   test("adaptive local canon map equals distributed canon map") {
     // node table from the real fixture pipeline at sf0.001
     val raw = Pipeline.runOnTestdata(spark, "/root/testdata/sf0.001").rawTriples
-    val nodes = Linking.nodesFromTriples(raw)
+    val nodes = Linking.nodesFromTripleArgs(raw.toDF())
     val local = Canonicalize.canonMapAdaptive(nodes)
       .as[(String, String, String)].collect().toSet
     val dist = Canonicalize.canonMapAdaptive(nodes, localThreshold = 0)

@@ -18,7 +18,7 @@ class ResumeSpec extends AnyFunSuite {
     val cfg = Pipeline.Config(nParts = 8, runId = "r1", checkpointDir = Some(dir))
 
     val t0 = System.nanoTime()
-    val out1 = Pipeline.runOnTestdata(spark, sfDir, 1, cfg)
+    val out1 = Pipeline.runOnTestdata(spark, sfDir, cfg)
     val triples1 = out1.triples.as[(String, String, String)].collect().toSet
     val coldSec = (System.nanoTime() - t0) / 1e9
 
@@ -42,7 +42,7 @@ class ResumeSpec extends AnyFunSuite {
     // noise at sf0.001 (the skip itself is proven by the unchanged
     // lineage commit count: zero new commit rows = zero recomputation).
     val t1 = System.nanoTime()
-    val out2 = Pipeline.runOnTestdata(spark, sfDir, 1, cfg)
+    val out2 = Pipeline.runOnTestdata(spark, sfDir, cfg)
     val triples2 = out2.triples.as[(String, String, String)].collect().toSet
     val warmSec = (System.nanoTime() - t1) / 1e9
     assert(triples2 == triples1, "resumed run changed the output")

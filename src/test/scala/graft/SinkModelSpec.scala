@@ -157,22 +157,51 @@ class SinkModelSpec extends AnyFunSuite {
       (0 until n).map(_ => (s"s${rnd.nextInt(30)}", preds(rnd.nextInt(2)),
         s"v${rnd.nextInt(1000000)}")).toSet
 
+    // `published`: the branch head its last fast-forward put on main; a
+    // published branch stays open, and main's head being that publish
+    // is a second accepted fork point
     final case class Br(base: String, var state: Set[(String, String, String)],
-                        parts: Int, var head: String, var staged: Int)
+                        parts: Int, var head: String, var staged: Int,
+                        var published: Option[String] = None)
     var model = Set.empty[(String, String, String)]
     var curParts = 4
     var lastMain = "m-1"
     var seq = 1
     def commitId(kind: String): String = { seq += 1; s"$kind-$seq" }
     val branches = scala.collection.mutable.LinkedHashMap.empty[String, Br]
+    var republished = 0
+    var rejectedAfterPublish = 0
 
     val init = randRows(10)
     TripleSink.write(init.toSeq.toDF("subj", "pred", "obj"), path, lastMain,
       nParts = curParts)
     model = init
 
-    (1 to 30).foreach { _ =>
-      rnd.nextInt(7) match {
+    // Each episode works one branch: the one the previous episode
+    // published (so it can publish again), else a fresh fork at main's
+    // head or a random open one. It stages 0-2 appends there, lets main
+    // commit in between half the time, then fast-forwards the branch
+    // against the model's verdict.
+    var justPublished = Option.empty[String]
+    (1 to 16).foreach { _ =>
+      val name = justPublished.filter(branches.contains).getOrElse {
+        if (branches.isEmpty || (branches.size < 3 && rnd.nextInt(3) == 0)) {
+          val n = s"br-$seq"; seq += 1
+          TripleSink.createBranch(path, n, lastMain)
+          branches(n) = Br(lastMain, model, curParts, lastMain, 0)
+          n
+        } else branches.keys.toSeq.sorted.apply(rnd.nextInt(branches.size))
+      }
+      justPublished = None
+      val b = branches(name)
+      (0 until rnd.nextInt(3)).foreach { _ =>
+        val id = commitId("bw")
+        val rows = randRows(1 + rnd.nextInt(10)) -- b.state
+        TripleSink.writeToBranch(rows.toSeq.toDF("subj", "pred", "obj"),
+          path, name, id, nParts = b.parts, append = true)
+        b.state ++= rows; b.head = id; b.staged += 1
+      }
+      rnd.nextInt(6) match {
         case 0 => // main append
           val id = commitId("ap")
           val rows = randRows(1 + rnd.nextInt(15)) -- model
@@ -189,51 +218,36 @@ class SinkModelSpec extends AnyFunSuite {
           val id = commitId("cp")
           TripleSink.compact(spark, path, id, nParts = curParts)
           lastMain = id
-        case 3 => // fork a branch at the current main head
-          if (branches.size < 3) {
-            val name = s"br-$seq"; seq += 1
-            TripleSink.createBranch(path, name, lastMain)
-            branches(name) = Br(lastMain, model, curParts, lastMain, 0)
-          }
-        case 4 => // stage an append on a random open branch
-          branches.toSeq.sortBy(_._1).lift(
-              if (branches.isEmpty) 0 else rnd.nextInt(branches.size)).foreach {
-            case (name, b) =>
-              val id = commitId("bw")
-              val rows = randRows(1 + rnd.nextInt(10)) -- b.state
-              TripleSink.writeToBranch(rows.toSeq.toDF("subj", "pred", "obj"),
-                path, name, id, nParts = b.parts, append = true)
-              b.state ++= rows; b.head = id; b.staged += 1
-          }
-        case 5 => // fast-forward: publishes iff main has not advanced
-          branches.toSeq.sortBy(_._1).lift(
-              if (branches.isEmpty) 0 else rnd.nextInt(branches.size)).foreach {
-            case (name, b) if b.staged > 0 =>
-              if (lastMain == b.base) {
-                TripleSink.fastForward(path, name)
-                model = b.state; lastMain = b.head
-                TripleSink.dropBranch(path, name); branches.remove(name)
-              } else {
-                intercept[IllegalArgumentException] {
-                  TripleSink.fastForward(path, name) }
-              }
-            case _ => // nothing staged: no-op either way
-          }
-        case _ => // drop a random branch unpublished
-          branches.toSeq.sortBy(_._1).lift(
-              if (branches.isEmpty) 0 else rnd.nextInt(branches.size)).foreach {
-            case (name, _) =>
-              assert(TripleSink.dropBranch(path, name)); branches.remove(name)
-          }
+        case _ => // main holds still
       }
-      // invariants after EVERY op: staged work isolated per chain
+      // fast-forward: publishes iff main's head is the fork point or this
+      // branch's last publish
+      if (b.staged == 0 || lastMain == b.head) {
+        TripleSink.fastForward(path, name) // nothing new to publish: no-op
+      } else if (lastMain == b.base || b.published.contains(lastMain)) {
+        TripleSink.fastForward(path, name)
+        if (b.published.nonEmpty) republished += 1
+        model = b.state; lastMain = b.head; b.published = Some(b.head)
+        justPublished = Some(name)
+      } else {
+        intercept[IllegalArgumentException] { TripleSink.fastForward(path, name) }
+        if (b.published.nonEmpty) rejectedAfterPublish += 1
+      }
+      if (rnd.nextInt(5) == 0) { // drop a random branch
+        val n = branches.keys.toSeq.sorted.apply(rnd.nextInt(branches.size))
+        assert(TripleSink.dropBranch(path, n)); branches.remove(n)
+      }
+      // invariants after EVERY episode: staged work isolated per chain
       assert(readSet(TripleSink.read(spark, path)) == model, "main != model")
       assert(TripleSink.statsAudit(spark, path))
-      branches.foreach { case (name, b) =>
-        assert(readSet(TripleSink.readBranch(spark, path, name)) == b.state,
-          s"branch $name != its model") }
+      branches.foreach { case (n, br) =>
+        assert(readSet(TripleSink.readBranch(spark, path, n)) == br.state,
+          s"branch $n != its model") }
       assert(TripleSink.branches(path).map(_._1) == branches.keys.toSeq.sorted)
     }
+    assert(republished > 0 && rejectedAfterPublish > 0,
+      s"sequence never re-published ($republished) or rejected a published " +
+        s"branch after a later main commit ($rejectedAfterPublish)")
 
     // aggressive main retention with branches open: every branch still
     // reads (its runs are pinned), main still == model

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import graft.sources.ZOrder
 
@@ -10,26 +12,28 @@ import graft.sources.ZOrder
 class ZOrderSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** The parquet scans of an executed query. AQE wraps the executed
+    * plan in AdaptiveSparkPlanExec and hides materialized stages behind
+    * child-less QueryStageExec nodes — recurse through both to reach the
+    * actual scans. */
+  private def scans(q: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] = {
+    def walk(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(walk)
+    }
+    val found = walk(q.queryExecution.executedPlan)
+    assert(found.nonEmpty, "no FileSourceScanExec found in the executed plan")
+    found
+  }
+
   /** Rows the parquet scan actually emitted (post row-group skipping,
     * pre Spark-side filter) for `filter` over `path`. */
   private def scanRows(path: String, pred: org.apache.spark.sql.Column): Long = {
     val q = spark.read.parquet(path).filter(pred).agg(sum("x"), count(lit(1)))
     q.collect()
-    // AQE wraps the executed plan in AdaptiveSparkPlanExec and hides
-    // materialized stages behind child-less QueryStageExec nodes —
-    // recurse through both to reach the actual scan
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(s.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    val found = scans(q.queryExecution.executedPlan)
-    assert(found.nonEmpty, "no FileSourceScanExec found in the executed plan")
-    found.map(_.metrics("numOutputRows").value).sum
+    scans(q).map(_.metrics("numOutputRows").value).sum
   }
 
   test("a second-column filter skips an order of magnitude more than a single-column sort") {
@@ -67,6 +71,23 @@ class ZOrderSpec extends AnyFunSuite {
       s"premise: the x-sorted layout should read ~everything, read $linRows")
     assert(zRows < linRows / 4,
       s"z-order skipped too little: scan emitted $zRows vs $linRows linear")
+  }
+
+  test("both range predicates reach the z-ordered table's parquet scan, which reads only the filtered columns") {
+    // the q_layout_zorder shape: a 3-column table z-ordered on (x, y),
+    // a range predicate on each, grouped on y
+    val dir = Files.createTempDirectory("graft_zorder_plan").toString
+    ZOrder.write(spark.range(20000).select((col("id") % 1000).as("x"),
+      (col("id") % 97).as("y"), col("id").as("v")), dir, Seq("x", "y"), nFiles = 4)
+    val q = spark.read.parquet(dir)
+      .filter(col("x") <= 200 && col("y") <= 20)
+      .groupBy("y").count()
+    q.collect()
+    val Seq(scan) = scans(q)
+    val pushed = scan.metadata("PushedFilters")
+    assert(pushed.contains("LessThanOrEqual(x,200)") &&
+      pushed.contains("LessThanOrEqual(y,20)"), s"pushed filters: $pushed")
+    assert(scan.requiredSchema.fieldNames.toSeq == Seq("x", "y"))
   }
 
   test("z-values interleave bits round-robin (known points)") {
