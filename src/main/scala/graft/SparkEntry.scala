@@ -92,7 +92,7 @@ object SparkEntry {
 
     // A17 salting: two-phase salted aggregation over a 3-value hot key —
     // the oracle is the plain GROUP BY, proving the salt is semantically
-    // transparent (the skew guard used by Linking.nodes at scale)
+    // transparent
     "q_agg_salted" -> ((s, d) => {
       val salted = t(s, d, "lineitem")
         .withColumn("salt", pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(16)))
@@ -1201,7 +1201,8 @@ object SparkEntry {
     // Iceberg-emulation MERGE-ON-READ delta (A16, round-5): the
     // retractions commit as a scoped equality-delete FILE — no data
     // partition is rewritten (Iceberg v2's write-side position of the
-    // COW/MOR dial; CdcBench measures 5× on scattered retractions) —
+    // COW/MOR dial; `graft.Bench cdc` measures both commits on
+    // scattered retractions) —
     // and readers drop the rows it matches, scoped to the runs
     // visible when the delete committed. The read-back must equal
     // DuckDB's mirror of "base minus retracted plus re-added", so a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,29 +23,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  /** Reliable-checkpoint option for the iterative loop. localCheckpoint
-    * (the default) stores blocks on executors only — fastest on a
-    * single box, but on a real cluster a lost executor mid-loop kills
-    * the job (no lineage survives to recompute from). With `Reliable`,
-    * every `every`-th iteration (and the initial edge set) instead
-    * writes parquet under `dir` and reads it back — durable on the
-    * cluster's shared FS (HDFS/S3) — and a re-invocation of [[run]]
-    * with the same `dir` RESUMES from the newest committed iteration
-    * (its `_SUCCESS` marker is the commit point), so a job-level retry
-    * after any failure — including executor loss on one of the
-    * localCheckpoint'd iterations between two reliable pins — loses at
-    * most `every - 1` rounds of work, not the whole loop.
-    *
-    * Contract: `dir` identifies ONE logical run over ONE edge set
-    * (like a Spark checkpoint dir). Reusing it across different inputs
-    * resumes from the previous input's state by design — callers that
-    * want a fresh computation must pass a fresh/cleaned dir. Use
-    * localCheckpoint for single-box / short loops where whole-loop
-    * retry is acceptable; Reliable for long loops on clusters. Earlier
-    * iteration dirs are deleted as the loop advances; the LAST dir
-    * backs the returned (lazy) DataFrame, so `dir` must outlive
-    * consumption of the result. */
-  final case class Reliable(dir: String, every: Int = 3)
+  /** Round cap of the distributed loop; it converges in O(log n). */
+  private val MaxRounds = 25
 
   /** edges: DataFrame(src: long, dst: long), undirected (either order,
     * duplicates fine). Returns DataFrame(id: long, comp: long) covering
@@ -59,21 +38,7 @@ object ConnectedComponents {
     * corpus (it always is: |entities| ≪ |pages|). Both paths produce
     * identical output (CcSpec asserts it); set localThreshold = 0 to
     * force the distributed path. */
-  def run(edges: DataFrame, maxIter: Int = 25,
-          localThreshold: Long = 1L << 20,
-          reliable: Option[Reliable] = None): DataFrame = {
-    val spark = edges.sparkSession
-
-    // resume-from-checkpoint: a committed cc-iter-N under the reliable
-    // dir means a previous invocation over this dir's edge set got that
-    // far — continue from it instead of recomputing from the raw edges
-    // (see the Reliable contract above; `dir` is per-logical-run)
-    reliable.flatMap(r => latestCommittedIter(spark, r.dir)) match {
-      case Some((it, pinned)) =>
-        return runDistributed(pinned, maxIter, reliable, startIter = it)
-      case None => ()
-    }
-
+  def run(edges: DataFrame, localThreshold: Long = 1L << 20): DataFrame = {
     // canonical undirected form (u > v), self-loops dropped
     val canonical = edges
       .select(greatest(col("src"), col("dst")).as("u"),
@@ -82,7 +47,7 @@ object ConnectedComponents {
       .distinct()
 
     if (localThreshold <= 0)
-      return runDistributed(pin(canonical, 0, reliable), maxIter, reliable)
+      return runDistributed(canonical.localCheckpoint(true))
 
     // persist before the size probe so the (possibly expensive)
     // upstream edge generation runs once, not once for the count and
@@ -93,85 +58,22 @@ object ConnectedComponents {
       canonical.unpersist()
       out
     } else {
-      val e0 = pin(canonical, 0, reliable)
+      val e0 = canonical.localCheckpoint(true)
       canonical.unpersist()
-      runDistributed(e0, maxIter, reliable)
+      runDistributed(e0)
     }
   }
 
-  /** Materialize an iteration's edge set and truncate its lineage:
-    * parquet write-read on reliable iterations, localCheckpoint
-    * otherwise. Both bound the growing Catalyst plan; only the former
-    * survives executor loss. */
-  private def pin(df: DataFrame, iter: Int, reliable: Option[Reliable]): DataFrame =
-    reliable match {
-      case Some(r) if iter % math.max(1, r.every) == 0 =>
-        val path = s"${r.dir}/cc-iter-$iter"
-        df.write.mode("overwrite").parquet(path)
-        val out = df.sparkSession.read.parquet(path)
-        // earlier iterations are superseded; keep only the newest dir
-        deleteDirsBefore(r.dir, iter)
-        out
-      case _ => df.localCheckpoint(true)
-    }
-
-  /** Newest `cc-iter-N` under `dir` that finished its write (Spark's
-    * `_SUCCESS` marker is the commit point — a crash mid-write leaves
-    * no marker and the dir is ignored). Local-FS listing, like
-    * [[deleteDirsBefore]]; the parquet read itself is Spark-native. */
-  private def latestCommittedIter(spark: SparkSession,
-                                  dir: String): Option[(Int, DataFrame)] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(dir.stripPrefix("file:"))
-    if (!java.nio.file.Files.isDirectory(root)) return None
-    val iters = scala.util.Using.resource(java.nio.file.Files.list(root)) { s =>
-      s.iterator().asScala.flatMap { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("cc-iter-") &&
-            java.nio.file.Files.exists(p.resolve("_SUCCESS")))
-          name.stripPrefix("cc-iter-").toIntOption
-        else None
-      }.toList
-    }
-    iters.sorted.lastOption.map { it =>
-      (it, spark.read.parquet(s"$dir/cc-iter-$it"))
-    }
-  }
-
-  /** Local-FS cleanup of superseded iteration dirs (the sandbox shape;
-    * a cluster deployment swaps this one call for Hadoop
-    * FileSystem.delete — the write-read pinning above already goes
-    * through Spark and works on HDFS/S3 unchanged). */
-  private def deleteDirsBefore(dir: String, iter: Int): Unit = {
-    val root = java.nio.file.Paths.get(dir.stripPrefix("file:"))
-    if (java.nio.file.Files.isDirectory(root)) {
-      scala.util.Using.resource(java.nio.file.Files.list(root)) { listing =>
-        listing.forEach { p =>
-          val name = p.getFileName.toString
-          if (name.startsWith("cc-iter-") &&
-              name.stripPrefix("cc-iter-").toIntOption.exists(_ < iter)) {
-            scala.util.Using.resource(java.nio.file.Files.walk(p)) { files =>
-              files.sorted(java.util.Comparator.reverseOrder())
-                .forEach(f => java.nio.file.Files.deleteIfExists(f))
-            }
-          }
-        }
-      }
-    }
-  }
-
-  private def runDistributed(first: DataFrame, maxIter: Int,
-                             reliable: Option[Reliable] = None,
-                             startIter: Int = 0): DataFrame = {
+  private def runDistributed(first: DataFrame): DataFrame = {
     var e = first
 
     var fp = fingerprint(e)
     var converged = false
-    var iter = startIter
-    while (!converged && iter < maxIter) {
+    var iter = 0
+    while (!converged && iter < MaxRounds) {
       val ls = largeStar(e)
       val ss = smallStar(ls)
-      val next = pin(ss, iter + 1, reliable)
+      val next = ss.localCheckpoint(true)
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp

@@ -35,8 +35,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * equals an uninterrupted one value-for-value. Single writer per
   * directory, like TripleSink.
   */
-final class DurableKg(spark: SparkSession, dir: String,
-                      localThreshold: Long = 1L << 20) {
+final class DurableKg(spark: SparkSession, dir: String) {
 
   private val Logs = Seq("counts", "bands", "edges", "raw", "support")
   private val root = Paths.get(dir.stripPrefix("file:"))
@@ -99,7 +98,7 @@ final class DurableKg(spark: SparkSession, dir: String,
   def fold(batchRaw: DataFrame, batchId: Long,
            onDelta: KgDelta.Delta => Unit = _ => ()): Option[KgDelta.Delta] = {
     if (committed.contains(batchId)) return None
-    val (st2, delta, app) = KgDelta.updateFull(cached, batchRaw, localThreshold)
+    val (st2, delta, app) = KgDelta.updateFull(cached, batchRaw)
     val appends = Seq("counts" -> app.counts, "bands" -> app.bands,
       "edges" -> app.edges, "raw" -> app.raw, "support" -> app.support)
     appends.foreach { case (name, df) =>

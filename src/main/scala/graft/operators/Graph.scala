@@ -13,27 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pin an intermediate frame, truncating its Catalyst lineage. With
-    * `durableDir = None` (default): `localCheckpoint` — executor-block
-    * storage, fastest on a single box, but a lost executor mid-job
-    * kills the job (no lineage survives to recompute from). With
-    * `Some(dir)`: parquet write-read under `dir/name` — durable on the
-    * cluster's shared FS, so a task retry after executor loss simply
-    * re-reads the files instead of failing the job. Same seam the CC
-    * loop's [[ConnectedComponents.Reliable]] provides (round-3 verdict
-    * item 6 threaded it through the OTHER iterative/pinned operators).
-    * `dir` identifies one logical invocation; callers pass a fresh dir
-    * per run (names are deterministic within it, so a re-invocation
-    * over the same dir overwrites cleanly). */
-  private def pin(df: DataFrame, durableDir: Option[String],
-                  name: String): DataFrame =
-    durableDir match {
-      case Some(dir) =>
-        val path = s"$dir/$name"
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint(true)
-    }
+  /** PageRank rounds between rank pins. */
+  private val RankPinEvery = 4
 
   /** Per-node triangle participation over an undirected simple graph:
     * `(node_id, degree, n_tri)`, one row per node of nonzero degree.
@@ -53,8 +34,7 @@ object Graph {
     * structurally bounded, not salted away. Three shuffle joins, all
     * equi-keyed; no driver collection at any size.
     */
-  def triangleCounts(edges: DataFrame,
-                     durableDir: Option[String] = None): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     // Pin degrees and the oriented edge list eagerly: they feed 2 and
     // 3 consumers respectively, and Catalyst does NOT reuse the
     // subtree across them (column pruning specializes each copy below
@@ -62,9 +42,8 @@ object Graph {
     // this query unpinned). Without pinning, the possibly-expensive
     // edge derivation (e.g. [[copurchaseEdges]]' self-join+distinct)
     // executes once per consumer — certain O(edges) waste at every
-    // scale. The pin is localCheckpoint by default (single box) or the
-    // durable parquet seam (clusters) — see [[pin]].
-    val deg = pin(degrees(edges), durableDir, "tri-deg")
+    // scale.
+    val deg = degrees(edges).localCheckpoint(true)
 
     // attach endpoint degrees, orient by (degree, id)
     val withDeg = edges
@@ -73,11 +52,11 @@ object Graph {
     val srcFirst = col("sd") < col("dd") ||
       (col("sd") === col("dd") && col("src") < col("dst"))
     // oriented edge u→v carrying v's degree (needed to order wedge arms)
-    val oriented = pin(withDeg.select(
+    val oriented = withDeg.select(
       when(srcFirst, col("src")).otherwise(col("dst")).as("u"),
       when(srcFirst, col("dst")).otherwise(col("src")).as("v"),
-      when(srcFirst, col("dd")).otherwise(col("sd")).as("dv")),
-      durableDir, "tri-oriented")
+      when(srcFirst, col("dd")).otherwise(col("sd")).as("dv"))
+      .localCheckpoint(true)
 
     // wedges centered at u: out-neighbor pairs (y ≺ z in the same order)
     val a = oriented.select(col("u"), col("v").as("y"), col("dv").as("dy"))
@@ -110,26 +89,22 @@ object Graph {
     * on any engine, which is what makes the query value-oracle-able
     * (double-precision PageRank diverges across engines via summation
     * order). Each iteration is one shuffle join + one partial-agg
-    * groupBy; `checkpointEvery` caps logical-plan growth the same way
-    * the CC loop does (truncate lineage every k rounds, default 4 —
-    * bounded fixed iterations need no convergence actions, so with
-    * the default the whole run is ≤ ⌈it/4⌉ jobs).
+    * groupBy; the rank is pinned every [[RankPinEvery]] rounds to
+    * cap logical-plan growth the same way the CC loop does (bounded
+    * fixed iterations need no convergence actions, so the whole run is
+    * ≤ ⌈it/4⌉ jobs).
     */
-  def pageRankFixedPoint(
-      edges: DataFrame,
-      iterations: Int = 10,
-      checkpointEvery: Int = 4,
-      durableDir: Option[String] = None): DataFrame = {
+  def pageRankFixedPoint(edges: DataFrame, iterations: Int = 10): DataFrame = {
     // both directions + out-degrees (== degree; no dangling nodes by
     // construction on an undirected graph). Pinned eagerly: the loop
     // reads both EVERY iteration, and nothing else reuses the subtree
     // (measured 24 input scans unpinned at 10 iterations) — see the
-    // tradeoff note in [[triangleCounts]]; durable variant via [[pin]].
-    val ed = pin(edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))),
-      durableDir, "pr-edges")
-    val deg = pin(ed.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")),
-      durableDir, "pr-deg")
+    // tradeoff note in [[triangleCounts]].
+    val ed = edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint(true)
+    val deg = ed.groupBy(col("src").as("id")).agg(count(lit(1)).as("od"))
+      .localCheckpoint(true)
 
     var rank = deg.select(col("id"), lit(1000000L).as("rank"))
     for (i <- 1 to iterations) {
@@ -142,8 +117,8 @@ object Graph {
       rank = deg.select(col("id"))
         .join(recv, Seq("id"), "left")
         .select(col("id"), (lit(150000L) + coalesce(col("s"), lit(0L))).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iterations)
-        rank = pin(rank, durableDir, s"pr-rank-$i")
+      if (i % RankPinEvery == 0 && i < iterations)
+        rank = rank.localCheckpoint(true)
     }
     rank.select(col("id").as("node_id"), col("rank").as("rank_fp"))
   }

@@ -124,19 +124,17 @@ object KgDelta {
 
   /** Fold one micro-batch of raw triples (any frame carrying the 7 arg
     * columns) into the state. Returns the new state and the batch's
-    * triple-view delta. `localThreshold` is the CC size-adaptive knob
-    * (the touched subgraph is usually tiny — the driver-side union-find
-    * path is the common case; 0 forces the distributed loop). */
-  def update(state: State, batchRaw: DataFrame,
-             localThreshold: Long = 1L << 20): (State, Delta) = {
-    val (st, delta, _) = updateFull(state, batchRaw, localThreshold)
+    * triple-view delta. The touched subgraph's CC takes the
+    * size-adaptive path (it is usually tiny, so the driver-side
+    * union-find is the common case). */
+  def update(state: State, batchRaw: DataFrame): (State, Delta) = {
+    val (st, delta, _) = updateFull(state, batchRaw)
     (st, delta)
   }
 
   /** [[update]] plus the per-batch log appends, for durable layers
     * ([[DurableKg]]). */
-  private[graft] def updateFull(state: State, batchRaw: DataFrame,
-                                localThreshold: Long = 1L << 20)
+  private[graft] def updateFull(state: State, batchRaw: DataFrame)
       : (State, Delta, Appends) = {
     val spark = batchRaw.sparkSession
     import spark.implicits._
@@ -198,8 +196,7 @@ object KgDelta {
       case (etype, ka, kb, _) =>
         (Hashing.nodeId(etype, ka), Hashing.nodeId(etype, kb))
     }.toDF("src", "dst")
-    val cc = ConnectedComponents.run(star.unionByName(edgeIds),
-      localThreshold = localThreshold)
+    val cc = ConnectedComponents.run(star.unionByName(edgeIds))
 
     // new-key ids derive from the CHECKPOINTED bands (one distinct over
     // 16 rows/key), not from newKeys — whose plan re-runs the anti-join

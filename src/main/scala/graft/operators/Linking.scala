@@ -21,9 +21,9 @@ final case class EdgeRow(etype: String, key_a: String, key_b: String, score: Dou
   * feature-scored disambiguation (BASELINE.json:6).
   *
   * Plan shape at scale:
-  *  - node build: ONE shuffle (salted two-phase count — hot surfaces like
-  *    北京 appear in millions of docs; the salt spreads the partial
-  *    aggregation, the second phase re-combines ~S rows per hot key);
+  *  - node build: ONE shuffle (a count whose map-side partial
+  *    aggregate collapses hot surfaces like 北京, which appear in
+  *    millions of docs, to one row per map partition);
   *  - signatures: narrow map (MinHash computed per node in-line — no
   *    posexplode/k-aggregation shuffle; each node has ~O(len) shingles);
   *  - candidate generation: band explode (narrow) + self-equi-join on
@@ -40,26 +40,6 @@ object Linking {
   val JaccardAccept = 0.5
   val JaccardAbbrev = 0.15 // floor for subsequence-abbreviation pairs (北大 ⊑ 北京大学)
 
-  /** Distinct entity nodes with occurrence counts and the most frequent
-    * surface (ties → lexicographically smallest). Salted two-phase
-    * aggregation (A17) keeps hot keys from pinning a single reducer. */
-  def nodes(mentions: Dataset[MentionRow], saltMod: Int = 16): Dataset[NodeRow] = {
-    import mentions.sparkSession.implicits._
-    val salted = mentions
-      .withColumn("salt", pmod(xxhash64(col("url"), col("sent_idx")), lit(saltMod)))
-      .groupBy("etype", "norm_key", "mention", "salt").count()
-      .groupBy("etype", "norm_key", "mention").agg(sum("count").as("cnt"))
-    val w = Window.partitionBy("etype", "norm_key")
-      .orderBy(col("cnt").desc, col("mention").asc)
-    salted
-      .withColumn("rk", row_number().over(w))
-      .withColumn("node_cnt", sum("cnt").over(Window.partitionBy("etype", "norm_key")))
-      .filter(col("rk") === 1)
-      .select(col("etype"), col("norm_key"), col("mention").as("surface"),
-        col("node_cnt").as("cnt"))
-      .as[NodeRow]
-  }
-
   /** Entity nodes derived from the raw-triples table instead of the
     * full mentions table. For canonical triple rewriting this is
     * complete — an entity that never appears in a triple cannot affect
@@ -69,21 +49,11 @@ object Linking {
     * Reads only the 7 subject/object columns, so it takes the raw-triples
     * table or the slim projection the pipeline persists (no url/sent_idx).
     *
-    * No explicit salt here, deliberately (round-3 change): for a
-    * count aggregation, Catalyst's map-side partial HashAggregate
-    * already collapses a hot duplicate triple to ONE row per map
-    * partition before the shuffle — exactly what a salt stage would
-    * buy — so a single deterministic groupBy is both the fastest and
-    * the only retry-safe plan. The previous per-row
-    * monotonically_increasing_id salt was a nondeterministic
-    * expression feeding a shuffle key: on stage retry after a fetch
-    * failure, recomputed map tasks re-salt differently and reducers
-    * holding old shuffle blocks can double-count (the
-    * SPARK-23207-class indeterminate-stage hazard). Explicit salting
-    * remains the right tool where partial aggregation CANNOT absorb
-    * the skew (collect_list-style aggs, per-key heavy compute) — see
-    * [[nodes]], whose salt is derived deterministically from input
-    * columns. */
+    * No explicit salt: for a count aggregation, Catalyst's map-side
+    * partial HashAggregate already collapses a hot duplicate triple to
+    * ONE row per map partition before the shuffle — exactly what a salt
+    * stage would buy — so a single deterministic groupBy is both the
+    * fastest and the only retry-safe plan. */
   def nodesFromTripleArgs(raw: DataFrame): Dataset[NodeRow] =
     nodesFromCounts(argCounts(raw))
 

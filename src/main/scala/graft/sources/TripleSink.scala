@@ -319,7 +319,8 @@ object TripleSink {
     * the list). This is
     * the escape hatch for [[applyDelta]]'s measured worst case: a
     * retraction set scattered uniformly over subjects dirties every
-    * hash partition under copy-on-write (CdcBench `merge_scattered`),
+    * hash partition under copy-on-write (`graft.Bench cdc`,
+    * `cow_scattered_commit_sec` against `mor_scattered_commit_sec`),
     * but commits here at O(batch) regardless of spread. Trade: COW
     * pays at write time and reads clean; MOR pays at read time until
     * compaction — the same dial Iceberg exposes.

@@ -211,92 +211,25 @@ object Streaming {
     * as the existing periodic BATCH job over the accumulated raw-triple
     * table — the standard lambda-free split for an aggregation whose
     * fixpoint (global entity clusters) has no bounded-state streaming
-    * form. Drained via AvailableNow for the driver; production tails a
-    * WARC drop directory and writes the TripleSink instead.
-    * StreamingSpec asserts stream output == the batch stages on the
-    * same pages, value for value. */
-  def triplesIngest(spark: SparkSession, sfDir: String,
-                    nParts: Int = 16): DataFrame =
-    drainAvailableNow(rawTriplesStream(spark, sfDir, nParts), OutputMode.Append())
+    * form ([[kgMaintainToSink]] folds the same stream into the
+    * maintained KG instead). Drained via AvailableNow for the driver;
+    * production tails a WARC drop directory and writes the TripleSink
+    * instead. StreamingSpec asserts stream output == the batch stages
+    * on the same pages, value for value. */
+  def triplesIngest(spark: SparkSession, sfDir: String): DataFrame =
+    drainAvailableNow(rawTriplesStream(spark, sfDir), OutputMode.Append())
+
+  /** `part_id` buckets of the streamed extraction. */
+  private val ExtractParts = 16
 
   private def rawTriplesStream(spark: SparkSession, sfDir: String,
-                               nParts: Int,
                                filesPerTrigger: Option[Int] = None): DataFrame = {
     val pages = graft.sources.Pages.synthesizeStream(spark, sfDir,
       filesPerTrigger = filesPerTrigger)
     val bcModel = spark.sparkContext.broadcast(graft.core.Fixture.model)
     graft.operators.Stages.rawTriples(
       graft.operators.Stages.tag(
-        graft.operators.Stages.extract(pages, nParts), bcModel)).toDF()
-  }
-
-  /** Streaming ingest INTO THE MAINTAINED KNOWLEDGE GRAPH — the round-5
-    * closure of the lambda split documented on [[triplesIngest]]: the
-    * stateless A2→A10 chain still runs per micro-batch, but the
-    * stateful tail (linking → CC → canonicalization → triple view) no
-    * longer waits for a periodic full-recompute batch job; each
-    * micro-batch folds into [[graft.operators.KgDelta]]'s maintained
-    * state, whose per-batch cost scales with the batch (LSH-index
-    * probe, touched-component CC, dirty-component re-pick — see
-    * KgDelta's scaladoc and DeltaBench). After the drain the returned
-    * state's canon map and triple view equal the batch pipeline run
-    * from scratch over the same pages, value for value (StreamingSpec).
-    *
-    * `filesPerTrigger` sizes micro-batches (None = engine default: all
-    * available input in one batch). State here is in-memory
-    * (driver-held frames over executor-cached blocks) — the
-    * demonstration shape. Production durability composes the two seams
-    * that already exist: persist each fold's keyed outputs (canon,
-    * assign) through TripleSink.merge and the append-only logs as
-    * parquet appends keyed by batch id — idempotent under Structured
-    * Streaming's same-id batch retry, like [[triplesIngestToSink]]. */
-  def triplesIngestDelta(spark: SparkSession, sfDir: String,
-                         nParts: Int = 16,
-                         filesPerTrigger: Option[Int] = None)
-      : (graft.operators.KgDelta.State, Int) = {
-    var state = graft.operators.KgDelta.empty(spark)
-    var nBatches = 0
-    val q = rawTriplesStream(spark, sfDir, nParts, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        state = graft.operators.KgDelta.update(state, batch)._1
-        nBatches += 1
-      }
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (state, nBatches)
-  }
-
-  /** The DURABLE form of [[triplesIngestDelta]] — exactly-once
-    * incremental KG maintenance across restarts, with no transactional
-    * API: the checkpoint ledger pins which input files each batch id
-    * consumed, and [[graft.operators.DurableKg]] pins which folds each
-    * batch id committed (atomic marker; re-folding a committed id is a
-    * no-op; a batch retried after a mid-fold crash overwrites its torn
-    * dirs under the SAME id). Restarting over unchanged input folds
-    * nothing and reconstructs the identical state from storage
-    * (StreamingSpec). Returns the maintained state and how many NEW
-    * folds this drain committed. */
-  def triplesIngestDeltaDurable(spark: SparkSession, sfDir: String,
-                                stateDir: String, checkpointDir: String,
-                                nParts: Int = 16,
-                                filesPerTrigger: Option[Int] = None)
-      : (graft.operators.KgDelta.State, Int) = {
-    val kg = new graft.operators.DurableKg(spark, stateDir)
-    var folds = 0
-    val q = rawTriplesStream(spark, sfDir, nParts, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (kg.fold(batch, id).isDefined) folds += 1
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    (kg.state, folds)
+        graft.operators.Stages.extract(pages, ExtractParts), bcModel)).toDF()
   }
 
   /** The FULL incremental loop, durable end to end: micro-batches fold
@@ -316,17 +249,19 @@ object Streaming {
     * restart is a no-op and the table equals the batch pipeline).
     * Per-batch cost is O(batch + touched components + affected
     * partitions); nothing in the loop rescans the accumulated corpus
-    * or rewrites the unaffected table. Returns the maintained state
-    * and how many NEW folds this drain committed. */
+    * or rewrites the unaffected table. `filesPerTrigger` sizes
+    * micro-batches (None = engine default: all available input in one
+    * batch). Returns the maintained state and how many NEW folds this
+    * drain committed. */
   def kgMaintainToSink(spark: SparkSession, sfDir: String,
                        tablePath: String, stateDir: String,
-                       checkpointDir: String, nParts: Int = 16,
+                       checkpointDir: String,
                        filesPerTrigger: Option[Int] = None)
       : (graft.operators.KgDelta.State, Int) = {
     import graft.sources.TripleSink
     val kg = new graft.operators.DurableKg(spark, stateDir)
     var folds = 0
-    val q = rawTriplesStream(spark, sfDir, nParts, filesPerTrigger)
+    val q = rawTriplesStream(spark, sfDir, filesPerTrigger)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val runId = f"batch-$id%06d"
@@ -353,8 +288,7 @@ object Streaming {
   }
 
   /** Streaming ingest into the SNAPSHOT TABLE ([[graft.sources
-    * .TripleSink]]) — the Iceberg streaming-commit pattern, vs
-    * [[triplesIngestDurable]]'s flat file sink. Each micro-batch
+    * .TripleSink]]) — the Iceberg streaming-commit pattern. Each micro-batch
     * commits ONE append snapshot whose runId is the deterministic
     * batch id, which makes the commit idempotent: Structured
     * Streaming's contract is that a batch that fails mid-commit is
@@ -368,9 +302,8 @@ object Streaming {
     * other snapshot table (q_sink_compact). Returns the final table
     * row count. */
   def triplesIngestToSink(spark: SparkSession, sfDir: String,
-                          tablePath: String, checkpointDir: String,
-                          nParts: Int = 16): Long = {
-    val q = rawTriplesStream(spark, sfDir, nParts)
+                          tablePath: String, checkpointDir: String): Long = {
+    val q = rawTriplesStream(spark, sfDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.sources.TripleSink.write(batch, tablePath, f"batch-$id%06d",
@@ -382,31 +315,5 @@ object Streaming {
       .start()
     q.awaitTermination()
     graft.sources.TripleSink.read(spark, tablePath).count()
-  }
-
-  /** The DURABLE form of [[triplesIngest]]: parquet sink + a persistent
-    * checkpoint directory — Structured Streaming's exactly-once
-    * contract for file sources/sinks. The checkpoint ledger records
-    * which input files each committed micro-batch consumed, so a
-    * RESTART of the same (outDir, checkpointDir) pair processes only
-    * files that arrived since — re-running over an unchanged input is
-    * a no-op, never a duplicate (ResumeSpec-style restart semantics,
-    * asserted in StreamingSpec). This is the streaming counterpart of
-    * the batch [[graft.plans.Lineage]] resume: same idea (durable
-    * ledger keyed by input), enforced by the engine instead of our
-    * manifest. Returns the total row count in the sink after the
-    * drain. */
-  def triplesIngestDurable(spark: SparkSession, sfDir: String,
-                           outDir: String, checkpointDir: String,
-                           nParts: Int = 16): Long = {
-    val q = rawTriplesStream(spark, sfDir, nParts)
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).count()
   }
 }

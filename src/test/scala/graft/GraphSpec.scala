@@ -56,41 +56,6 @@ class GraphSpec extends AnyFunSuite {
     assert(rs(2L) == rs(6L)) // leaves identical by symmetry
   }
 
-  test("durable pin mode: identical output, parquet pins on disk") {
-    import spark.implicits._
-    // a graph with triangles AND enough iterations to cross a pr pin
-    val rnd = new scala.util.Random(23)
-    val edges = (for {
-      a <- 1L to 30L; b <- (a + 1) to 30L if rnd.nextDouble() < 0.25
-    } yield (a, b)).toSeq
-    val g = edgeDf(edges: _*)
-
-    val triDir = java.nio.file.Files.createTempDirectory("graft-tri-durable").toString
-    val triLocal = Graph.triangleCounts(g)
-      .as[(Long, Long, Long)].collect().toSet
-    val triDurable = Graph.triangleCounts(g, durableDir = Some(triDir))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(triDurable == triLocal, "durable triangle counts diverged")
-    // the pins are real durable parquet (committed _SUCCESS markers)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$triDir/tri-deg/_SUCCESS")))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$triDir/tri-oriented/_SUCCESS")))
-
-    val prDir = java.nio.file.Files.createTempDirectory("graft-pr-durable").toString
-    val prLocal = Graph.pageRankFixedPoint(g, iterations = 6)
-      .as[(Long, Long)].collect().toSet
-    val prDurable = Graph.pageRankFixedPoint(g, iterations = 6,
-        durableDir = Some(prDir))
-      .as[(Long, Long)].collect().toSet
-    assert(prDurable == prLocal, "durable pagerank diverged")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$prDir/pr-edges/_SUCCESS")))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$prDir/pr-rank-4/_SUCCESS")),
-      "the every-4-iterations rank pin must be durable too")
-  }
-
   test("copurchase edges are canonical and distinct") {
     import spark.implicits._
     val li = Seq((1L, 10L), (1L, 20L), (1L, 10L), (2L, 20L), (2L, 10L))

@@ -37,53 +37,6 @@ class CcSpec extends AnyFunSuite {
     assert(local == dist)
   }
 
-  test("reliable-checkpoint mode: identical output, superseded iter dirs cleaned") {
-    val rng = new scala.util.Random(7)
-    val edges = Seq.fill(400)((rng.nextInt(150).toLong, rng.nextInt(150).toLong))
-      .toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("cc-reliable").toString
-    val plain = ConnectedComponents.run(edges, localThreshold = 0)
-      .as[(Long, Long)].collect().toSet
-    val rel = ConnectedComponents.run(edges, localThreshold = 0,
-        reliable = Some(ConnectedComponents.Reliable(dir, every = 2)))
-      .as[(Long, Long)].collect().toSet
-    assert(rel == plain)
-    // only the newest durable iteration survives on disk
-    val iters = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .toArray.map(_.toString).filter(_.contains("cc-iter-"))
-    assert(iters.length == 1, s"expected exactly the last iter dir, got ${iters.toSeq}")
-    iters.foreach { p =>
-      java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-  }
-
-  test("reliable mode resumes from the newest committed iteration") {
-    val rng = new scala.util.Random(13)
-    val edges = Seq.fill(300)((rng.nextInt(120).toLong, rng.nextInt(120).toLong))
-      .toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("cc-resume").toString
-    val first = ConnectedComponents.run(edges, localThreshold = 0,
-        reliable = Some(ConnectedComponents.Reliable(dir, every = 1)))
-      .as[(Long, Long)].collect().toSet
-    // A re-invocation over the same dir must RESUME from the surviving
-    // committed iteration, not recompute from its input: feed a decoy
-    // edge set and assert the prior run's answer comes back (the
-    // documented dir-is-per-logical-run contract makes resume
-    // observable; a job-level retry after a mid-loop crash hits exactly
-    // this path with the real input).
-    val decoy = Seq((900L, 901L)).toDF("src", "dst")
-    val resumed = ConnectedComponents.run(decoy, localThreshold = 0,
-        reliable = Some(ConnectedComponents.Reliable(dir, every = 1)))
-      .as[(Long, Long)].collect().toSet
-    assert(resumed == first, "second run over the same dir must resume, not recompute")
-    scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))) { fs =>
-      fs.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-  }
-
   test("adversarial star + chain graphs") {
     // hot star: one hub linked to 1000 spokes; plus a 64-node chain
     val star = (1L to 1000L).map(i => (5000L, 5000L + i))
@@ -100,10 +53,10 @@ class LinkingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def mkMentions(ms: Seq[(String, String)]): org.apache.spark.sql.Dataset[MentionRow] =
-    ms.zipWithIndex.map { case ((m, ty), i) =>
-      MentionRow(s"u$i", 0, m, ty, 0, m.length, Text.normalizeMention(m))
-    }.toDS()
+  /** Mention-level counts (etype, norm_key, mention, cnt), one per mention. */
+  private def mentionCounts(ms: Seq[(String, String)]) =
+    ms.map { case (m, ty) => (ty, Text.normalizeMention(m), m, 1L) }
+      .toDF("etype", "norm_key", "mention", "cnt")
 
   test("planted alias pairs are blocked and linked; negatives rejected") {
     val ms = Seq(
@@ -112,7 +65,7 @@ class LinkingSpec extends AnyFunSuite {
       ("北京大学", "ORG"), ("北京大学", "ORG"), ("北京大学", "ORG"), ("北大", "ORG"),
       ("清华大学", "ORG"), ("腾讯公司", "ORG"), ("百度公司", "ORG"), ("华为技术", "ORG"),
       ("北京", "LOC"), ("上海", "LOC"), ("张伟", "PER"), ("王芳", "PER"))
-    val nodes = Linking.nodes(mkMentions(ms))
+    val nodes = Linking.nodesFromCounts(mentionCounts(ms))
     val edges = Linking.edges(Linking.signatures(nodes)).collect()
     val pairs = edges.map(e => Set(e.key_a, e.key_b)).toSet
     assert(pairs.contains(Set("阿里巴巴", "阿里巴巴集团")), s"missing alias pair; got ${pairs.mkString}")

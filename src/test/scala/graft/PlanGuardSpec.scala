@@ -162,8 +162,8 @@ class PlanGuardSpec extends AnyFunSuite {
     // a one-append span over an accumulated table: the manifest diff
     // must resolve the read to the appended run alone — at 10^12 rows
     // a changelog read that touches the table is useless as the
-    // incremental feed it exists to be (CdcBench measures the constant
-    // cost; this guard pins the mechanism)
+    // incremental feed it exists to be (`graft.Bench cdc`'s `tail_sec`
+    // measures the constant cost; this guard pins the mechanism)
     // the files the changelog's snapshot-relation scans plan
     // (`inputFiles` is empty for a DSv2 relation)
     val chg = TripleSink.changes(spark, path, "r1", "r2")

@@ -197,27 +197,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("durable ingest: restart over unchanged input is a no-op, never a duplicate") {
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    val out = s"$base/triples"
-    val ckpt = s"$base/ckpt"
-    val n1 = Streaming.triplesIngestDurable(spark, "/root/testdata/sf0.001", out, ckpt)
-    assert(n1 > 0)
-    // second drain with the same checkpoint: the ledger knows the input
-    // file was consumed by a committed batch — zero new rows
-    val n2 = Streaming.triplesIngestDurable(spark, "/root/testdata/sf0.001", out, ckpt)
-    assert(n2 == n1, s"restart duplicated rows: $n1 -> $n2")
-    // and the sink content equals the one-shot drain VALUE FOR VALUE
-    // (round-4 verdict item 7: a count match can hide wrong rows)
-    import spark.implicits._
-    val cols = Seq("url", "sent_idx", "subj", "pred", "obj", "rule_id")
-    val direct = Streaming.triplesIngest(spark, "/root/testdata/sf0.001")
-      .select(cols.head, cols.tail: _*).collect().toSet
-    val sunk = spark.read.parquet(out)
-      .select(cols.head, cols.tail: _*).collect().toSet
-    assert(sunk == direct, "durable sink content diverged from the memory drain")
-  }
-
   test("snapshot-sink ingest: per-batch append snapshots, idempotent batch retry, restart no-op") {
     import graft.sources.TripleSink
     val base = java.nio.file.Files.createTempDirectory("graft_ingest_sink").toString
@@ -260,32 +239,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(n2 == n1, s"restart duplicated rows: $n1 -> $n2")
   }
 
-  test("triplesIngestDelta: per-micro-batch KG folds == the batch pipeline, value for value") {
-    import spark.implicits._
-    // split the corpus into 4 files so AvailableNow + maxFilesPerTrigger=1
-    // drains as 4 real micro-batches, each folding into the maintained KG
-    val base = java.nio.file.Files.createTempDirectory("graft_delta_stream").toString
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .repartition(4).write.parquet(s"$base/documents.parquet")
-
-    val (state, nBatches) = Streaming.triplesIngestDelta(
-      spark, base, filesPerTrigger = Some(1))
-    assert(nBatches >= 2, s"expected a multi-batch drain, got $nBatches")
-
-    // ground truth: the batch pipeline from scratch over the same pages
-    val out = Pipeline.runOnTestdata(spark, base)
-    assert(state.canon.select("etype", "norm_key", "canon")
-        .as[(String, String, String)].collect().toSet ==
-      out.canon.select("etype", "norm_key", "canon")
-        .as[(String, String, String)].collect().toSet,
-      "streamed delta canon map diverged from the batch pipeline")
-    assert(graft.operators.KgDelta.triples(state)
-        .as[(String, String, String)].collect().toSet ==
-      out.triples.select("subj", "pred", "obj")
-        .as[(String, String, String)].collect().toSet,
-      "streamed delta triple view diverged from the batch pipeline")
-  }
-
   test("kgMaintainToSink: the snapshot table tracks the canonical view batch by batch; restart is a no-op") {
     import spark.implicits._
     import graft.sources.TripleSink
@@ -305,8 +258,18 @@ class StreamingSpec extends AnyFunSuite {
     def tableSet = TripleSink.read(spark, s"$base/table")
       .select("subj", "pred", "obj").as[(String, String, String)].collect().toSet
     assert(tableSet == expected, "maintained table diverged from the batch pipeline")
-    assert(tableSet == graft.operators.KgDelta.triples(state)
-      .as[(String, String, String)].collect().toSet)
+    def viewSet(st: graft.operators.KgDelta.State) =
+      graft.operators.KgDelta.triples(st).as[(String, String, String)].collect().toSet
+    val view = viewSet(state)
+    assert(tableSet == view)
+    // and the maintained canon map equals the batch pipeline's
+    def canonSet(st: graft.operators.KgDelta.State) =
+      st.canon.select("etype", "norm_key", "canon")
+        .as[(String, String, String)].collect().toSet
+    val canon = canonSet(state)
+    assert(canon == out.canon.select("etype", "norm_key", "canon")
+        .as[(String, String, String)].collect().toSet,
+      "maintained canon map diverged from the batch pipeline")
 
     // one snapshot per fold (bootstrap overwrite + one delta per batch),
     // and the manifest stats survive a full-recompute audit
@@ -314,10 +277,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(snaps.size == folds1 && snaps.forall(_._2.startsWith("batch-")))
     assert(TripleSink.statsAudit(spark, s"$base/table"))
 
-    // restart over unchanged input: no folds, no snapshots, same table
-    val (_, folds2) = Streaming.kgMaintainToSink(spark, base,
+    // restart over unchanged input: no folds, no snapshots, same table,
+    // and the state reloaded from storage equals the first drain's
+    val (restarted, folds2) = Streaming.kgMaintainToSink(spark, base,
       s"$base/table", s"$base/state", s"$base/ckpt", filesPerTrigger = Some(1))
     assert(folds2 == 0, s"restart re-folded $folds2 batches")
+    assert(canonSet(restarted) == canon, "restarted state's canon map diverged")
+    assert(viewSet(restarted) == view, "restarted state's triple view diverged")
     assert(TripleSink.snapshots(s"$base/table").size == snaps.size,
       "restart published new snapshots")
     assert(tableSet == expected, "restart changed the table")
@@ -331,33 +297,6 @@ class StreamingSpec extends AnyFunSuite {
         spark.emptyDataFrame.select(), snaps.last._2)
       assert(tableSet == before, "idempotent delta retry changed the table")
     }
-  }
-
-  test("triplesIngestDeltaDurable: restart folds nothing and reloads the identical state") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_delta_durable").toString
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .repartition(3).write.parquet(s"$base/documents.parquet")
-
-    val (s1, folds1) = Streaming.triplesIngestDeltaDurable(
-      spark, base, s"$base/state", s"$base/ckpt", filesPerTrigger = Some(1))
-    assert(folds1 >= 2, s"expected a multi-fold drain, got $folds1")
-    // restart over unchanged input: ledger says all consumed -> 0 folds
-    val (s2, folds2) = Streaming.triplesIngestDeltaDurable(
-      spark, base, s"$base/state", s"$base/ckpt", filesPerTrigger = Some(1))
-    assert(folds2 == 0, s"restart re-folded $folds2 batches")
-
-    val cols = Seq("etype", "norm_key", "canon")
-    val c1 = s1.canon.select(cols.head, cols.tail: _*).collect().toSet
-    assert(s2.canon.select(cols.head, cols.tail: _*).collect().toSet == c1,
-      "restarted state diverged")
-    // and the durable state equals the batch pipeline from scratch
-    val out = Pipeline.runOnTestdata(spark, base)
-    assert(c1 == out.canon.select(cols.head, cols.tail: _*).collect().toSet)
-    assert(graft.operators.KgDelta.triples(s2)
-        .as[(String, String, String)].collect().toSet ==
-      out.triples.select("subj", "pred", "obj")
-        .as[(String, String, String)].collect().toSet)
   }
 
   test("triplesIngest (streamed A2->A10) == the batch stages, value for value") {
