@@ -92,7 +92,7 @@ final class DurableKg(spark: SparkSession, dir: String) {
     * spanning both stores: a crash before the fold commit retries the
     * whole batch under the same id, recomputing the IDENTICAL delta
     * (the fold is deterministic), so the downstream publish only has
-    * to be idempotent per batch id (TripleSink.applyDelta is; see
+    * to be idempotent per batch id (TripleSink.applyDeltaMOR is; see
     * Streaming.kgMaintainToSink). A crash after the commit skips both
     * sides on retry. */
   def fold(batchRaw: DataFrame, batchId: Long,

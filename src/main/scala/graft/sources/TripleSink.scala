@@ -28,7 +28,6 @@ import graft.sources.v2.TriplesTable
   * {{{
   *   <path>/data/run=<runId>/part_id=N/  -- data files per commit
   *   <path>/_manifests/manifest-<seq>-<runId>.json  -- one per snapshot
-  *   <path>/_manifest.json               -- copy of the LATEST manifest
   *   <path>/_refs/tag-<name>.json        -- named snapshot refs
   *   <path>/_branches/<name>/_manifests/ -- writable refs ([[createBranch]]):
   *                                          per-branch manifest chains over
@@ -156,6 +155,7 @@ object TripleSink {
                       opLabel: Option[String],
                       branch: Option[String]): Unit = {
     validateRunId(runId)
+    require(nParts >= 1, s"nParts must be at least 1, got $nParts")
     val spark = triples.sparkSession
     val all = manifests(path, branch)
     requireRunIdFreeElsewhere(path, runId, branch, all)
@@ -176,9 +176,6 @@ object TripleSink {
         s"retry of run_id=$runId must reuse its nParts=${orig.nParts}, got $nParts")
     }
     prior.filter(_ => append && retryOf.isEmpty).foreach { p =>
-      require(p.nParts > 0,
-        "append onto a pre-v3 manifest with no recorded partition spec - " +
-          "overwrite or compact() to upgrade first")
       require(p.nParts == nParts,
         s"append with nParts=$nParts onto a table partitioned with " +
           s"nParts=${p.nParts}: one partition spec per snapshot lineage - " +
@@ -245,91 +242,67 @@ object TripleSink {
       s"run_id=$runId already committed - merge commits are not retryable")
     requireRunIdFreeElsewhere(path, runId, None, all)
     val prior = all.last
-    require(prior.nParts > 0,
-      "table's latest manifest is pre-v3 with no recorded partition spec - " +
-        "run compact() to upgrade before row-level commits")
+    val schemaCols = prior.schema.map(_._1)
     val upd = stampPart(conformDelta(updates, prior.schema, "updates"), prior.nParts)
       .localCheckpoint(true) // consumed twice (affected probe + union) and
                              // must not re-read table dirs this commit rewrites
-    cowRewrite(spark, path, prior, runId, add = upd,
-      removeKeys = upd.select(col("subj").as("u_subj"),
-        col("pred").as("u_pred"), col("part_id")),
-      removeCond = col("subj") === col("u_subj") &&
-        col("pred") === col("u_pred"),
-      op = "merge")
-  }
-
-  /** Row-level DELTA commit — the MERGE/DELETE pairing an incrementally
-    * maintained view needs: `retractions` rows LEAVE the table
-    * (full-row match on the data schema, set semantics — every copy of
-    * a retracted row goes) and `additions` rows ENTER it, as ONE
-    * copy-on-write snapshot. Only the hash partitions containing an
-    * addition or retraction subject are rewritten; an empty delta
-    * publishes a no-op snapshot so a one-commit-per-batch consumer
-    * keeps its bookkeeping. This is the sink-side counterpart of
-    * [[graft.operators.KgDelta]]'s per-batch Delta: applying each
-    * batch's (additions, retractions) keeps the materialized canonical
-    * triple view current at O(affected partitions) per batch, and
-    * [[changes]] between the resulting snapshots reads the exact delta
-    * back out (KgDeltaSpec closes that loop). */
-  def applyDelta(spark: SparkSession, path: String, additions: DataFrame,
-                 retractions: DataFrame, runId: String): Unit = {
-    validateRunId(runId)
-    val all = manifests(path)
-    require(all.nonEmpty,
-      s"delta into an empty table under $path (bootstrap with write())")
-    val retry = all.find(_.runId == runId)
-    if (retry.isDefined) {
-      // idempotent retry (Structured Streaming re-runs a failed batch
-      // under the SAME id): the latest delta commit already published —
-      // and a deterministic producer recomputes the identical delta —
-      // so re-applying is a no-op. Any OLDER runId stays rejected.
-      require(all.last.runId == runId && retry.get.operation == "delta",
-        s"run_id=$runId already committed at seq=${retry.get.seq} as " +
-          s"${retry.get.operation} - only the LATEST delta commit is retryable")
+    val affected = upd.select("part_id").distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted // bounded by nParts
+    if (affected.isEmpty) {
+      // an empty update set publishes a no-op snapshot, so
+      // one-commit-per-batch consumers keep their bookkeeping
+      publish(path, prior.copy(seq = prior.seq + 1, runId = runId,
+        operation = "merge", file = null))
       return
     }
-    requireRunIdFreeElsewhere(path, runId, None, all)
-    val prior = all.last
-    require(prior.nParts > 0,
-      "table's latest manifest is pre-v3 with no recorded partition spec - " +
-        "run compact() to upgrade before row-level commits")
-    val nParts = prior.nParts
-    val schemaCols = prior.schema.map(_._1)
-    // must not lazily re-read dirs this commit swaps out
-    val add = stampPart(conformDelta(additions, prior.schema, "additions"), nParts)
+    // partition pruning: only affected part dirs of each visible run are
+    // read; survivors are their rows whose (subj, pred) no update carries
+    val survivors = readVisible(spark, path, prior)
+      .filter(col("part_id").isin(affected: _*))
+      .select(schemaCols.map(col): _*)
+      .join(upd.select(col("subj").as("u_subj"), col("pred").as("u_pred")).distinct(),
+        col("subj") === col("u_subj") && col("pred") === col("u_pred"), "left_anti")
+    val newData = survivors.unionByName(upd.select(schemaCols.map(col): _*))
+      // materialize BEFORE the write: the plan lazily reads the very
+      // partitions whose visibility this commit swaps out
       .localCheckpoint(true)
-    val del = stampPart(conformDelta(retractions, prior.schema, "retractions"), nParts)
-      .localCheckpoint(true)
-    cowRewrite(spark, path, prior, runId, add = add,
-      removeKeys = del.select(
-        schemaCols.map(c => col(c).as(s"r_$c")) :+ col("part_id"): _*),
-      removeCond = schemaCols.map(c => col(c) <=> col(s"r_$c")).reduce(_ && _),
-      op = "delta")
+    writeRunData(newData, path, runId, prior.nParts)
+    publishSwap(path, prior, runId, affected, runStats(spark, path, prior, runId))
   }
 
-  /** Row-level delta commit, MERGE-ON-READ form (Iceberg v2 equality
-    * deletes): `retractions` are written as a small DELETE FILE under
-    * `_deletes/run=<runId>` — scoped to the data runs visible at this
-    * commit, so later re-adds are untouched — and `additions` append
-    * as a normal run; NO existing partition is rewritten. Readers
-    * drop the rows active delete files match at scan time (cost
-    * proportional to the outstanding delete volume, reclaimed by the
-    * next [[compact]], which materializes the deletes away and clears
-    * the list). This is
-    * the escape hatch for [[applyDelta]]'s measured worst case: a
-    * retraction set scattered uniformly over subjects dirties every
-    * hash partition under copy-on-write (`graft.Bench cdc`,
-    * `cow_scattered_commit_sec` against `mor_scattered_commit_sec`),
-    * but commits here at O(batch) regardless of spread. Trade: COW
-    * pays at write time and reads clean; MOR pays at read time until
-    * compaction — the same dial Iceberg exposes.
+  /** Row-level DELTA commit, merge-on-read (Iceberg v2 equality
+    * deletes) — the MERGE/DELETE pairing an incrementally maintained
+    * view needs, and the sink-side counterpart of
+    * [[graft.operators.KgDelta]]'s per-batch delta: `retractions` rows
+    * LEAVE the table (full-row match on the data schema, set semantics)
+    * and `additions` rows ENTER it, as ONE snapshot. The retractions are
+    * written as a small DELETE FILE under `_deletes/run=<runId>` —
+    * scoped to the data runs visible at this commit, so later re-adds
+    * are untouched — and the additions append as a normal run; NO
+    * existing partition is rewritten, so a commit costs O(batch)
+    * however its rows spread over subjects. Readers drop the rows
+    * active delete files match at scan time (cost proportional to the
+    * outstanding delete volume, reclaimed by the next [[compact]],
+    * which materializes the deletes away and clears the list).
+    * [[changes]] between the resulting snapshots reads the exact delta
+    * back out (KgDeltaSpec closes that loop).
     *
-    * Contract (same set semantics as [[applyDelta]], plus): each
-    * retraction row must match a currently-visible row exactly once —
-    * that is what lets per-partition stats update by subtraction
-    * (rows subtract, hashes xor out) without scanning the table;
-    * [[statsAudit]] verifies and a violation fails it loudly. */
+    * Trade against copy-on-write (what [[merge]] does): a retraction
+    * set scattered uniformly over subjects dirties every hash partition
+    * under COW, which pays at write time and reads clean; MOR pays at
+    * read time until compaction — the same dial Iceberg exposes, both
+    * positions measured by `graft.Bench cdc` (`cow_scattered_commit_sec`
+    * against `mor_scattered_commit_sec`).
+    *
+    * An empty delta publishes a no-op snapshot, so a one-commit-per-batch
+    * consumer keeps its bookkeeping; re-committing the LATEST delta's
+    * runId is an idempotent no-op (Structured Streaming re-runs a failed
+    * batch under the same id, and a deterministic producer recomputes
+    * the identical delta). Contract: each retraction row must match a
+    * currently-visible row exactly once — that is what lets
+    * per-partition stats update by subtraction (rows subtract, hashes
+    * xor out) without scanning the table; [[statsAudit]] verifies and a
+    * violation fails it loudly. */
   def applyDeltaMOR(spark: SparkSession, path: String, additions: DataFrame,
                     retractions: DataFrame, runId: String): Unit = {
     validateRunId(runId)
@@ -345,9 +318,6 @@ object TripleSink {
     }
     requireRunIdFreeElsewhere(path, runId, None, all)
     val prior = all.last
-    require(prior.nParts > 0,
-      "table's latest manifest is pre-v3 with no recorded partition spec - " +
-        "run compact() to upgrade before row-level commits")
     val nParts = prior.nParts
     // additions are consumed once (writeRunData re-derives part_id and
     // MOR never rewrites a visible directory), so no stamp/checkpoint;
@@ -365,6 +335,10 @@ object TripleSink {
         .parquet(s"$path/_deletes/run=$runId")
     writeRunData(add, path, runId, nParts)
     val addStats = runStats(spark, path, prior, runId)
+    // no additions: the write left a _SUCCESS-only directory that no
+    // manifest will reference, so it goes now rather than as an orphan
+    if (addStats.isEmpty)
+      deleteRecursively(root(path).resolve("data").resolve(s"run=$runId"))
     if (addStats.isEmpty && delStats.isEmpty) {
       publish(path, prior.copy(seq = prior.seq + 1, runId = runId,
         operation = "delta-mor", file = null))
@@ -375,70 +349,33 @@ object TripleSink {
       seq = prior.seq + 1, runId = runId, operation = "delta-mor",
       snapshotId = partStats.foldLeft(0L)(_ ^ _.h),
       nParts = nParts,
-      visible = prior.visible :+ RunVis(runId, None),
+      visible =
+        if (addStats.isEmpty) prior.visible else prior.visible :+ RunVis(runId, None),
       schema = prior.schema, partitions = partStats, file = null,
       deletes =
         if (delStats.isEmpty) prior.deletes
         else prior.deletes :+ DeleteVis(runId, prior.visibleRunNames.distinct)))
   }
 
-  /** The shared copy-on-write body of [[merge]] and [[applyDelta]]:
-    * rewrite ONLY the hash partitions carrying an added or removed
-    * row — survivors are the touched partitions' rows that do not
-    * anti-join `removeKeys` on `removeCond`, plus `add` — then publish
-    * the partition swap. Both input frames must be part_id-stamped and
-    * checkpointed (they are consumed while the commit is in flight).
-    * An empty change set publishes a no-op snapshot so
-    * one-commit-per-batch consumers keep their bookkeeping. */
-  private def cowRewrite(spark: SparkSession, path: String, prior: Manifest,
-                         runId: String, add: DataFrame, removeKeys: DataFrame,
-                         removeCond: Column, op: String): Unit = {
-    val schemaCols = prior.schema.map(_._1)
-    val affected = add.select("part_id").unionByName(removeKeys.select("part_id"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted // bounded by nParts
-    if (affected.isEmpty) {
-      publish(path, prior.copy(seq = prior.seq + 1, runId = runId,
-        operation = op, file = null))
-      return
-    }
-    // partition pruning: only affected part dirs of each visible run are read
-    val touchedOld = readVisible(spark, path, prior)
-      .filter(col("part_id").isin(affected: _*))
-      .select(schemaCols.map(col): _*)
-    val survivors = touchedOld.join(
-      removeKeys.drop("part_id").distinct(), removeCond, "left_anti")
-    val newData = survivors.unionByName(add.select(schemaCols.map(col): _*))
-      // materialize BEFORE the write: the plan lazily reads the very
-      // partitions whose visibility this commit swaps out
-      .localCheckpoint(true)
-    writeRunData(newData, path, runId, prior.nParts)
-    publishSwap(path, prior, runId, affected,
-      runStats(spark, path, prior, runId), op)
-  }
-
-  /** Publish a copy-on-write partition-swap commit: `affected`
-    * partitions now live in run `runId` — restricted to the parts it
-    * actually wrote, so a partition emptied by deletes simply
-    * disappears from visibility — all others keep their prior
-    * visibility; stats carry over for untouched partitions and fold in
-    * the new run's. */
+  /** Publish [[merge]]'s copy-on-write partition swap: `affected`
+    * partitions now live in run `runId` (each holds at least one update
+    * row), all others keep their prior visibility; stats carry over for
+    * untouched partitions and fold in the new run's. */
   private def publishSwap(path: String, prior: Manifest, runId: String,
-                          affected: Seq[Int], newStats: Seq[PartStat],
-                          op: String): Unit = {
+                          affected: Seq[Int], newStats: Seq[PartStat]): Unit = {
     val affectedSet = affected.toSet
     val kept = visiblePartDirs(path, prior).filterNot(d => affectedSet(d._2))
       .groupMap(_._1)(_._2)
     val keptVis = prior.visibleRunNames.flatMap(r =>
       kept.get(r).map(ps => RunVis(r, Some(ps.sorted))))
-    val written = partsOnDisk(path, runId)
-    val vis = if (written.isEmpty) keptVis else keptVis :+ RunVis(runId, Some(written))
     val partStats = (prior.partitions.filterNot(p => affectedSet(p.partId)) ++ newStats)
       .sortBy(_.partId)
     publish(path, Manifest(
-      seq = prior.seq + 1, runId = runId, operation = op,
+      seq = prior.seq + 1, runId = runId, operation = "merge",
       snapshotId = partStats.foldLeft(0L)(_ ^ _.h),
       nParts = prior.nParts,
-      visible = vis, schema = prior.schema, partitions = partStats,
+      visible = keptVis :+ RunVis(runId, Some(partsOnDisk(path, runId))),
+      schema = prior.schema, partitions = partStats,
       file = null,
       // active delete files carry through a partition swap: they still
       // apply to the untouched partitions' rows (the swapped-out rows
@@ -999,8 +936,7 @@ object TripleSink {
     * visible run instead of the table (at the 10^12-row design point,
     * 1/nParts of the data per subject). The `subj` filter pushes into
     * the snapshot scan, which plans only the files of the subjects'
-    * partitions ([[subjectParts]]; a pre-v3 manifest records no spec
-    * and scans everything), and is re-applied to cut hash-bucket
+    * partitions ([[subjectParts]]), and is re-applied to cut hash-bucket
     * cohabitants. MOR deletes apply as in every snapshot read. */
   def lookupSubjects(spark: SparkSession, path: String,
                      subjects: Seq[String]): DataFrame = {
@@ -1124,9 +1060,9 @@ object TripleSink {
       .reduce(_ && _) && array_contains(col("del_scope"), col("run_id"))
 
   /** Schema-check a row-level frame (names and recorded types) and
-    * project it to the table's column order — shared by [[merge]], the
-    * COW ([[applyDelta]]) and MOR ([[applyDeltaMOR]]) paths so they
-    * cannot drift. */
+    * project it to the table's column order — shared by the keyed
+    * upsert ([[merge]]) and the delta commit ([[applyDeltaMOR]]) so
+    * they cannot drift. */
   private def conformDelta(df: DataFrame, schema: Seq[(String, String)],
                            what: String): DataFrame = {
     val schemaCols = schema.map(_._1)
@@ -1217,7 +1153,7 @@ object TripleSink {
     * second writer racing this commit fail loudly instead of silently
     * forking history (single-writer contract, documented above).
     * `branch = Some(name)` publishes onto that branch's chain instead
-    * of main's (and skips main's `_manifest.json` latest-copy). */
+    * of main's. */
   private def publish(path: String, m: Manifest,
                       branch: Option[String] = None): Unit = {
     val mdir = mdirOf(path, branch)
@@ -1241,14 +1177,6 @@ object TripleSink {
     val tmp = Files.createTempFile(mdir, s".manifest-${m.seq}-", ".tmp")
     Files.write(tmp, body)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE) // no REPLACE: same-name race fails
-    if (branch.isEmpty) {
-      // latest-manifest copy at the table root (convenience + back-compat);
-      // also published atomically so readers never see a torn file
-      val tmp2 = Files.createTempFile(root(path), ".manifest-latest-", ".tmp")
-      Files.write(tmp2, body)
-      Files.move(tmp2, root(path).resolve("_manifest.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
   }
 
   /** JSON string escape for manifest fields that are NOT charset-
@@ -1279,7 +1207,7 @@ object TripleSink {
       val scope = d.scope.map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"run":"${d.run}","scope":$scope}"""
     }.mkString("[", ",", "]")
-    s"""{"format":"graft-iceberg-emulation/3","table":"triples","seq":${m.seq},""" +
+    s"""{"format":"$ManifestFormat","table":"triples","seq":${m.seq},""" +
       s""""run_id":"${m.runId}","operation":"${m.operation}",""" +
       s""""snapshot_id":${m.snapshotId},"n_parts":${m.nParts},""" +
       s""""visible":$vis,"schema":$schema,"partitions":$parts,"deletes":$dels}"""
@@ -1338,52 +1266,54 @@ object TripleSink {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  private val ManifestFormat = "graft-iceberg-emulation/3"
+
+  /** Parse one manifest: exactly the shape [[render]] writes. Any other
+    * file — another format, a missing field, malformed JSON — is refused
+    * with an error naming it, never opened under a guessed default (a
+    * guessed partition spec would silently mis-hash lookups and
+    * row-level commits). */
   private def parseManifest(file: Path): Manifest = {
     import scala.jdk.CollectionConverters._
-    val n = mapper.readTree(Files.readAllBytes(file))
-    // format-2 compatibility (pre-v3 writers): visibility was a plain
-    // run-name array under "visible_runs", partitions had no hash, and
-    // the recorded schema included the part_id/run_id bookkeeping
-    // columns the v3 reader appends itself — parse all three shapes so
-    // an old table opens instead of NPEing. Reads and time travel work;
-    // statsAudit (needs v3 hashes) reports a mismatch, point lookups
-    // fall back to an unpruned scan, and spec-dependent WRITES
-    // (append/merge/delta) demand a compact() upgrade first — the
-    // legacy manifest records no partition spec, and guessing one
-    // would silently mis-hash.
-    val visible =
-      if (n.has("visible") && !n.get("visible").isNull)
-        n.get("visible").elements().asScala.map { rv =>
-          val parts = rv.get("parts")
-          RunVis(rv.get("run").asText(),
-            if (parts == null || parts.isNull) None
-            else Some(parts.elements().asScala.map(_.asInt()).toSeq))
-        }.toSeq
-      else n.get("visible_runs").elements().asScala
-        .map(r => RunVis(r.asText(), None)).toSeq
+    import com.fasterxml.jackson.databind.JsonNode
+    def refuse(why: String): Nothing = throw new IllegalArgumentException(
+      s"unreadable manifest $file: $why (expected format $ManifestFormat)")
+    def field(node: JsonNode, name: String): JsonNode =
+      Option(node.get(name)).getOrElse(refuse(s"no '$name' field"))
+    def elems(node: JsonNode, name: String): Seq[JsonNode] = {
+      val a = field(node, name)
+      if (!a.isArray) refuse(s"'$name' is not an array")
+      a.elements().asScala.toSeq
+    }
+    val n = try mapper.readTree(Files.readAllBytes(file)) catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        refuse(e.getOriginalMessage)
+    }
+    if (n == null || !n.isObject) refuse("not a JSON object")
+    val format = field(n, "format").asText()
+    if (format != ManifestFormat) refuse(s"format '$format'")
+    val nParts = field(n, "n_parts").asInt()
+    if (nParts < 1) refuse(s"n_parts $nParts")
     Manifest(
-      seq = n.get("seq").asInt(),
-      runId = n.get("run_id").asText(),
-      operation = n.get("operation").asText(),
-      snapshotId = n.get("snapshot_id").asLong(),
-      // -1 = pre-v3 manifest with NO recorded partition spec: reads
-      // never consult it, spec-dependent ops check for it (guessing a
-      // default would silently mis-hash lookups and merges)
-      nParts = if (n.has("n_parts")) n.get("n_parts").asInt() else -1,
-      visible = visible,
-      schema = n.get("schema").elements().asScala
-        .map(f => (f.get("name").asText(), f.get("type").asText()))
-        .filterNot(f => f._1 == "part_id" || f._1 == "run_id").toSeq,
-      partitions = n.get("partitions").elements().asScala
-        .map(p => PartStat(p.get("part_id").asInt(), p.get("rows").asLong(),
-          if (p.has("h")) p.get("h").asLong() else 0L)).toSeq,
+      seq = field(n, "seq").asInt(),
+      runId = field(n, "run_id").asText(),
+      operation = field(n, "operation").asText(),
+      snapshotId = field(n, "snapshot_id").asLong(),
+      nParts = nParts,
+      visible = elems(n, "visible").map { rv =>
+        val parts = field(rv, "parts")
+        RunVis(field(rv, "run").asText(),
+          if (parts.isNull) None else Some(parts.elements().asScala.map(_.asInt()).toSeq))
+      },
+      schema = elems(n, "schema")
+        .map(f => (field(f, "name").asText(), field(f, "type").asText())),
+      partitions = elems(n, "partitions")
+        .map(p => PartStat(field(p, "part_id").asInt(), field(p, "rows").asLong(),
+          field(p, "h").asLong())),
       file = file,
-      deletes =
-        if (!n.has("deletes")) Nil
-        else n.get("deletes").elements().asScala.map { d =>
-          DeleteVis(d.get("run").asText(),
-            d.get("scope").elements().asScala.map(_.asText()).toSeq)
-        }.toSeq)
+      deletes = elems(n, "deletes").map { d =>
+        DeleteVis(field(d, "run").asText(), elems(d, "scope").map(_.asText()))
+      })
   }
 
   /** part_ids a run directory holds on disk (manifest-less resolution

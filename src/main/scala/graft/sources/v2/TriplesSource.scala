@@ -44,9 +44,8 @@ import graft.sources.TripleSink
   *    listing job, so planning starts no Spark job.
   *  - PARTITION PRUNING from pushed `subj` and `part_id` predicates:
   *    EqualTo/In prune to the subjects' hash partitions
-  *    ([[TripleSink.subjectParts]], the writers' own hash; skipped for a
-  *    pre-v3 manifest, which records no spec) and to the named part_ids
-  *    at PLAN time. Reported as residual — Spark re-applies every
+  *    ([[TripleSink.subjectParts]], the writers' own hash) and to the
+  *    named part_ids at PLAN time. Reported as residual — Spark re-applies every
   *    predicate post-scan, so correctness never depends on the pruning
   *    math.
   *  - STATISTICS from the manifest: rows are the pruned partitions'
@@ -140,9 +139,7 @@ final class TriplesScanBuilder(path: String, m: TripleSink.Manifest,
   override def pushedFilters(): Array[Filter] = Array.empty
 
   override def build(): Scan = {
-    // a pre-v3 manifest records no partition spec: no subj pruning
-    val bySubj = subjSet.filter(_ => m.nParts > 0)
-      .map(TripleSink.subjectParts(_, m.nParts))
+    val bySubj = subjSet.map(TripleSink.subjectParts(_, m.nParts))
     val partFilter = (bySubj ++ partSet).reduceOption(_ intersect _)
     new TriplesScan(path, m, required, partFilter)
   }

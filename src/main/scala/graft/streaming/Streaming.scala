@@ -235,23 +235,25 @@ object Streaming {
   /** The FULL incremental loop, durable end to end: micro-batches fold
     * into the maintained KG ([[graft.operators.DurableKg]]) and each
     * fold's triple-view delta is published to a snapshot table as one
-    * row-level commit (TripleSink.applyDelta; the first batch
-    * bootstraps with an overwrite). The table therefore always holds
-    * the CURRENT canonical triple view — not the raw ingest log — with
-    * per-batch snapshots to time-travel and a changelog
-    * (TripleSink.changes) downstream consumers read deltas back out
-    * of. Exactly-once across BOTH stores with no cross-store
+    * merge-on-read commit (TripleSink.applyDeltaMOR: the additions
+    * append as a run, the retractions as a scoped delete file; the
+    * first batch bootstraps with an overwrite). The table therefore
+    * always holds the CURRENT canonical triple view — not the raw
+    * ingest log — with per-batch snapshots to time-travel and a
+    * changelog (TripleSink.changes) downstream consumers read deltas
+    * back out of. Exactly-once across BOTH stores with no cross-store
     * transaction: the checkpoint ledger pins inputs to batch ids, the
     * fold is deterministic, the sink commit (inside the fold's
     * pre-commit onDelta seam) is idempotent per batch id, and the fold
     * marker commits last — every crash window either retries both
     * sides under the same id or skips both (StreamingSpec asserts
     * restart is a no-op and the table equals the batch pipeline).
-    * Per-batch cost is O(batch + touched components + affected
-    * partitions); nothing in the loop rescans the accumulated corpus
-    * or rewrites the unaffected table. `filesPerTrigger` sizes
-    * micro-batches (None = engine default: all available input in one
-    * batch). Returns the maintained state and how many NEW folds this
+    * Per-batch cost is O(batch + touched components): the commit writes
+    * only the batch's delta and rewrites no existing partition, and
+    * nothing in the loop rescans the accumulated corpus; readers pay
+    * for the outstanding delete files until a compaction.
+    * `filesPerTrigger` sizes micro-batches (None = engine default: all
+    * available input in one batch). Returns the maintained state and how many NEW folds this
     * drain committed. */
   def kgMaintainToSink(spark: SparkSession, sfDir: String,
                        tablePath: String, stateDir: String,
@@ -274,7 +276,7 @@ object Streaming {
                // marker: the snapshot (overwrite bootstrap or delta)
                // is already published with this very content
           else
-            TripleSink.applyDelta(spark, tablePath,
+            TripleSink.applyDeltaMOR(spark, tablePath,
               delta.additions, delta.retractions, runId)
         })
         if (applied.isDefined) folds += 1

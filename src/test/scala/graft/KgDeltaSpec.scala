@@ -57,7 +57,7 @@ class KgDeltaSpec extends AnyFunSuite {
     }
   }
 
-  test("applyDelta: per-batch deltas maintain the sink view; changes() reads each delta back") {
+  test("applyDeltaMOR: per-batch deltas maintain the sink view; changes() reads each delta back") {
     import graft.sources.TripleSink
     val raw = Pipeline.runOnTestdata(spark, "/root/testdata/sf0.001")
       .rawTriples.toDF().localCheckpoint(true)
@@ -74,7 +74,7 @@ class KgDeltaSpec extends AnyFunSuite {
       if (i == 0)
         TripleSink.write(delta.additions, path, "batch-0", nParts = 8)
       else
-        TripleSink.applyDelta(spark, path, delta.additions, delta.retractions,
+        TripleSink.applyDeltaMOR(spark, path, delta.additions, delta.retractions,
           s"batch-$i")
 
       // the sink table IS the canonical view after every batch — equal

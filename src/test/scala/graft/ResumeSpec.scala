@@ -32,10 +32,15 @@ class ResumeSpec extends AnyFunSuite {
     assert(rows.filter(_._1 == "triples").map(_._2).toSeq == Seq(-1))
     assert(rows.map(r => (r._1, r._2)).distinct.length == rows.length, "duplicate commits")
 
-    // Iceberg-emulation sink: manifest exists and is valid JSON-ish
-    val manifest = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/triples_table/_manifest.json")))
+    // Iceberg-emulation sink: the commit published one manifest under
+    // _manifests/ and no copy of it at the table root
+    val mdir = java.nio.file.Paths.get(s"$dir/triples_table/_manifests")
+    val mfiles = scala.util.Using.resource(Files.list(mdir))(_.toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path]))
+    assert(mfiles.map(_.getFileName.toString) == Seq("manifest-000000-r1.json"), mfiles)
+    val manifest = new String(Files.readAllBytes(mfiles.head))
     assert(manifest.contains("\"snapshot_id\"") && manifest.contains("\"partitions\""))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/triples_table/_manifest.json")))
 
     // resume: second run with same runId skips all committed stages.
     // Semantics only — a wall-clock warm<cold assert would be JIT/GC
@@ -253,14 +258,14 @@ class ResumeSpec extends AnyFunSuite {
     // a delta retracting EVERY row leaves an empty-but-live table:
     // readable, auditable, changelog-readable, and recoverable through
     // the normal commit path (not permanently wedged)
-    TripleSink.applyDelta(spark, path, frame(),
+    TripleSink.applyDeltaMOR(spark, path, frame(),
       frame(("a", "p", "1"), ("b", "p", "2")), "d1")
     assert(TripleSink.read(spark, path).count() == 0)
     assert(TripleSink.statsAudit(spark, path))
     assert(TripleSink.changes(spark, path, "r1", "d1")
       .as[(String, String, String, String)].collect().toSet ==
       Set(("delete", "a", "p", "1"), ("delete", "b", "p", "2")))
-    TripleSink.applyDelta(spark, path, frame(("c", "p", "3")), frame(), "d2")
+    TripleSink.applyDeltaMOR(spark, path, frame(("c", "p", "3")), frame(), "d2")
     assert(TripleSink.read(spark, path)
       .select("subj", "pred", "obj").as[(String, String, String)]
       .collect().toSet == Set(("c", "p", "3")))
@@ -271,6 +276,56 @@ class ResumeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       TripleSink.write(frame(("x", "p", "1")), path, "bad/run\"id", nParts = 4)
     }
+  }
+
+  test("a merge-on-read commit without additions leaves no run directory behind") {
+    import graft.sources.TripleSink
+    val path = Files.createTempDirectory("graft-sink-mor-empty").toString
+    def frame(rows: (String, String, String)*) = rows.toDF("subj", "pred", "obj")
+    def runDir(run: String) = java.nio.file.Paths.get(path, "data", s"run=$run")
+    def visibleRuns = TripleSink.snapshotsDf(spark, path)
+      .orderBy("seq").select("visible_runs").as[Int].collect().toSeq
+    TripleSink.write(frame(("a", "p", "1"), ("b", "p", "2")), path, "r1", nParts = 4)
+    // retractions only: the delete file lands, the empty data run does not
+    TripleSink.applyDeltaMOR(spark, path, frame(), frame(("a", "p", "1")), "d1")
+    assert(!Files.exists(runDir("d1")), "empty additions left data/run=d1")
+    assert(Files.isDirectory(java.nio.file.Paths.get(path, "_deletes", "run=d1")))
+    // an empty delta: a no-op snapshot, and nothing on disk
+    TripleSink.applyDeltaMOR(spark, path, frame(), frame(), "d2")
+    assert(!Files.exists(runDir("d2")), "empty delta left data/run=d2")
+    assert(visibleRuns == Seq(1, 1, 1), "an empty addition run entered visibility")
+    assert(TripleSink.removeOrphans(path, 0L) == Nil)
+    assert(TripleSink.read(spark, path).select("subj", "pred", "obj")
+      .as[(String, String, String)].collect().toSet == Set(("b", "p", "2")))
+    assert(TripleSink.statsAudit(spark, path))
+    assert(TripleSink.changes(spark, path, "r1", "d2")
+      .as[(String, String, String, String)].collect().toSet ==
+      Set(("delete", "a", "p", "1")))
+  }
+
+  test("a commit refuses nParts below 1 before writing any data") {
+    import graft.sources.TripleSink
+    val path = Files.createTempDirectory("graft-sink-nparts").toString
+    def frame(rows: (String, String, String)*) = rows.toDF("subj", "pred", "obj")
+    Seq(-1, 0).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        TripleSink.write(frame(("a", "p", "1")), path, s"bad$n", nParts = n)
+      }
+      assert(e.getMessage.contains("nParts"), e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(path, "data", s"run=bad$n")))
+      assert(TripleSink.snapshots(path).isEmpty)
+    }
+    TripleSink.write(frame(("a", "p", "1")), path, "r1", nParts = 4)
+    Seq(-1, 0).foreach { n =>
+      intercept[IllegalArgumentException] {
+        TripleSink.write(frame(("b", "p", "2")), path, s"ap$n", nParts = n, append = true)
+      }
+      intercept[IllegalArgumentException](TripleSink.compact(spark, path, s"cp$n", nParts = n))
+      assert(TripleSink.snapshots(path) == Seq((0, "r1", 1L)))
+    }
+    // the table still takes appends under its recorded spec
+    TripleSink.write(frame(("b", "p", "2")), path, "r2", nParts = 4, append = true)
+    assert(TripleSink.read(spark, path).count() == 2)
   }
 
   test("sink merge-on-read deltas: delete files apply at read time; compaction materializes them away") {
@@ -919,49 +974,54 @@ class ResumeSpec extends AnyFunSuite {
       .select("subj").as[String].collect().toSet == Set("a", "b", "c", "d", "e", "f"))
   }
 
-  test("format-2 manifests (pre-v3 writers) still open: visible_runs + bookkeeping schema") {
+  test("only format-3 manifests open: a format-2 manifest or one missing n_parts is refused, naming the file") {
     import graft.sources.TripleSink
-    val path = Files.createTempDirectory("graft-sink-v2compat").toString
+    import java.nio.file.{Files => F, Paths => P}
     def frame(rows: (String, String, String)*) = rows.toDF("subj", "pred", "obj")
-    TripleSink.write(frame(("a", "p", "1"), ("b", "p", "2")), path, "r1", nParts = 4)
-    // rewrite the manifest as the round-4 writer emitted it: visibility
-    // as a plain run-name array, schema including part_id/run_id, and
-    // partition stats without the hash field
-    val v2 =
+    def refused(path: String, mfile: java.nio.file.Path, body: String): Unit = {
+      F.writeString(mfile, body)
+      def files = scala.util.Using.resource(F.list(mfile.getParent))(
+        _.toArray.map(_.toString).sorted.toSeq)
+      val listing = files
+      Seq[(String, () => Any)](
+        "read" -> (() => TripleSink.read(spark, path)),
+        "snapshots" -> (() => TripleSink.snapshots(path)),
+        "append" -> (() => TripleSink.write(frame(("c", "p", "3")), path, "r2",
+          nParts = 4, append = true)),
+        "merge" -> (() => TripleSink.merge(spark, path, frame(("a", "p", "1x")), "m1"))
+      ).foreach { case (name, op) =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains(mfile.toString), s"$name: ${e.getMessage}")
+      }
+      // the snapshot log is untouched: the same manifest files, the
+      // refused one byte-identical, and no data written
+      assert(files == listing)
+      assert(F.readString(mfile) == body)
+      assert(!F.exists(P.get(path, "data", "run=r2")) && !F.exists(P.get(path, "data", "run=m1")))
+    }
+
+    // the round-4 writer's shape: visibility as a plain run-name array,
+    // schema including part_id/run_id, partition stats without the hash
+    val v2Path = Files.createTempDirectory("graft-sink-v2").toString
+    TripleSink.write(frame(("a", "p", "1"), ("b", "p", "2")), v2Path, "r1", nParts = 4)
+    val v2File = P.get(v2Path, "_manifests", "manifest-000000-r1.json")
+    assert(F.exists(v2File))
+    refused(v2Path, v2File,
       """{"format":"graft-iceberg-emulation/2","table":"triples","seq":0,
         |"run_id":"r1","operation":"overwrite","snapshot_id":7,
         |"visible_runs":["r1"],
         |"schema":[{"name":"subj","type":"string"},{"name":"pred","type":"string"},
         |{"name":"obj","type":"string"},{"name":"part_id","type":"int"},
         |{"name":"run_id","type":"string"}],
-        |"partitions":[{"part_id":0,"rows":2}]}""".stripMargin.replace("\n", "")
-    val mfile = java.nio.file.Paths.get(path, "_manifests", "manifest-000000-r1.json")
-    assert(java.nio.file.Files.exists(mfile))
-    java.nio.file.Files.writeString(mfile, v2)
-    val got = TripleSink.read(spark, path)
-    assert(got.select("subj", "pred", "obj").as[(String, String, String)]
-      .collect().toSet == Set(("a", "p", "1"), ("b", "p", "2")))
-    // bookkeeping columns appear once, not duplicated from the old schema
-    assert(got.columns.count(_ == "run_id") == 1 &&
-      got.columns.count(_ == "part_id") == 1)
-    assert(TripleSink.snapshots(path) == Seq((0, "r1", 2L)))
-    // no partition spec is recorded, so point lookups fall back to the
-    // correct unpruned scan (never a guessed hash) and spec-dependent
-    // writes demand a compact() upgrade instead of mis-hashing silently
-    assert(TripleSink.lookupSubjects(spark, path, Seq("a"))
-      .select("subj", "pred", "obj").as[(String, String, String)]
-      .collect().toSet == Set(("a", "p", "1")))
-    assertThrows[IllegalArgumentException] {
-      TripleSink.merge(spark, path, frame(("a", "p", "1x")), "m1")
-    }
-    assertThrows[IllegalArgumentException] {
-      TripleSink.write(frame(("c", "p", "3")), path, "r2", nParts = 4, append = true)
-    }
-    TripleSink.compact(spark, path, "up1", nParts = 4) // format upgrade
-    TripleSink.merge(spark, path, frame(("a", "p", "1x")), "m1")
-    assert(TripleSink.read(spark, path)
-      .select("subj", "obj").as[(String, String)].collect().toSet ==
-      Set(("a", "1x"), ("b", "2")))
+        |"partitions":[{"part_id":0,"rows":2}]}""".stripMargin.replace("\n", ""))
+
+    // a format-3 manifest without its partition spec: no spec is guessed
+    val v3Path = Files.createTempDirectory("graft-sink-v3-nparts").toString
+    TripleSink.write(frame(("a", "p", "1"), ("b", "p", "2")), v3Path, "r1", nParts = 4)
+    val v3File = P.get(v3Path, "_manifests", "manifest-000000-r1.json")
+    val v3 = F.readString(v3File)
+    assert(v3.contains("\"n_parts\":4,"))
+    refused(v3Path, v3File, v3.replace("\"n_parts\":4,", ""))
   }
 
   test("a branch can never 'retry' its fork-point run id over main's data") {

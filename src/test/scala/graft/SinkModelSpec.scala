@@ -37,8 +37,8 @@ class SinkModelSpec extends AnyFunSuite {
 
     // first commit must be an overwrite (merge/delta need a table)
     val ops = "ov" +: Seq.fill(24)(rnd.nextInt(7) match {
-      case 0 => "ap"; case 1 => "ov"; case 2 => "mg"; case 3 => "dl"
-      case 4 => "mr"; case 5 => "rb"; case _ => "cp"
+      case 0 => "ap"; case 1 => "ov"; case 2 => "mg"
+      case 3 | 4 => "mr"; case 5 => "rb"; case _ => "cp"
     })
     ops.foreach { op =>
       val id = commitId(op)
@@ -59,18 +59,9 @@ class SinkModelSpec extends AnyFunSuite {
           TripleSink.merge(spark, path, upd.toSeq.toDF("subj", "pred", "obj"), id)
           val keys = upd.map(r => (r._1, r._2))
           model = model.filterNot(r => keys((r._1, r._2))) ++ upd
-        case "dl" =>
-          // row-level delta: retract a random existing subset, add new
-          // rows (possibly both empty -> the no-op-snapshot path)
-          val adds = randRows(rnd.nextInt(10)) -- model
-          val dels = rnd.shuffle(model.toSeq)
-            .take(rnd.nextInt(1 + model.size / 3)).toSet
-          TripleSink.applyDelta(spark, path,
-            adds.toSeq.toDF("subj", "pred", "obj"),
-            dels.toSeq.toDF("subj", "pred", "obj"), id)
-          model = model -- dels ++ adds
         case "mr" =>
-          // merge-on-read delta: same visible semantics as "dl", but
+          // row-level delta: retract a random existing subset, add new
+          // rows (possibly both empty -> the no-op-snapshot path),
           // committed as a delete file + append — no partition rewrite
           val adds = randRows(rnd.nextInt(10)) -- model
           val dels = rnd.shuffle(model.toSeq)

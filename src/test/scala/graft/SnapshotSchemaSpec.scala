@@ -171,7 +171,7 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     }
   }
 
-  test("merge, applyDelta and applyDeltaMOR refuse a retyped column at commit") {
+  test("merge and applyDeltaMOR refuse a retyped column at commit") {
     val path = Files.createTempDirectory("graft-retype-delta").toString
     def frame(subj: String, conf: org.apache.spark.sql.Column) =
       Seq((subj, "p", "1")).toDF("subj", "pred", "obj").withColumn("conf", conf)
@@ -180,9 +180,9 @@ class SnapshotSchemaSpec extends AnyFunSuite {
     val none = frame("x", lit(0.5)).limit(0)
     Seq[(String, () => Unit)](
       "merge" -> (() => TripleSink.merge(spark, path, frame("b", lit("0.5")), "m1")),
-      "applyDelta" -> (() => TripleSink.applyDelta(spark, path,
+      "applyDeltaMOR additions" -> (() => TripleSink.applyDeltaMOR(spark, path,
         frame("b", lit("0.5")), none, "c1")),
-      "applyDeltaMOR" -> (() => TripleSink.applyDeltaMOR(spark, path,
+      "applyDeltaMOR retractions" -> (() => TripleSink.applyDeltaMOR(spark, path,
         none, frame("a", lit(1)), "d1"))
     ).foreach { case (name, commit) =>
       val e = intercept[IllegalArgumentException](commit())

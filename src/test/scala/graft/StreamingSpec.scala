@@ -292,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
     // re-invoking the latest delta commit directly — must be a no-op
     if (snaps.size > 1) {
       val before = tableSet
-      TripleSink.applyDelta(spark, s"$base/table",
+      TripleSink.applyDeltaMOR(spark, s"$base/table",
         spark.emptyDataFrame.select(), // ignored on the retry path
         spark.emptyDataFrame.select(), snaps.last._2)
       assert(tableSet == before, "idempotent delta retry changed the table")
