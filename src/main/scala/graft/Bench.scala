@@ -51,10 +51,10 @@ object Bench {
   /** One JSON object, fields in order: strings quoted, doubles to 3
     * places, sequences as arrays, maps as objects. */
   private[graft] def json(fields: Iterable[(String, Any)]): String =
-    fields.map { case (k, v) => "\"" + k + "\":" + render(v) }.mkString("{", ",", "}")
+    fields.map { case (k, v) => Json.quote(k) + ":" + render(v) }.mkString("{", ",", "}")
 
   private def render(v: Any): String = v match {
-    case s: String => "\"" + s + "\""
+    case s: String => Json.quote(s)
     case d: Double => f"$d%.3f"
     case m: collection.Map[_, _] =>
       json(m.map { case (k, x) => k.toString -> x })

@@ -78,23 +78,23 @@ object Pipeline {
         val pagesParts = pages.toDF().withColumn("part_id",
           pmod(xxhash64(col("url")), lit(cfg.nParts)).cast("int"))
         val extracted = lin.runPartitioned("extracted",
-          Stages.extract(pages, cfg.nParts), Some(pagesParts))
+          Stages.extract(pages, cfg.nParts), pagesParts)
         val tagged = Stages.tag(extracted, bcModel)
         val raw = lin.runPartitioned("triples_raw", {
           // part_id rides along from extracted via a re-derivation on url
           Stages.rawTriples(tagged).toDF()
             .withColumn("part_id", pmod(xxhash64(col("url")), lit(cfg.nParts)).cast("int"))
-        }, Some(extracted))
+        }, extracted)
         val rawDs = raw.drop("part_id").as[RawTripleRow]
         val ments = Stages.mentions(tagged)
         val nodes = Linking.nodesFromTripleArgs(rawDs.toDF())
         val rawFp = lin.globalFingerprint(raw)
         val canon = lin.runGlobal("canon_map",
-          Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold), Some(rawFp))
+          Canonicalize.canonMapAdaptive(nodes, cfg.localThreshold), rawFp)
         // triples depend on BOTH raw and canon: combine the fingerprints
         val canonFp = lin.globalFingerprint(canon)
         val triples = lin.runGlobal("triples", Canonicalize.rewrite(rawDs, canon),
-          Some((rawFp._1 ^ canonFp._1, rawFp._2 + canonFp._2)))
+          (rawFp._1 ^ canonFp._1, rawFp._2 + canonFp._2))
         TripleSink.write(triples, s"$dir/triples_table", cfg.runId, cfg.nParts)
         Outputs(extracted, tagged, ments, rawDs, canon, triples)
     }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,11 +25,7 @@ import org.apache.spark.sql.functions._
   * the duplicate-row substitutions that xor alone self-cancels on —
   * see combineFp). On resume the input fingerprint is recomputed and
   * compared against the latest commit — a partition whose upstream
-  * input changed is recomputed instead of silently kept stale. Callers
-  * that cannot (or choose not to) pay the extra input scan pass
-  * `input = None`: commits then carry fingerprint 0 / rows_in -1 and
-  * resume trusts any committed partition (the pre-fingerprint
-  * behavior).
+  * input changed is recomputed instead of silently kept stale.
   *
   * Metrics: rows_in comes from the same aggregation as the input
   * fingerprint (free); per-partition rows_out from a post-write count
@@ -58,7 +54,7 @@ final class Lineage(spark: SparkSession, runDir: String, runId: String) {
 
   /** Tombstone commit marking a partition whose input disappeared; the
     * rows_in sentinel -2 never occurs in real commits (which carry
-    * >= 0, or -1 for the legacy no-input path). */
+    * >= 0). */
   private val TombstoneFp = Long.MinValue
   private val TombstoneRows = -2L
 
@@ -67,12 +63,6 @@ final class Lineage(spark: SparkSession, runDir: String, runId: String) {
     else spark.emptyDataset[(String, String, Int, Long, Long, Long, Long, Long, Long)]
       .toDF("run_id", "stage", "part_id", "rows_in", "rows_out",
         "started_ts", "finished_ts", "seq", "fingerprint")
-
-  /** Partitions with any commit record (regardless of fingerprint). */
-  def completedParts(stage: String): Set[Int] =
-    if (!exists(lineagePath)) Set.empty
-    else table.filter(col("run_id") === runId && col("stage") === stage)
-      .select("part_id").distinct().as[Int].collect().toSet
 
   /** Latest committed (input fingerprint, rows_in) per partition
     * (latest by commit sequence — a recomputed partition's new record
@@ -107,31 +97,32 @@ final class Lineage(spark: SparkSession, runDir: String, runId: String) {
 
   private val FpSumMod = 1000000007L
 
-  /** One aggregation pass over a part_id-carrying input: per partition,
-    * (order-independent row-hash fingerprint, row count). */
-  def inputStats(in: DataFrame): Map[Int, (Long, Long)] = {
-    val h = xxhash64(in.columns.filter(_ != "part_id").map(col): _*)
-    in.groupBy(col("part_id"))
-      .agg(bit_xor(h).as("fpx"),
-        sum(pmod(h, lit(FpSumMod)).cast("decimal(38,0)")).as("fps"),
-        count(lit(1)).as("n"))
+  /** One aggregation pass: each group of `keys` (its row, keys first)
+    * with its (order-independent fingerprint of xxhash64 over `hashed`,
+    * row count). No keys = one whole-table group, even over no rows. */
+  private def fingerprints(in: DataFrame, hashed: Seq[String],
+                           keys: String*): Array[(Row, (Long, Long))] = {
+    val h = xxhash64(hashed.map(col): _*)
+    val k = keys.size
+    in.groupBy(keys.map(col): _*)
+      .agg(bit_xor(h), sum(pmod(h, lit(FpSumMod)).cast("decimal(38,0)")), count(lit(1)))
       .collect()
       .map { r =>
-        val fpx = if (r.isNullAt(1)) 0L else r.getLong(1)
-        val fps = if (r.isNullAt(2)) java.math.BigDecimal.ZERO else r.getDecimal(2)
-        r.getInt(0) -> (combineFp(fpx, fps), r.getLong(3))
-      }.toMap
+        val fpx = if (r.isNullAt(k)) 0L else r.getLong(k)
+        val fps = if (r.isNullAt(k + 1)) java.math.BigDecimal.ZERO else r.getDecimal(k + 1)
+        r -> (combineFp(fpx, fps), r.getLong(k + 2))
+      }
   }
 
+  /** Per partition of a part_id-carrying input: (order-independent
+    * row-hash fingerprint, row count). */
+  def inputStats(in: DataFrame): Map[Int, (Long, Long)] =
+    fingerprints(in, in.columns.filter(_ != "part_id").toSeq, "part_id")
+      .map { case (r, stats) => r.getInt(0) -> stats }.toMap
+
   /** Whole-table (fingerprint, rows) for global-stage inputs. */
-  def globalFingerprint(in: DataFrame): (Long, Long) = {
-    val h = xxhash64(in.columns.map(col): _*)
-    val row = in.agg(bit_xor(h),
-      sum(pmod(h, lit(FpSumMod)).cast("decimal(38,0)")), count(lit(1))).head()
-    val fpx = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val fps = if (row.isNullAt(1)) java.math.BigDecimal.ZERO else row.getDecimal(1)
-    (combineFp(fpx, fps), row.getLong(2))
-  }
+  def globalFingerprint(in: DataFrame): (Long, Long) =
+    fingerprints(in, in.columns.toSeq).head._2
 
   /** Stage-level rows_out captured by Dataset.observe during the last
     * write this Lineage instance performed for `stage`. */
@@ -146,10 +137,10 @@ final class Lineage(spark: SparkSession, runDir: String, runId: String) {
   private def observedOrZero(obs: Observation): Long =
     obs.get.get("rows_out").map(_.asInstanceOf[Long]).getOrElse(0L)
 
-  /** Checkpoint a stage whose DataFrame carries an int `part_id` column.
-    * With `input` supplied, recomputes partitions that are uncommitted
-    * OR whose input fingerprint changed; without it, recomputes only
-    * uncommitted partitions. Returns the full materialized stage.
+  /** Checkpoint a stage whose DataFrame carries an int `part_id` column,
+    * computed from the part_id-carrying `input`: recomputes partitions
+    * that are uncommitted OR whose input fingerprint changed. Returns
+    * the full materialized stage.
     *
     * The write repartitions by part_id first: a bare
     * `partitionBy("part_id")` opens one writer per (task, part_id), so
@@ -161,114 +152,75 @@ final class Lineage(spark: SparkSession, runDir: String, runId: String) {
     * (file count == resume granularity, the shape a 100 TB run needs);
     * the shuffle it costs moves exactly the bytes being written anyway. */
   def runPartitioned(stage: String, compute: => DataFrame,
-                     input: Option[DataFrame] = None): DataFrame = {
+                     input: DataFrame): DataFrame = {
     val dataPath = s"$runDir/$stage"
     val started = System.currentTimeMillis()
-    input match {
-      case Some(in) =>
-        val stats = inputStats(in)
-        val state = partState(stage)
-        // staleness = fingerprint OR row count changed (see partState)
-        val todo = stats.keys.filter(p => !state.get(p).contains(stats(p))).toSeq.sorted
-        // a committed partition whose INPUT partition disappeared must
-        // not keep serving stale rows: drop its data and tombstone its
-        // commit so a reappearing input always recomputes
-        val orphaned = state.keys.filterNot(p => stats.contains(p) ||
-          state(p) == ((TombstoneFp, TombstoneRows))).toSeq.sorted
-        if (orphaned.nonEmpty) {
-          orphaned.foreach(p => deleteDir(s"$dataPath/part_id=$p"))
-          commit(orphaned.toArray.map { p =>
-            (runId, stage, p, TombstoneRows, 0L,
-              started, System.currentTimeMillis(), nextSeq(), TombstoneFp)
-          })
-        }
-        if (todo.nonEmpty) {
-          val obs = Observation()
-          compute.filter(col("part_id").isin(todo: _*))
-            .observe(obs, count(lit(1)).as("rows_out"))
-            .repartition(col("part_id")) // see note on partitionBy fan-out below
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_id")
-            .parquet(dataPath)
-          observed(stage) = observedOrZero(obs)
-          // a run whose every todo-partition computed to zero rows may
-          // have written nothing at all (partitionBy of an empty frame)
-          val written =
-            if (!hasData(dataPath)) Map.empty[Int, Long]
-            else spark.read.parquet(dataPath)
-              .filter(col("part_id").isin(todo: _*))
-              .groupBy("part_id").count().as[(Int, Long)].collect().toMap
-          // dynamic overwrite only touches partitions present in the new
-          // data: a stale partition whose recomputed output is EMPTY must
-          // be dropped explicitly or resume would keep serving old rows
-          todo.filterNot(written.contains)
-            .foreach(p => deleteDir(s"$dataPath/part_id=$p"))
-          commit(todo.toArray.map { p =>
-            (runId, stage, p, stats(p)._2, written.getOrElse(p, 0L),
-              started, System.currentTimeMillis(), nextSeq(), stats(p)._1)
-          })
-        }
-        // empty-input first run (no directory) or all-empty output
-        // (directory with only _SUCCESS): return an empty frame with
-        // the stage schema instead of letting the read throw
-        if (hasData(dataPath)) spark.read.parquet(dataPath)
-        else emptyLike(compute)
-
-      case None =>
-        val done = completedParts(stage)
-        val df = compute
-        val todo = df.filter(!col("part_id").isin(done.toSeq: _*))
-        val newParts: Array[Int] =
-          if (done.isEmpty) null // unknown yet; derive from written data below
-          else todo.select("part_id").distinct().as[Int].collect()
-        if (newParts == null || newParts.nonEmpty) {
-          val obs = Observation()
-          todo.observe(obs, count(lit(1)).as("rows_out"))
-            .repartition(col("part_id"))
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_id")
-            .parquet(dataPath)
-          observed(stage) = observedOrZero(obs)
-          val written =
-            if (!hasData(dataPath)) Array.empty[(Int, Long)]
-            else spark.read.parquet(dataPath)
-              .filter(!col("part_id").isin(done.toSeq: _*))
-              .groupBy("part_id").count()
-              .as[(Int, Long)].collect()
-          commit(written.map { case (p, n) =>
-            (runId, stage, p, -1L, n,
-              started, System.currentTimeMillis(), nextSeq(), 0L)
-          })
-        }
-        if (hasData(dataPath)) spark.read.parquet(dataPath)
-        else emptyLike(df)
+    val stats = inputStats(input)
+    val state = partState(stage)
+    // staleness = fingerprint OR row count changed (see partState)
+    val todo = stats.keys.filter(p => !state.get(p).contains(stats(p))).toSeq.sorted
+    // a committed partition whose INPUT partition disappeared must
+    // not keep serving stale rows: drop its data and tombstone its
+    // commit so a reappearing input always recomputes
+    val orphaned = state.keys.filterNot(p => stats.contains(p) ||
+      state(p) == ((TombstoneFp, TombstoneRows))).toSeq.sorted
+    if (orphaned.nonEmpty) {
+      orphaned.foreach(p => deleteDir(s"$dataPath/part_id=$p"))
+      commit(orphaned.toArray.map { p =>
+        (runId, stage, p, TombstoneRows, 0L,
+          started, System.currentTimeMillis(), nextSeq(), TombstoneFp)
+      })
     }
+    if (todo.nonEmpty) {
+      val obs = Observation()
+      compute.filter(col("part_id").isin(todo: _*))
+        .observe(obs, count(lit(1)).as("rows_out"))
+        .repartition(col("part_id")) // see note on partitionBy fan-out below
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(dataPath)
+      observed(stage) = observedOrZero(obs)
+      // a run whose every todo-partition computed to zero rows may
+      // have written nothing at all (partitionBy of an empty frame)
+      val written =
+        if (!hasData(dataPath)) Map.empty[Int, Long]
+        else spark.read.parquet(dataPath)
+          .filter(col("part_id").isin(todo: _*))
+          .groupBy("part_id").count().as[(Int, Long)].collect().toMap
+      // dynamic overwrite only touches partitions present in the new
+      // data: a stale partition whose recomputed output is EMPTY must
+      // be dropped explicitly or resume would keep serving old rows
+      todo.filterNot(written.contains)
+        .foreach(p => deleteDir(s"$dataPath/part_id=$p"))
+      commit(todo.toArray.map { p =>
+        (runId, stage, p, stats(p)._2, written.getOrElse(p, 0L),
+          started, System.currentTimeMillis(), nextSeq(), stats(p)._1)
+      })
+    }
+    // empty-input first run (no directory) or all-empty output
+    // (directory with only _SUCCESS): return an empty frame with
+    // the stage schema instead of letting the read throw
+    if (hasData(dataPath)) spark.read.parquet(dataPath)
+    else emptyLike(compute)
   }
 
   /** Checkpoint an unpartitioned (global) stage as a single unit
     * (part_id = -1). `inputFpRows` — from [[globalFingerprint]] over the
     * stage's input — makes the commit input-aware like the partitioned
-    * path; None trusts any existing commit. */
+    * path: a commit is reused only when its (fingerprint, rows) match. */
   def runGlobal(stage: String, compute: => DataFrame,
-                inputFpRows: Option[(Long, Long)] = None): DataFrame = {
+                inputFpRows: (Long, Long)): DataFrame = {
     val dataPath = s"$runDir/$stage"
-    val state = partState(stage)
-    val fp = inputFpRows.map(_._1).getOrElse(0L)
-    val fresh = inputFpRows match {
-      case Some(fpRows) => state.get(-1).contains(fpRows) // (fp, rows) must match
-      case None         => state.contains(-1)             // legacy: any commit counts
-    }
-    if (!fresh) {
+    if (!partState(stage).get(-1).contains(inputFpRows)) {
       val started = System.currentTimeMillis()
       val obs = Observation()
       compute.observe(obs, count(lit(1)).as("rows_out"))
         .write.mode(SaveMode.Overwrite).parquet(dataPath)
       val n = observedOrZero(obs)
       observed(stage) = n
-      commit(Array((runId, stage, -1, inputFpRows.map(_._2).getOrElse(-1L), n,
-        started, System.currentTimeMillis(), nextSeq(), fp)))
+      commit(Array((runId, stage, -1, inputFpRows._2, n,
+        started, System.currentTimeMillis(), nextSeq(), inputFpRows._1)))
     }
     spark.read.parquet(dataPath)
   }

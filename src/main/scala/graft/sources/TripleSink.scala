@@ -1179,26 +1179,19 @@ object TripleSink {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE) // no REPLACE: same-name race fails
   }
 
-  /** JSON string escape for manifest fields that are NOT charset-
-    * validated at entry: schema column names/types may carry any
-    * character Spark allows (backtick-quoted identifiers), and an
-    * unescaped quote would publish a manifest no reader can ever
-    * parse again — a commit that reports success and bricks the
-    * table. Run ids, tag and branch names stay validated instead. */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
+  /** Schema column names/types are quoted by [[graft.Json.quote]]: they
+    * are NOT charset-validated at entry (backtick-quoted identifiers may
+    * carry any character), and an unescaped quote would publish a
+    * manifest no reader can ever parse again — a commit that reports
+    * success and bricks the table. Run ids, tag and branch names stay
+    * validated instead. */
   private def render(m: Manifest): String = {
     val vis = m.visible.map { rv =>
       val parts = rv.parts.map(_.mkString("[", ",", "]")).getOrElse("null")
       s"""{"run":"${rv.run}","parts":$parts}"""
     }.mkString("[", ",", "]")
     val schema = m.schema.map { case (n, t) =>
-      s"""{"name":"${jsonEscape(n)}","type":"${jsonEscape(t)}"}"""
+      s"""{"name":${graft.Json.quote(n)},"type":${graft.Json.quote(t)}}"""
     }.mkString("[", ",", "]")
     val parts = m.partitions.map(p =>
       s"""{"part_id":${p.partId},"rows":${p.rows},"h":${p.h}}""")

@@ -705,21 +705,37 @@ class ResumeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-resume2").toString
     val lin = new graft.plans.Lineage(spark, dir, "rX")
 
+    def committed = lin.table.filter(col("stage") === "stage_a")
+      .select("part_id").distinct().as[Int].collect().toSet
+
     // simulate a killed run: stage committed for only half the partitions
     val full = spark.range(0, 1000)
       .select(col("id"), pmod(col("id"), lit(4)).cast("int").as("part_id"))
-    lin.runPartitioned("stage_a", full.filter(col("part_id") < 2))
-    assert(lin.completedParts("stage_a") == Set(0, 1))
+    val half = full.filter(col("part_id") < 2)
+    lin.runPartitioned("stage_a", half, half)
+    assert(committed == Set(0, 1))
 
     // resume with the full input: partitions 2,3 are computed, 0,1 kept
-    val recovered = lin.runPartitioned("stage_a", full)
+    val recovered = lin.runPartitioned("stage_a", full, full)
     assert(recovered.count() == 1000)
-    assert(lin.completedParts("stage_a") == Set(0, 1, 2, 3))
+    assert(committed == Set(0, 1, 2, 3))
     // committed rows_out per partition = 250 each
     val per = lin.table.filter(col("stage") === "stage_a")
       .groupBy("part_id").agg(sum("rows_out").as("n"))
       .as[(Int, Long)].collect().toMap
     assert(per == Map(0 -> 250L, 1 -> 250L, 2 -> 250L, 3 -> 250L))
+  }
+
+  test("global fingerprint equals the per-partition fingerprint of one partition") {
+    // the global and partitioned stages share one aggregation: a frame
+    // without part_id fingerprints as its single part_id = 0 partition
+    val lin = new graft.plans.Lineage(spark,
+      Files.createTempDirectory("graft-resume-fp").toString, "rG")
+    val df = spark.range(0, 500).select(col("id"), (col("id") * 3).as("v"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id").cast("string")).as("s"))
+    val global = lin.globalFingerprint(df)
+    assert(global._2 == 500L)
+    assert(global == lin.inputStats(df.withColumn("part_id", lit(0)))(0))
   }
 
   test("input fingerprint: mutated input partition recomputes exactly that partition") {
@@ -731,7 +747,7 @@ class ResumeSpec extends AnyFunSuite {
         col("id") * 2 + 1000).otherwise(col("id") * 2))
 
     val in1 = mkInput(false)
-    val out1 = lin.runPartitioned("s", in1.withColumn("v2", col("v") * 10), Some(in1))
+    val out1 = lin.runPartitioned("s", in1.withColumn("v2", col("v") * 10), in1)
     assert(out1.count() == 400)
     assert(lin.table.filter(col("stage") === "s").count() == 4)
     // rows_in per partition came from the fingerprint aggregation
@@ -743,12 +759,12 @@ class ResumeSpec extends AnyFunSuite {
 
     // identical input → zero new commits (nothing recomputed)
     val in2 = mkInput(false)
-    lin.runPartitioned("s", in2.withColumn("v2", col("v") * 10), Some(in2))
+    lin.runPartitioned("s", in2.withColumn("v2", col("v") * 10), in2)
     assert(lin.table.filter(col("stage") === "s").count() == 4)
 
     // mutate ONE input partition → exactly that partition recommits
     val in3 = mkInput(true)
-    val out3 = lin.runPartitioned("s", in3.withColumn("v2", col("v") * 10), Some(in3))
+    val out3 = lin.runPartitioned("s", in3.withColumn("v2", col("v") * 10), in3)
     val commits = lin.table.filter(col("stage") === "s")
       .groupBy("part_id").count().as[(Int, Long)].collect().toMap
     assert(commits == Map(0 -> 1L, 1 -> 1L, 2 -> 2L, 3 -> 1L),
@@ -769,19 +785,19 @@ class ResumeSpec extends AnyFunSuite {
       .filter(col("part_id").isin(parts: _*))
 
     val full = input(Seq(0, 1, 2, 3))
-    assert(lin.runPartitioned("s", full.withColumn("y", col("id") + 1), Some(full))
+    assert(lin.runPartitioned("s", full.withColumn("y", col("id") + 1), full)
       .count() == 400)
 
     // partition 3's input disappears entirely → resume must stop
     // serving its 100 stale output rows
     val shrunk = input(Seq(0, 1, 2))
-    val out = lin.runPartitioned("s", shrunk.withColumn("y", col("id") + 1), Some(shrunk))
+    val out = lin.runPartitioned("s", shrunk.withColumn("y", col("id") + 1), shrunk)
     assert(out.count() == 300, "stale rows of the removed input partition survived")
     assert(out.filter(col("part_id") === 3).count() == 0)
 
     // and if the input partition REAPPEARS, it recomputes (tombstone
     // does not match any real fingerprint)
-    val back = lin.runPartitioned("s", full.withColumn("y", col("id") + 1), Some(full))
+    val back = lin.runPartitioned("s", full.withColumn("y", col("id") + 1), full)
     assert(back.count() == 400)
     assert(back.filter(col("part_id") === 3).count() == 100)
   }
@@ -795,9 +811,9 @@ class ResumeSpec extends AnyFunSuite {
     val lin = new graft.plans.Lineage(spark, dir, "rD")
     def input(v: Long) = Seq((v, 0), (v, 0)).toDF("id", "part_id")
     val in1 = input(7L)
-    lin.runPartitioned("s", in1.withColumn("y", col("id") * 10), Some(in1))
+    lin.runPartitioned("s", in1.withColumn("y", col("id") * 10), in1)
     val in2 = input(9L)
-    val out = lin.runPartitioned("s", in2.withColumn("y", col("id") * 10), Some(in2))
+    val out = lin.runPartitioned("s", in2.withColumn("y", col("id") * 10), in2)
     assert(out.select("y").as[Long].collect().toSeq == Seq(90L, 90L),
       "stale output served for a duplicate-row substitution")
     assert(lin.table.filter(col("stage") === "s").count() == 2, "no recommit happened")
@@ -807,7 +823,7 @@ class ResumeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-resume6").toString
     val lin = new graft.plans.Lineage(spark, dir, "rE")
     val empty = spark.range(0).select(col("id"), lit(0).cast("int").as("part_id"))
-    val out = lin.runPartitioned("s", empty.withColumn("y", col("id")), Some(empty))
+    val out = lin.runPartitioned("s", empty.withColumn("y", col("id")), empty)
     assert(out.count() == 0)
     assert(out.columns.toSeq == Seq("id", "part_id", "y"))
   }
@@ -823,12 +839,12 @@ class ResumeSpec extends AnyFunSuite {
     val in = spark.range(6).select(col("id"),
       (col("id") % 2).cast("int").as("part_id"))
     def stage = in.filter(col("id") < 0).withColumn("y", col("id"))
-    val out = lin.runPartitioned("s", stage, Some(in))
+    val out = lin.runPartitioned("s", stage, in)
     assert(out.count() == 0)
     assert(out.columns.toSeq == Seq("id", "part_id", "y"))
     assert(lin.table.filter(col("stage") === "s").count() == 2,
       "both input partitions must commit (rows_out=0)")
-    val again = lin.runPartitioned("s", stage, Some(in))
+    val again = lin.runPartitioned("s", stage, in)
     assert(again.count() == 0)
     assert(lin.table.filter(col("stage") === "s").count() == 2, "rerun must resume, not recommit")
   }

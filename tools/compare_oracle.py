@@ -3,6 +3,9 @@
 
 Usage: python3 tools/compare_oracle.py <sfDir> <verifyOut>
 
+Exits 1 when any oracled query FAILs, so the oracle floor can gate a
+script; 0 otherwise.
+
 Mirrors the driver's t2 check: for each query with an entry in
 oracle_sql.json, run the SQL in DuckDB over views named after the
 parquet tables, then compare against the Spark parquet dump with
@@ -79,7 +82,8 @@ def main():
         except Exception as e:  # noqa: BLE001
             print(f"ROWS {name}: unreadable ({e})")
     print(f"\n{n_ok} ok, {n_bad} failed, {len(oracle)} oracled")
+    return 1 if n_bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
